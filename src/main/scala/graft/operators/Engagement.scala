@@ -184,6 +184,7 @@ object Engagement {
         Det.detRound(Det.moneySum(col("o_totalprice")), 2).as("total_spent"),
         count(lit(1)).as("num_orders"))
 
+    // Spark's AQE can swap eng/spend codegen stage ids between runs: 4 recompiles.
     val joined = eng
       .join(spend, Seq("user_id"), "left")
       .na.fill(0.0, Seq("total_spent"))

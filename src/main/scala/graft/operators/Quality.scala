@@ -52,6 +52,7 @@ object Quality {
     }
     def nullsOf(f: StructField): Column =
       sum(when(col(f.name).isNull, 1L).otherwise(0L)).as(s"${f.name}__nulls")
+    // Spark's RewriteDistinctAggregates orders distinct groups per run: ~6 recompiles.
     def distinctOf(f: StructField): Column =
       if (exactDistinct) countDistinct(col(f.name)).as(s"${f.name}__nd")
       else

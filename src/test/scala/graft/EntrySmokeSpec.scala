@@ -23,4 +23,28 @@ class EntrySmokeSpec extends AnyFunSuite {
       assert(df.count() >= 0, s"$name failed to execute")
     }
   }
+
+  test("a warm re-run of a working set above Spark's default codegen cache compiles nothing") {
+    // These reference-pipeline queries generate ~175 distinct classes,
+    // past Spark's default 100-entry codegen cache: cycled through an LRU
+    // of 100 they recompile on every pass. The cache is sized once, from
+    // whichever session first touches CodeGenerator, so this also fails
+    // when that session was not GraftSession's. engagement_vs_spend is
+    // left out: AQE numbers its codegen stages in completion order, and
+    // the number is part of the generated source, so a re-run can miss.
+    import org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME
+    val pipeline = Seq("rfm", "revenue_cube", "sessionize", "revenue_by_region",
+      "cohort_retention", "also_bought_pairs", "top_spenders", "revenue_by_category",
+      "product_popularity", "revenue_by_day")
+    def pass(): Long = {
+      val c0 = METRIC_COMPILATION_TIME.getCount
+      pipeline.foreach { q =>
+        SparkEntry.queries(q)(spark, TestSpark.Sf).write.mode("overwrite").format("noop").save()
+      }
+      METRIC_COMPILATION_TIME.getCount - c0
+    }
+    pass()
+    val recompiled = pass()
+    assert(recompiled == 0, s"warm pass recompiled $recompiled generated classes")
+  }
 }
