@@ -85,9 +85,9 @@ object GraftSession {
   *
   * Scale-adaptive by construction, not a local-mode constant: the fan
   * fires only when the source's TOTAL bytes are at most
-  * `spark.graft.scanFan.maxBytes` (default 256 MiB ≈ two default scan
-  * splits), i.e. exactly when (a) the scan cannot feed the cores by
-  * splitting and (b) the exchange is bounded-cheap. Any production-sized
+  * [[Scans.DefaultMaxFanBytes]] (256 MiB ≈ two default scan splits),
+  * i.e. exactly when (a) the scan cannot feed the cores by splitting
+  * and (b) the exchange is bounded-cheap. Any production-sized
   * input skips it and the plan is byte-identical to before. Filters
   * still push through the Repartition to the parquet reader
   * (PushPredicateThroughNonJoin) and column pruning applies below it,
@@ -102,7 +102,7 @@ object Scans {
     * reason), and the stat is one FS call per query CONSTRUCTION — the
     * same cost class as the sourceStamp walk Tables.table already pays.
     */
-  private def bytesOf(spark: SparkSession, path: String): Long =
+  private[graft] def bytesOf(spark: SparkSession, path: String): Long =
     try {
       val p  = new org.apache.hadoop.fs.Path(path)
       val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -114,35 +114,17 @@ object Scans {
 
   private[graft] val DefaultMaxFanBytes: Long = 256L * 1024 * 1024
 
-  def fanSmall(spark: SparkSession, df: DataFrame, path: String): DataFrame = {
-    val enabled =
-      try spark.conf.getOption("spark.graft.scanFan.enabled").forall(_.toLowerCase != "false")
-      catch { case _: Throwable => true }
-    if (!enabled) return df
-    val maxBytes =
-      try spark.conf.getOption("spark.graft.scanFan.maxBytes").map(_.toLong)
-        .getOrElse(DefaultMaxFanBytes)
-      catch { case _: Throwable => DefaultMaxFanBytes }
+  /** Fan `df`, a scan of `table` under `dir`, out to the session's
+    * parallelism when the table is small. The path comes from the
+    * table-layout single source of truth ([[Tables.pathOf]]): a
+    * hand-built path would silently disable the fan (bytesOf = 0) if
+    * the layout ever changed.
+    */
+  def fanSmall(spark: SparkSession, df: DataFrame, dir: String, table: String): DataFrame = {
     val target = spark.sparkContext.defaultParallelism
-    val b      = bytesOf(spark, path)
-    if (target > 1 && b > 0 && b <= maxBytes) df.repartition(target) else df
+    val b      = bytesOf(spark, Tables.pathOf(dir, table))
+    if (target > 1 && b > 0 && b <= DefaultMaxFanBytes) df.repartition(target) else df
   }
-
-  /** Overload deriving the source path from the table-layout single
-    * source of truth ([[Tables.pathOf]]) — call sites hand-building
-    * `s"$dir/name.parquet"` would silently disable the fan (bytesOf = 0)
-    * if the layout ever changed.
-    */
-  def fanSmall(spark: SparkSession, df: DataFrame, dir: String, table: String): DataFrame =
-    fanSmall(spark, df, Tables.pathOf(dir, table))
-
-  /** Measured bytes under a path (Hadoop FS walk; 0 on error) — exposed
-    * for other bounded, size-gated optimizations (e.g. the streaming
-    * ingest's in-run index cache), so every such gate shares one
-    * measurement convention.
-    */
-  private[graft] def bytesUnder(spark: SparkSession, path: String): Long =
-    bytesOf(spark, path)
 }
 
 /** Loaders for the driver testdata tables ({sfDir}/{name}.parquet).

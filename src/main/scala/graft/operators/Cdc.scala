@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.{Det, QueryDef, Tables}
+import graft.sources.StoredIndex
 
 /** Content-defined chunking (CDC) over the document corpus — the
   * storage-system dedup primitive (Rabin-style rolling-window
@@ -339,13 +340,6 @@ object Cdc {
        |ORDER BY span_words DESC, doc_a, doc_b, start_a
        |LIMIT $TopK""".stripMargin
 
-  /** Build-once stored chunk store for [[cdcIncremental]] — the
-    * "already ingested" side of a content-addressed store really IS a
-    * materialized table (distinct chunk hashes + char counts of the
-    * base 80% of the corpus), built under DerivedCache exactly like
-    * Dedup.baseIndexDir: keyed by source, fingerprinted by corpus row
-    * count, rebuilt only when missing.
-    */
   /** Distinct-chunk content of a doc frame — the CAS-store kernel
     * shared by the base store, appended segments and the compaction
     * spec pin. `n_occ` is the reference count a real content-addressed
@@ -359,40 +353,25 @@ object Cdc {
         max(col("chunk_len")).as("chunk_len"),
         count(lit(1)).as("n_occ"))
 
-  private[operators] def cdcStoreDir(spark: SparkSession, dir: String): String =
-    // v=2 = bucketed by chunk_md5 (the probe key); fingerprint is
-    // parameter-only — the source stamp DerivedCache appends already
-    // invalidates on regenerated data, and rows=N cost a count() job;
-    // v=3 = the n_occ refcount column (cdcChunkSet)
-    graft.sources.DerivedCache.dir(dir, "cdc-store", "v=3") { out =>
-      graft.sources.Bucketing.writeBucketedExternal(
-        cdcChunkSet(
-          Tables.documents(spark, dir).filter(col("doc_id") % 10 < 8)),
-        s"$out/chunks", Seq("chunk_md5"))
-      ()
-    }
-
-  /** An APPENDED CDC store segment — the batch-1 (`doc_id % 10 == 8`)
-    * distinct-chunk set as its own bucketed table, the cheapest of the
-    * three LSM index tiers (no cap semantics at all: a chunk set is
-    * df-free). Until compaction a chunk present in base AND segment is
-    * stored twice — the accounting [[cdcStoreCompact]] surfaces — but
-    * probes stay exact: presence = presence in ANY tier.
+  /** The stored chunk store for [[cdcIncremental]] and its LSM
+    * lifecycle — the "already ingested" side of a content-addressed
+    * store really IS a materialized table: distinct chunks bucketed by
+    * chunk_md5 (the probe key), merged at compaction by
+    * [[mergedChunkSets]]. The cheapest of the three index tiers: a chunk
+    * set has no cap semantics, so a chunk stored in base AND segment is
+    * merely stored twice until compaction — the accounting
+    * [[cdcStoreCompact]] surfaces — while probes stay exact (presence =
+    * presence in ANY tier). Base v=2 = bucketed, v=3 = the n_occ
+    * refcount column.
     */
-  private def cdcSegDir(spark: SparkSession, dir: String): String =
-    graft.sources.DerivedCache.dir(dir, "cdc-seg", "seg=8;v=1") { out =>
-      graft.sources.Bucketing.writeBucketedExternal(
-        cdcChunkSet(
-          Tables.documents(spark, dir).filter(col("doc_id") % 10 === 8)),
-        s"$out/chunks", Seq("chunk_md5"))
-      ()
-    }
-
-  private val CdcStoreDdl = "chunk_md5 STRING, chunk_len BIGINT, n_occ BIGINT"
-
-  private[operators] def cdcStoreTable(spark: SparkSession, d: String): DataFrame =
-    graft.sources.Bucketing.readBucketed(
-      spark, s"$d/chunks", Seq("chunk_md5"), CdcStoreDdl)
+  private[graft] val CdcTier = StoredIndex.Tier(
+    "cdc", "", "cdc-store" -> 3, "cdc-seg" -> 1, "cdc-compact" -> 1,
+    Seq(StoredIndex.Table(
+      "chunks", Seq("chunk_md5"), "chunk_md5 STRING, chunk_len BIGINT, n_occ BIGINT",
+      StoredIndex.Merge(
+        mergedChunkSets, col("in_base"), col("in_seg"),
+        col("in_base") && col("in_seg")))),
+    docs => Seq(cdcChunkSet(docs)))
 
   /** Incremental content-addressed ingest: chunk TODAY'S batch (the
     * delta 20% of the corpus), probe the STORED chunk store, and report
@@ -400,7 +379,7 @@ object Cdc {
     * chunks, logical bytes ingested vs physical bytes written, and the
     * resulting dedup ratio. Per-batch cost is ∝ delta size: only delta
     * text is chunked; the base never re-chunks (it is a parquet table
-    * from cdcStoreDir). The store-side probe is a hash equi-join — at
+    * from [[CdcTier]]). The store-side probe is a hash equi-join — at
     * 100 TB the store lives bucketed by chunk_md5 so the probe shuffles
     * only the delta (the sources/Bucketing layout; plain parquet
     * here). Oracle: DuckDB recomputes the base chunk set from the same
@@ -408,9 +387,8 @@ object Cdc {
     * table's content.
     */
   def cdcIncremental(spark: SparkSession, dir: String): DataFrame = {
-    val store = cdcStoreTable(spark, cdcStoreDir(spark, dir))
-    val perHash = chunkFrame(
-        Tables.documents(spark, dir).filter(col("doc_id") % 10 >= 8))
+    val store = StoredIndex.tables(spark, dir, CdcTier, StoredIndex.Base).head
+    val perHash = chunkFrame(StoredIndex.deltaDocs(Tables.documents(spark, dir)))
       .groupBy(col("chunk_md5"))
       .agg(count(lit(1)).as("n"), max(col("chunk_len")).as("clen"))
     // left-outer SHUFFLE_HASH building the DELTA side: the bucketed
@@ -465,7 +443,7 @@ object Cdc {
     * live segment tier: batch 2 (`doc_id % 10 == 9`) is chunked fresh
     * and checked against BOTH the base store (`% 10 < 8`) and the
     * previously-ingested batch 1 (`% 10 == 8`, stored as its own
-    * bucketed segment by [[cdcSegDir]]). Without the segment, a chunk
+    * bucketed segment of [[CdcTier]]). Without the segment, a chunk
     * first seen yesterday is "new" again today and the store writes it
     * twice — the same staleness hole the substring/minhash append
     * queries close, here at chunk grain. `dup_in_base` / `dup_in_seg`
@@ -478,10 +456,9 @@ object Cdc {
     * ∝ batch, segments bounded by compaction.
     */
   def cdcStoreAppend(spark: SparkSession, dir: String): DataFrame = {
-    val base = cdcStoreTable(spark, cdcStoreDir(spark, dir))
-    val seg  = cdcStoreTable(spark, cdcSegDir(spark, dir))
-    val perHash = chunkFrame(
-        Tables.documents(spark, dir).filter(col("doc_id") % 10 === 9))
+    val base = StoredIndex.tables(spark, dir, CdcTier, StoredIndex.Base).head
+    val seg  = StoredIndex.tables(spark, dir, CdcTier, StoredIndex.Seg).head
+    val perHash = chunkFrame(StoredIndex.batchDocs(Tables.documents(spark, dir)))
       .groupBy(col("chunk_md5"))
       .agg(count(lit(1)).as("n"), max(col("chunk_len")).as("clen"))
     perHash
@@ -563,20 +540,9 @@ object Cdc {
         col("la").isNotNull.as("in_base"),
         col("lb").isNotNull.as("in_seg"))
 
-  private[graft] def cdcCompactDir(spark: SparkSession, dir: String): String =
-    graft.sources.DerivedCache.dir(dir, "cdc-compact", "seg=8;v=1") { out =>
-      graft.sources.Bucketing.writeBucketedExternal(
-        mergedChunkSets(
-          cdcStoreTable(spark, cdcStoreDir(spark, dir)),
-          cdcStoreTable(spark, cdcSegDir(spark, dir)))
-          .select(col("chunk_md5"), col("chunk_len"), col("n_occ")),
-        s"$out/chunks", Seq("chunk_md5"), aligned = true)
-      ()
-    }
-
   /** Compact the base store + the batch-1 segment into one
     * content-addressed store (stored bucketed, build-once, zero-shuffle
-    * write — see [[cdcCompactDir]]) and report what the merge
+    * write — see [[StoredIndex]]) and report what the merge
     * reclaimed: per tier (base_only / in_both / seg_only), distinct
     * chunks, stored bytes, and ingested occurrences. `in_both` is the
     * LSM double-store the segmented layout pays until compaction —
@@ -585,10 +551,8 @@ object Cdc {
     * (probe results never change; presence is presence in any tier).
     */
   def cdcStoreCompact(spark: SparkSession, dir: String): DataFrame = {
-    cdcCompactDir(spark, dir) // build-once side effect (the layout)
-    mergedChunkSets(
-        cdcStoreTable(spark, cdcStoreDir(spark, dir)),
-        cdcStoreTable(spark, cdcSegDir(spark, dir)))
+    StoredIndex.dir(spark, dir, CdcTier, StoredIndex.Compact) // build-once side effect
+    StoredIndex.merged(spark, dir, CdcTier)
       .select(
         when(col("in_base") && col("in_seg"), "in_both")
           .when(col("in_base"), "base_only")
@@ -1236,17 +1200,6 @@ object Cdc {
         explode(expr("if(size(hs) >= 0, hs, slice(hs, 1, 0))")).as("h"))
   }
 
-  /** Build-once stored window-hash posting index for
-    * [[dedupSubstringIncremental]] — the substring tier's ingest form.
-    * Base = the 80% split (doc_id % 10 < 8, the same deterministic
-    * stand-in the minhash and CDC incremental paths use); the index is
-    * the inverted lists (window hash → sorted base doc ids; posting
-    * LISTS df-capped for the detector's pair expansion, but every
-    * window keeps a presence row — see [[substrPostings]]). Built under
-    * DerivedCache once per corpus stamp as a BUCKETED table
-    * (sources/Bucketing, key h) so a delta probe shuffles only the
-    * delta.
-    */
   /** The posting lists (h, base_docs) of a base frame — the index
     * CONTENT, factored so Round13AdditionsSpec can build one over
     * planted fixtures without the DerivedCache layer. Posting LISTS are
@@ -1270,62 +1223,31 @@ object Cdc {
         when(size(col("ds")) <= SubstrDfCap, col("ds"))
           .otherwise(array().cast("array<bigint>")).as("base_docs"))
 
-  private def substrIndexDir(spark: SparkSession, dir: String): String =
-    // fingerprint = parameters only (DerivedCache appends the source
-    // stamp — the old rows=N component cost a count() job at plan
-    // construction); v=2 = the BUCKETED layout
-    graft.sources.DerivedCache.dir(
-      dir, "substr-index", s"w=$SubstrW;df=$SubstrDfCap;v=2") { out =>
-      // bucketed by the probe key: every delta probe is an equi-join on
-      // h, and a plain-parquet index re-shuffles the CORPUS-sized side
-      // on every batch — the incremental tier's cost-∝-delta claim
-      // inverts at 100 TB (round-13 verdict task 1)
-      graft.sources.Bucketing.writeBucketedExternal(
-        substrPostings(
-          Tables.documents(spark, dir).filter(col("doc_id") % 10 < 8)),
-        s"$out/postings", Seq("h"))
-      ()
-    }
-
-  /** The stored posting index as a bucketed-table scan — hash-clustered
-    * by h, so probe joins exchange only the delta side.
+  /** The stored window-hash posting index for
+    * [[dedupSubstringIncremental]] and its LSM lifecycle — the substring
+    * tier's ingest form: inverted lists (window hash → sorted doc ids,
+    * see [[substrPostings]]) bucketed by h (the probe key), so a delta
+    * probe shuffles only the delta — a plain-parquet index re-shuffles
+    * the CORPUS-sized side on every batch, and the incremental tier's
+    * cost-∝-delta claim inverts at 100 TB. When a probed batch lands,
+    * its postings become their OWN bucketed segment (one rolling-hash
+    * pass over the batch) instead of a corpus re-scan; join distributes
+    * over union, so each segment is probed exchange-free and only the
+    * per-doc aggregation merges the tiers. Compaction folds the STORED
+    * postings with the capped merge at [[SubstrDfCap]]. Base v=2 = the
+    * bucketed layout.
     */
+  private[graft] val SubstrTier = StoredIndex.Tier(
+    "substring", s"w=$SubstrW;df=$SubstrDfCap",
+    "substr-index" -> 2, "substr-seg" -> 1, "substr-compact" -> 2,
+    Seq(StoredIndex.Table(
+      "postings", Seq("h"), "h BIGINT, base_docs ARRAY<BIGINT>",
+      StoredIndex.capped(Seq("h"), SubstrDfCap))),
+    docs => Seq(substrPostings(docs)))
+
+  /** The stored base posting index as a bucketed-table scan. */
   private[operators] def substrIndex(spark: SparkSession, dir: String): DataFrame =
-    graft.sources.Bucketing.readBucketed(
-      spark, s"${substrIndexDir(spark, dir)}/postings", Seq("h"),
-      "h BIGINT, base_docs ARRAY<BIGINT>")
-
-  /** An APPENDED index segment — the LSM shape of index maintenance.
-    * When a probed batch lands, rebuilding the base index costs a
-    * corpus re-scan (what the incremental tier exists to avoid); instead
-    * the batch's postings are written as their OWN bucketed segment
-    * (delta-sized build: one rolling-hash pass over the batch, one
-    * delta-sized shuffle into the bucket layout) and later probes read
-    * base + segments. Join distributes over union, so each segment is
-    * probed exchange-free on its own hash-clustered scan and only the
-    * per-doc aggregation merges the tiers — never a corpus-sized
-    * re-shuffle. Segments fold into the base at compaction
-    * ([[mergedPostings]]), which is the amortized corpus-sized op, run
-    * on the STORED postings (index-sized), not the corpus text.
-    *
-    * The shipped segment is batch 1 = the `doc_id % 10 == 8` docs (the
-    * deterministic stand-in for "yesterday's ingest"), leaving
-    * `% 10 == 9` as today's probe batch.
-    */
-  private def substrSegDir(spark: SparkSession, dir: String): String =
-    graft.sources.DerivedCache.dir(
-      dir, "substr-seg", s"w=$SubstrW;df=$SubstrDfCap;seg=8;v=1") { out =>
-      graft.sources.Bucketing.writeBucketedExternal(
-        substrPostings(
-          Tables.documents(spark, dir).filter(col("doc_id") % 10 === 8)),
-        s"$out/postings", Seq("h"))
-      ()
-    }
-
-  private def substrSeg(spark: SparkSession, dir: String): DataFrame =
-    graft.sources.Bucketing.readBucketed(
-      spark, s"${substrSegDir(spark, dir)}/postings", Seq("h"),
-      "h BIGINT, base_docs ARRAY<BIGINT>")
+    StoredIndex.tables(spark, dir, SubstrTier, StoredIndex.Base).head
 
   /** Incremental substring dedup — the ingest form of the strongest
     * exact detector (round-12 gap: the minhash and CDC tiers had
@@ -1348,8 +1270,7 @@ object Cdc {
     */
   def dedupSubstringIncremental(spark: SparkSession, dir: String): DataFrame =
     dedupSubstringIncrementalOf(
-      Tables.documents(spark, dir).filter(col("doc_id") % 10 >= 8),
-      substrIndex(spark, dir))
+      StoredIndex.deltaDocs(Tables.documents(spark, dir)), substrIndex(spark, dir))
 
   /** The probe kernel against an arbitrary delta frame + posting index,
     * factored for Round13AdditionsSpec's planted fixtures.
@@ -1419,8 +1340,7 @@ object Cdc {
     */
   def dedupSubstringStripIncremental(spark: SparkSession, dir: String): DataFrame =
     dedupSubstringStripIncrementalOf(
-      Tables.documents(spark, dir).filter(col("doc_id") % 10 >= 8),
-      substrIndex(spark, dir))
+      StoredIndex.deltaDocs(Tables.documents(spark, dir)), substrIndex(spark, dir))
 
   private[graft] def dedupSubstringStripIncrementalOf(
       delta: DataFrame, idx: DataFrame): DataFrame = {
@@ -1549,7 +1469,7 @@ object Cdc {
     * index APPEND real: batch 2 (`doc_id % 10 == 9`) dedupes against
     * both the original base (`% 10 < 8`) and the previously-ingested
     * batch 1 (`% 10 == 8`, stored as its own bucketed segment by
-    * [[substrSegDir]]). Without segments, consecutive batches never see
+    * [[SubstrTier]]). Without segments, consecutive batches never see
     * each other until a full index rebuild — exactly the staleness hole
     * a 100 TB ingest pipeline cannot afford. `dup_tier` names where the
     * best match lives ("base" / "seg1"), making cross-batch detection
@@ -1568,16 +1488,8 @@ object Cdc {
     */
   def dedupSubstringIndexAppend(spark: SparkSession, dir: String): DataFrame =
     dedupSubstringIndexAppendOf(
-      Tables.documents(spark, dir).filter(col("doc_id") % 10 === 9),
-      Seq("base" -> substrIndex(spark, dir), "seg1" -> substrSeg(spark, dir)))
-
-  /** The stored base + batch-1 segment pair the append probe reads —
-    * factored so the streaming ingest leg (DocStreams) probes the SAME
-    * stored tables per micro-batch.
-    */
-  private[graft] def substrAppendSegs(
-      spark: SparkSession, dir: String): Seq[(String, DataFrame)] =
-    Seq("base" -> substrIndex(spark, dir), "seg1" -> substrSeg(spark, dir))
+      StoredIndex.batchDocs(Tables.documents(spark, dir)),
+      StoredIndex.probeLevels(spark, dir, SubstrTier).map { case (l, ts) => l -> ts.head })
 
   /** The multi-segment probe kernel, factored for planted-fixture specs.
     * Segment doc sets must be disjoint (an LSM invariant: a doc lands in
@@ -1703,47 +1615,6 @@ object Cdc {
        |LEFT JOIN (SELECT * FROM best WHERE rn = 1) b ON d.doc_id = b.delta_id
        |ORDER BY d.doc_id""".stripMargin
 
-  /** Merge two stored posting frames — the compaction kernel, and the
-    * reason the capped-list representation was chosen: it is CLOSED
-    * under merge. An empty list means "boilerplate, df > cap" — and
-    * since global df ≥ any segment df, empty stays empty; two real
-    * lists concat (segment doc sets are disjoint) and re-cap. So
-    * compaction runs on the STORED index segments alone — index-sized,
-    * never a corpus-text re-scan — and is associative, exactly what an
-    * LSM maintenance schedule needs. The full-outer join runs
-    * exchange-free when both sides are bucketed scans on h.
-    */
-  private[graft] def mergedPostings(a: DataFrame, b: DataFrame): DataFrame =
-    a.select(col("h"), col("base_docs").as("da"))
-      .join(
-        b.select(col("h"), col("base_docs").as("db")), Seq("h"), "full_outer")
-      .select(
-        col("h"), col("da"), col("db"),
-        when(col("da").isNull, col("db"))
-          .when(col("db").isNull, col("da"))
-          .when(
-            size(col("da")) === 0 || size(col("db")) === 0 ||
-              size(col("da")) + size(col("db")) > SubstrDfCap,
-            array().cast("array<bigint>"))
-          .otherwise(sort_array(concat(col("da"), col("db"))))
-          .as("base_docs"))
-
-  private[graft] def substrCompactDir(spark: SparkSession, dir: String): String =
-    graft.sources.DerivedCache.dir(
-      dir, "substr-compact", s"w=$SubstrW;df=$SubstrDfCap;seg=8;v=2") { out =>
-      // aligned: the full-outer merge join of two bucketed scans on h
-      // is exchange-free and leaves the frame hash-clustered on h at
-      // bucket count — the default repartition would re-shuffle the
-      // whole index against the tier's own shuffle-only-the-delta
-      // discipline (round-14 verdict, "what's wrong" #1);
-      // Round15AdditionsSpec asserts the write plans with no Exchange
-      graft.sources.Bucketing.writeBucketedExternal(
-        mergedPostings(substrIndex(spark, dir), substrSeg(spark, dir))
-          .select(col("h"), col("base_docs")),
-        s"$out/postings", Seq("h"), aligned = true)
-      ()
-    }
-
   /** Compact the base index + the batch-1 segment into one globally
     * df-capped index (stored bucketed, build-once), and report what the
     * merge changed: per resulting tier (unique / cold / boiler by the
@@ -1754,31 +1625,11 @@ object Cdc {
     * Those windows' posting lists would feed the detector's pair
     * expansion on a segmented read; compaction reclassifies them, which
     * is why an LSM index must compact rather than accrete forever.
-    * Round14AdditionsSpec pins the stored compacted layout to be
+    * StoredIndexSpec pins the stored compacted layout to be
     * row-identical to a from-scratch build over base ∪ batch-1 docs.
     */
-  def dedupSubstringIndexCompact(spark: SparkSession, dir: String): DataFrame = {
-    substrCompactDir(spark, dir) // build-once side effect (the layout)
-    val m = mergedPostings(substrIndex(spark, dir), substrSeg(spark, dir))
-    val inBoth = col("da").isNotNull && col("db").isNotNull
-    val crosser = col("da").isNotNull && col("db").isNotNull &&
-      size(col("da")) > 0 && size(col("db")) > 0 &&
-      size(col("da")) + size(col("db")) > SubstrDfCap
-    m.select(
-        when(size(col("base_docs")) === 0, "boiler")
-          .when(size(col("base_docs")) === 1, "unique")
-          .otherwise("cold").as("tier"),
-        size(col("base_docs")).cast("long").as("entries"),
-        when(inBoth, 1L).otherwise(0L).as("in_both"),
-        when(crosser, 1L).otherwise(0L).as("crosser"))
-      .groupBy(col("tier"))
-      .agg(
-        count(lit(1)).as("n_windows"),
-        sum(col("entries")).as("n_entries"),
-        sum(col("in_both")).as("n_in_both"),
-        sum(col("crosser")).as("n_cap_crossers"))
-      .orderBy(col("tier"))
-  }
+  def dedupSubstringIndexCompact(spark: SparkSession, dir: String): DataFrame =
+    StoredIndex.cappedCompaction(spark, dir, SubstrTier, "boiler", "n_windows")
 
   private val dedupSubstringIndexCompactSql =
     s"""WITH t AS (
@@ -1842,37 +1693,14 @@ object Cdc {
     * quality silently degrades until compaction reclassifies them);
     * CDC = chunks stored in both tiers (bytes stored twice until the
     * merge). The advisory is `compact_now` when crossers exist or the
-    * segment outgrows [[MaintSegRatio]]; Round15AdditionsSpec plants a
+    * segment outgrows [[MaintSegRatio]]; StoredIndexSpec plants a
     * crosser-heavy corpus and asserts the verdict flips.
     */
   def indexMaintenancePlan(spark: SparkSession, dir: String): DataFrame = {
     graft.functions.GraftFunctions.register(spark)
-    val subCross = col("da").isNotNull && col("db").isNotNull &&
-      size(col("da")) > 0 && size(col("db")) > 0 &&
-      size(col("da")) + size(col("db")) > SubstrDfCap
-    val sub = mergedPostings(substrIndex(spark, dir), substrSeg(spark, dir))
-      .agg(
-        count(when(col("da").isNotNull, 1)).as("base_keys"),
-        count(when(col("db").isNotNull, 1)).as("seg_keys"),
-        sum(when(subCross, 1L).otherwise(0L)).as("n_crossers"))
-      .select(
-        lit("substring").as("tier"),
-        col("base_keys"), col("seg_keys"),
-        coalesce(col("n_crossers"), lit(0L)).as("n_crossers"))
-    val mh = Dedup.minhashMaintenanceRow(spark, dir)
-    val cdcRow = mergedChunkSets(
-        cdcStoreTable(spark, cdcStoreDir(spark, dir)),
-        cdcStoreTable(spark, cdcSegDir(spark, dir)))
-      .agg(
-        count(when(col("in_base"), 1)).as("base_keys"),
-        count(when(col("in_seg"), 1)).as("seg_keys"),
-        sum(when(col("in_base") && col("in_seg"), 1L).otherwise(0L))
-          .as("n_crossers"))
-      .select(
-        lit("cdc").as("tier"),
-        col("base_keys"), col("seg_keys"),
-        coalesce(col("n_crossers"), lit(0L)).as("n_crossers"))
-    sub.unionByName(mh).unionByName(cdcRow)
+    Seq(SubstrTier, Dedup.MinhashTier, CdcTier)
+      .map(StoredIndex.maintenanceRow(spark, dir, _))
+      .reduce(_ unionByName _)
       .withColumn(
         "seg_ratio",
         when(col("base_keys") === 0, lit(null).cast("double"))

@@ -165,7 +165,7 @@ object Commerce {
     // map-side collapse (the pair is near-unique), so on a single-split
     // source the whole decimal partial-agg pass runs on one core
     val pre = graft.Scans
-      .fanSmall(spark, Tables.lineitem(spark, dir), s"$dir/lineitem.parquet")
+      .fanSmall(spark, Tables.lineitem(spark, dir), dir, "lineitem")
       .groupBy(col("l_partkey"), col("l_orderkey"))
       .agg(
         sum(col("l_quantity").cast(Det.Money)).as("q_dec"),

@@ -3,6 +3,7 @@ package graft.operators
 import graft.{Det, QueryDef, Tables}
 import graft.Ckpt.CutOps
 import graft.functions.GraftFunctions
+import graft.sources.StoredIndex
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -473,7 +474,7 @@ object Dedup {
           spark,
           Tables.documents(spark, dir)
             .filter(pmod(xxhash64(col("doc_id")), lit(m)) === 0),
-          s"$dir/documents.parquet")
+          dir, "documents")
       }
     // mass under a 1/m doc-hash sample scales ~1/m² (the same relation
     // mMass inverts) — size the expansion stage for the SAMPLED volume
@@ -1595,7 +1596,7 @@ object Dedup {
     * ties to the smaller base id).
     *
     * The base's signatures+bands ARE a stored table here
-    * ([[baseIndexDir]], built once per source, exactly like the
+    * ([[MinhashTier]], built once per source, exactly like the
     * snapshot side of merge_upsert), so per-batch cost is ∝ delta
     * size: only delta sigs are computed fresh, the band join is
     * delta-bands × matching base buckets (capped at
@@ -1603,12 +1604,6 @@ object Dedup {
     * Reference analog: the reference recomputes full-corpus stats per
     * run (spark_analysis.py:42–143); incremental arrival is the 100 TB
     * re-expression of that daily batch.
-    */
-  /** Build-once stored base index (signatures + capped band buckets)
-    * for [[dedupIncremental]] — the "existing corpus" side really IS a
-    * materialized table here, so a repeated ingest pays only the delta:
-    * delta signing + index probe, never a base re-sign. Keyed by source
-    * dir, rebuilt only if missing (deterministic content).
     */
   /** Capped band-bucket posting lists of a band frame — the bidx
     * CONTENT, one kernel shared by the base index, the appended
@@ -1620,7 +1615,7 @@ object Dedup {
     * what makes the representation CLOSED under merge. Without it,
     * "bucket absent" is ambiguous between "no docs" and "hot, dropped",
     * and folding stored segments could resurrect a bucket the global
-    * build would cap ([[mergedBandBuckets]]'s closure argument).
+    * build would cap (the closure argument of StoredIndex.capped).
     */
   private[graft] def minhashBidxOf(bands: DataFrame): DataFrame =
     bands
@@ -1631,65 +1626,34 @@ object Dedup {
         when(size(col("ds")) <= IncrBucketCap, col("ds"))
           .otherwise(array().cast("array<bigint>")).as("base_docs"))
 
-  private def baseIndexDir(spark: SparkSession, dir: String, k: Int): String =
-    // fingerprint = sketch parameters (DerivedCache appends the source
-    // stamp, which covers regenerated testdata — the old rows=N
-    // component cost a count() job at plan construction); v=2 = the
-    // BUCKETED layout: both index tables are hash-clustered by their
-    // probe key so every delta probe exchanges only the delta, never
-    // the corpus-sized index (round-13 verdict task 1); v=3 = hot
-    // buckets keep presence rows (see minhashBidxOf)
-    graft.sources.DerivedCache.dir(
-      dir, "dedup-base", s"k=$k;cap=$IncrBucketCap;v=3") { out =>
-      val (sigs, bands) = minhashBandsOf(
-        Tables.documents(spark, dir).filter((col("doc_id") % 10) < 8), k)
-      graft.sources.Bucketing.writeBucketedExternal(
-        sigs, s"$out/sigs", Seq("doc_id"))
-      graft.sources.Bucketing.writeBucketedExternal(
-        minhashBidxOf(bands), s"$out/bidx", Seq("band", "bh"))
-      sigs.unpersist()
-      ()
-    }
-
-  /** An APPENDED minhash index segment — the LSM lifecycle the
-    * substring tier got in round 14, now on the production ingest
-    * index: when a probed batch lands, re-signing the base corpus to
-    * fold it in is exactly the cost [[dedupIncremental]] exists to
-    * avoid, so the batch's signatures and band buckets are written as
-    * their OWN bucketed segment (batch-sized build: one signing pass,
-    * one batch-sized shuffle into each bucket layout) and later probes
-    * read base + segments. The shipped segment is batch 1 = the
-    * `doc_id % 10 == 8` docs ("yesterday's ingest"), leaving
-    * `% 10 == 9` as today's probe batch — the same split the substring
-    * tier's segment uses, so the two LSM tiers describe the same
-    * ingest story.
+  /** The stored minhash index for [[dedupIncremental]] and its LSM
+    * lifecycle: signatures bucketed by doc_id (the verify join) and
+    * capped band buckets bucketed by (band, bh) (the candidate join),
+    * so every delta probe exchanges only the delta, never the
+    * corpus-sized index. The "existing corpus" side really IS a
+    * materialized table, so a repeated ingest pays only the delta —
+    * delta signing + index probe, never a base re-sign — and a landed
+    * batch is signed once into its own segment (the substring tier's
+    * lifecycle, on the production ingest index). Compaction unions the
+    * signatures and folds the buckets with the capped merge at
+    * [[IncrBucketCap]]. Base v=2 = bucketed, v=3 = hot buckets keep
+    * presence rows (see minhashBidxOf).
     */
-  private def minhashSegDir(spark: SparkSession, dir: String): String =
-    graft.sources.DerivedCache.dir(
-      dir, "minhash-seg", s"k=$MinhashK;cap=$IncrBucketCap;seg=8;v=1") { out =>
-      val (sigs, bands) = minhashBandsOf(
-        Tables.documents(spark, dir).filter(col("doc_id") % 10 === 8),
-        MinhashK)
-      graft.sources.Bucketing.writeBucketedExternal(
-        sigs, s"$out/sigs", Seq("doc_id"))
-      graft.sources.Bucketing.writeBucketedExternal(
-        minhashBidxOf(bands), s"$out/bidx", Seq("band", "bh"))
-      sigs.unpersist()
-      ()
-    }
+  private[graft] val MinhashTier = StoredIndex.Tier(
+    "minhash", s"k=$MinhashK;cap=$IncrBucketCap",
+    "dedup-base" -> 3, "minhash-seg" -> 1, "minhash-compact" -> 1,
+    Seq(
+      StoredIndex.Table(
+        "sigs", Seq("doc_id"), "doc_id BIGINT, sig ARRAY<BIGINT>", StoredIndex.union),
+      StoredIndex.Table(
+        "bidx", Seq("band", "bh"), "band INT, bh STRING, base_docs ARRAY<BIGINT>",
+        StoredIndex.capped(Seq("band", "bh"), IncrBucketCap))),
+    docs => {
+      val (sigs, bands) = minhashBandsOf(docs, MinhashK)
+      Seq(sigs, minhashBidxOf(bands))
+    })
 
-  /** The two bucketed tables of a stored minhash index tier (sigs keyed
-    * by doc_id for the verify join, band buckets keyed by (band, bh)
-    * for the candidate join), schema-pinned so re-attach never infers.
-    */
-  private def minhashIdxTables(
-      spark: SparkSession, idxDir: String): (DataFrame, DataFrame) = (
-    graft.sources.Bucketing.readBucketed(
-      spark, s"$idxDir/sigs", Seq("doc_id"),
-      "doc_id BIGINT, sig ARRAY<BIGINT>"),
-    graft.sources.Bucketing.readBucketed(
-      spark, s"$idxDir/bidx", Seq("band", "bh"),
-      "band INT, bh STRING, base_docs ARRAY<BIGINT>"))
+  private def sigsAndBidx(ts: Seq[DataFrame]): (DataFrame, DataFrame) = (ts(0), ts(1))
 
   /** Previous invocation's persisted delta signatures: the persist is
     * only useful while that query's plan executes (deltaBands + the est
@@ -1702,14 +1666,8 @@ object Dedup {
   private val lastDeltaSigs =
     new java.util.concurrent.atomic.AtomicReference[DataFrame](null)
 
-  /** The stored-index dir for the incremental path (shared with the
-    * streaming ingest registration in DocStreams).
-    */
-  private[graft] def incrementalIndexDir(spark: SparkSession, dir: String): String =
-    baseIndexDir(spark, dir, MinhashK)
-
   /** Sign `delta` docs (doc_id, text) and probe the stored base index
-    * at `idx`: one verdict row per delta doc, schema (doc_id, n_dups,
+    * tables `base` (sigs, bidx): one verdict row per delta doc, schema (doc_id, n_dups,
     * dup_of, est, keep), unordered. Verdicts are PER-DELTA-ROW
     * independent — any partition of the delta into batches unions to
     * the identical table — which is what lets the streaming ingest path
@@ -1737,23 +1695,17 @@ object Dedup {
   private val ShuffleHashDeltaRowsMax =
     (1L << 18) * graft.sources.Bucketing.IndexBuckets
 
-  /** The two bucketed base tables of the incremental index, factored so
-    * a caller probing SEVERAL batches against the same base (the
-    * streaming ingest) can build — and optionally persist — them once
-    * instead of re-constructing per micro-batch.
+  /** The two bucketed base tables (sigs, bidx) of the incremental
+    * index. A caller probing SEVERAL batches against the same base (the
+    * streaming ingest) reads — and optionally persists — them once
+    * instead of per micro-batch.
     */
-  private[graft] def incrementalBaseTables(
-      spark: SparkSession, idx: String): (DataFrame, DataFrame) = (
-    graft.sources.Bucketing.readBucketed(
-      spark, s"$idx/sigs", Seq("doc_id"), "doc_id BIGINT, sig ARRAY<BIGINT>"),
-    graft.sources.Bucketing.readBucketed(
-      spark, s"$idx/bidx", Seq("band", "bh"),
-      "band INT, bh STRING, base_docs ARRAY<BIGINT>"))
+  private[graft] def incrementalBaseTables(spark: SparkSession, dir: String): (DataFrame, DataFrame) =
+    sigsAndBidx(StoredIndex.tables(spark, dir, MinhashTier, StoredIndex.Base))
 
   private[graft] def incrementalProbe(
-      spark: SparkSession, idx: String, delta: DataFrame,
-      deltaIsSmall: Boolean = false, deltaRows: Long = -1L,
-      base: Option[(DataFrame, DataFrame)] = None)
+      spark: SparkSession, base: (DataFrame, DataFrame), delta: DataFrame,
+      deltaIsSmall: Boolean = false, deltaRows: Long = -1L)
       : (DataFrame, DataFrame) = {
     GraftFunctions.register(spark)
     val k = MinhashK
@@ -1768,7 +1720,7 @@ object Dedup {
       if (deltaIsSmall) broadcast(df)
       else if (deltaRows >= 0 && deltaRows > ShuffleHashDeltaRowsMax) df
       else df.hint("SHUFFLE_HASH")
-    val (baseSigs, baseIdx) = base.getOrElse(incrementalBaseTables(spark, idx))
+    val (baseSigs, baseIdx) = base
     // only the DELTA is signed at probe time — the base comes from the
     // stored index, so this pass costs ∝ today's batch, not the corpus
     val (deltaSigs, deltaBands) = minhashBandsOf(delta, k, persistSigs = !deltaIsSmall)
@@ -1828,14 +1780,12 @@ object Dedup {
   }
 
   def dedupIncremental(spark: SparkSession, dir: String): DataFrame = {
-    val idx = incrementalIndexDir(spark, dir)
+    val base = incrementalBaseTables(spark, dir)
     // the 20% split of the cached corpus count — a job-free estimate
     // for the shuffled-hash size gate
     val est = Tables.cachedCount(spark, dir, "documents") / 5
     val (verdicts, deltaSigs) = incrementalProbe(
-      spark, idx,
-      Tables.documents(spark, dir).filter((col("doc_id") % 10) >= 8),
-      deltaRows = est)
+      spark, base, StoredIndex.deltaDocs(Tables.documents(spark, dir)), deltaRows = est)
     // atomic swap: guarantees no double-unpersist and no lost handle.
     // It does NOT serialize concurrent callers — caller B's swap may
     // unpersist the frame caller A's still-running plan references, in
@@ -1888,10 +1838,10 @@ object Dedup {
     * makes index APPEND real for the production ingest tier: batch 2
     * (`doc_id % 10 == 9`) dedupes against both the original base
     * (`% 10 < 8`) and the previously-ingested batch 1 (`% 10 == 8`,
-    * stored as its own bucketed segment by [[minhashSegDir]]). Without
+    * stored as its own bucketed segment of [[MinhashTier]]). Without
     * segments, consecutive batches never see each other until a full
     * corpus re-sign — the staleness hole [[dedupIncremental]] carries
-    * and Round15AdditionsSpec's planted cross-batch twin proves
+    * and StoredIndexSpec's planted cross-batch twin proves
     * matters. `dup_tier` names where the best match lives
     * ("base" / "seg1").
     *
@@ -1905,10 +1855,9 @@ object Dedup {
     */
   def dedupMinhashIndexAppend(spark: SparkSession, dir: String): DataFrame = {
     GraftFunctions.register(spark) // the index builders sign with graft_minhash_md5
-    val delta = Tables.documents(spark, dir).filter(col("doc_id") % 10 === 9)
-    val segs = Seq(
-      "base" -> minhashIdxTables(spark, incrementalIndexDir(spark, dir)),
-      "seg1" -> minhashIdxTables(spark, minhashSegDir(spark, dir)))
+    val delta = StoredIndex.batchDocs(Tables.documents(spark, dir))
+    val segs = StoredIndex.probeLevels(spark, dir, MinhashTier)
+      .map { case (l, ts) => l -> sigsAndBidx(ts) }
     val (verdicts, deltaSigs) = dedupMinhashIndexAppendOf(
       spark, delta, segs,
       deltaRows = Tables.cachedCount(spark, dir, "documents") / 10)
@@ -2042,80 +1991,9 @@ object Dedup {
        |ORDER BY d.doc_id""".stripMargin
   }
 
-  /** Merge two stored band-bucket frames — the minhash compaction
-    * kernel, closed under merge by the same argument as
-    * Cdc.mergedPostings: an empty list means "hot, > cap" — global
-    * bucket size ≥ any segment's, so empty stays empty; two real lists
-    * concat (segment doc sets are disjoint) and re-cap. Compaction
-    * therefore runs on the STORED index tables alone — index-sized,
-    * never a corpus re-sign — and the full-outer join is exchange-free
-    * when both sides are bucketed scans on (band, bh).
-    */
-  private[graft] def mergedBandBuckets(a: DataFrame, b: DataFrame): DataFrame =
-    a.select(col("band"), col("bh"), col("base_docs").as("da"))
-      .join(
-        b.select(col("band"), col("bh"), col("base_docs").as("db")),
-        Seq("band", "bh"), "full_outer")
-      .select(
-        col("band"), col("bh"), col("da"), col("db"),
-        when(col("da").isNull, col("db"))
-          .when(col("db").isNull, col("da"))
-          .when(
-            size(col("da")) === 0 || size(col("db")) === 0 ||
-              size(col("da")) + size(col("db")) > IncrBucketCap,
-            array().cast("array<bigint>"))
-          .otherwise(sort_array(concat(col("da"), col("db"))))
-          .as("base_docs"))
-
-  private[graft] def minhashCompactDir(spark: SparkSession, dir: String): String =
-    graft.sources.DerivedCache.dir(
-      dir, "minhash-compact",
-      s"k=$MinhashK;cap=$IncrBucketCap;seg=8;v=1") { out =>
-      val (bSigs, bBidx) =
-        minhashIdxTables(spark, incrementalIndexDir(spark, dir))
-      val (sSigs, sBidx) = minhashIdxTables(spark, minhashSegDir(spark, dir))
-      // both writes are ALIGNED (zero shuffle): the bidx merge join of
-      // two bucketed scans on (band, bh) leaves the frame hash-clustered
-      // at bucket count, and the sigs union concatenates two sets of
-      // bucket-pure partitions — two files per bucket, a valid bucketed
-      // layout (the writer derives bucket ids per row; readers group
-      // files by bucket id)
-      graft.sources.Bucketing.writeBucketedExternal(
-        bSigs.unionByName(sSigs), s"$out/sigs", Seq("doc_id"),
-        aligned = true)
-      graft.sources.Bucketing.writeBucketedExternal(
-        mergedBandBuckets(bBidx, sBidx)
-          .select(col("band"), col("bh"), col("base_docs")),
-        s"$out/bidx", Seq("band", "bh"), aligned = true)
-      ()
-    }
-
-  /** The minhash tier's one-row maintenance summary (base/seg key
-    * counts + cap-crosser mass from the stored-table merge) — consumed
-    * by the cross-tier advisory (Cdc.indexMaintenancePlan). Lives here
-    * so the bucket cap stays a module constant.
-    */
-  private[operators] def minhashMaintenanceRow(
-      spark: SparkSession, dir: String): DataFrame = {
-    GraftFunctions.register(spark)
-    val (_, bBidx) = minhashIdxTables(spark, incrementalIndexDir(spark, dir))
-    val (_, sBidx) = minhashIdxTables(spark, minhashSegDir(spark, dir))
-    val crosser = col("da").isNotNull && col("db").isNotNull &&
-      size(col("da")) > 0 && size(col("db")) > 0 &&
-      size(col("da")) + size(col("db")) > IncrBucketCap
-    mergedBandBuckets(bBidx, sBidx)
-      .agg(
-        count(when(col("da").isNotNull, 1)).as("base_keys"),
-        count(when(col("db").isNotNull, 1)).as("seg_keys"),
-        sum(when(crosser, 1L).otherwise(0L)).as("n_crossers"))
-      .select(
-        lit("minhash").as("tier"),
-        col("base_keys"), col("seg_keys"),
-        coalesce(col("n_crossers"), lit(0L)).as("n_crossers"))
-  }
-
-  /** DuckDB twin of [[minhashMaintenanceRow]] — a SELECT over the
-    * shared minhash CTE prefix (the caller composes the WITH).
+  /** DuckDB twin of the minhash row of Cdc.indexMaintenancePlan — a
+    * SELECT over the shared minhash CTE prefix (the caller composes the
+    * WITH).
     */
   private[operators] val minhashMaintenanceRowSql =
     s"""SELECT 'minhash' AS tier,
@@ -2136,7 +2014,7 @@ object Dedup {
 
   /** Compact the minhash base index + the batch-1 segment into one
     * globally capped index (stored bucketed, build-once, written with
-    * ZERO shuffles — see [[minhashCompactDir]]) and report what the
+    * ZERO shuffles — see [[StoredIndex]]) and report what the
     * merge changed: per resulting bucket tier (hot / unique / cold by
     * the MERGED size), the bucket count, surviving posting entries,
     * buckets present in both inputs, and the CAP CROSSERS — buckets
@@ -2145,33 +2023,12 @@ object Dedup {
     * the compacted index drops as near-identical boilerplate: the LSM
     * trade made visible, and a number the maintenance advisory
     * (index_maintenance_plan) consumes to decide when to compact.
-    * Round15AdditionsSpec pins the stored compacted layout to be
+    * StoredIndexSpec pins the stored compacted layout to be
     * row-identical to a from-scratch build over base ∪ batch-1 docs.
     */
   def dedupMinhashIndexCompact(spark: SparkSession, dir: String): DataFrame = {
     GraftFunctions.register(spark) // the index builders sign with graft_minhash_md5
-    minhashCompactDir(spark, dir) // build-once side effect (the layout)
-    val (_, bBidx) = minhashIdxTables(spark, incrementalIndexDir(spark, dir))
-    val (_, sBidx) = minhashIdxTables(spark, minhashSegDir(spark, dir))
-    val m = mergedBandBuckets(bBidx, sBidx)
-    val inBoth = col("da").isNotNull && col("db").isNotNull
-    val crosser = inBoth &&
-      size(col("da")) > 0 && size(col("db")) > 0 &&
-      size(col("da")) + size(col("db")) > IncrBucketCap
-    m.select(
-        when(size(col("base_docs")) === 0, "hot")
-          .when(size(col("base_docs")) === 1, "unique")
-          .otherwise("cold").as("tier"),
-        size(col("base_docs")).cast("long").as("entries"),
-        when(inBoth, 1L).otherwise(0L).as("in_both"),
-        when(crosser, 1L).otherwise(0L).as("crosser"))
-      .groupBy(col("tier"))
-      .agg(
-        count(lit(1)).as("n_buckets"),
-        sum(col("entries")).as("n_entries"),
-        sum(col("in_both")).as("n_in_both"),
-        sum(col("crosser")).as("n_cap_crossers"))
-      .orderBy(col("tier"))
+    StoredIndex.cappedCompaction(spark, dir, MinhashTier, "hot", "n_buckets")
   }
 
   private val dedupMinhashIndexCompactSql =
@@ -2243,7 +2100,7 @@ object Dedup {
       .filter(size(col("base_docs")) >= 2)
       .select(explode(col("base_docs")).as("doc_id"))
       .distinct()
-    val store = Cdc.cdcStoreTable(spark, Cdc.cdcStoreDir(spark, dir))
+    val store = StoredIndex.tables(spark, dir, Cdc.CdcTier, StoredIndex.Base).head
 
     def row(
         tier: String, flagged: DataFrame, upstream: Option[DataFrame])

@@ -280,7 +280,7 @@ object Olap {
     // scan-fan (guide §2.5): no-collapse (order, part) pre-aggregate,
     // the product_popularity case — serial on a single-split source
     val top = graft.Scans
-      .fanSmall(spark, li, s"$dir/lineitem.parquet")
+      .fanSmall(spark, li, dir, "lineitem")
       .groupBy(col("l_orderkey"), col("l_partkey"))
       .agg(
         sum((col("l_extendedprice") * (lit(1.0) - col("l_discount"))).cast(Det.Fine))

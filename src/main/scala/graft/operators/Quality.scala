@@ -234,7 +234,7 @@ object Quality {
     // aggregate — on a single-row-group source all of that runs on one
     // core without the bounded fan (no-op at scale)
     tableProfile(
-      graft.Scans.fanSmall(spark, Tables.orders(spark, dir), s"$dir/orders.parquet"),
+      graft.Scans.fanSmall(spark, Tables.orders(spark, dir), dir, "orders"),
       exactDistinct = n <= cap)
   }
 
@@ -294,7 +294,7 @@ object Quality {
     // scan-fan (guide §2.5): six md5-h60 serializations per row is
     // per-row CPU work that otherwise runs on the source's single task
     val hashed = graft.Scans
-      .fanSmall(spark, Tables.orders(spark, dir), s"$dir/orders.parquet")
+      .fanSmall(spark, Tables.orders(spark, dir), dir, "orders")
       .select(sers.map { case (n, c) =>
         Det.md5h60Col(c).cast("long").as(s"${n}__h")
       }: _*)

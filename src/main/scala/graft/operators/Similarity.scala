@@ -56,8 +56,7 @@ object Similarity {
   // REVERTED: the LSH-pair family's heavy work starts after its bucket
   // exchange, and the extra stage measured +0.2 s there.
   private def fannedCorpus(spark: SparkSession, dir: String): DataFrame =
-    graft.Scans.fanSmall(
-      spark, Tables.embeddings(spark, dir), s"$dir/embeddings.parquet")
+    graft.Scans.fanSmall(spark, Tables.embeddings(spark, dir), dir, "embeddings")
 
   private def queries(spark: SparkSession, dir: String): DataFrame =
     corpus(spark, dir)

@@ -129,18 +129,6 @@ object Bucketing {
     spark.table(tbl)
   }
 
-  /** Equi-join two same-bucket-count tables on their bucket keys.
-    * With both sides bucketed this plans with no Exchange on either
-    * side; the caller can `.explain` or assert on the executed plan.
-    */
-  def bucketedJoin(
-      spark: SparkSession,
-      leftTable: String, rightTable: String,
-      leftKey: String, rightKey: String): DataFrame =
-    spark.table(leftTable)
-      .join(spark.table(rightTable),
-        spark.table(leftTable)(leftKey) === spark.table(rightTable)(rightKey))
-
   /** Z-ordered (Morton) layout: sort the table along a space-filling
     * curve over two key expressions and write `files` range-partitioned
     * parquet files. Each file then covers a compact 2-D TILE of the key

@@ -2,9 +2,9 @@ package graft.streaming
 
 import graft.{QueryDef, Tables}
 import graft.functions.GraftFunctions
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import graft.sources.StoredIndex
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
 
 /** Streaming document pipeline: the ingest-side twin of the batch dedup
   * tier. A 100 TB crawl doesn't arrive as a table — it arrives as a
@@ -12,84 +12,6 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * reach storage.
   */
 object DocStreams {
-
-  /** One flagged duplicate: doc was matched against an earlier doc in
-    * one of its LSH band buckets. A doc landing in several buckets can
-    * emit one hit per bucket — consumers dedup by doc_id downstream
-    * (the spec does; a bounded per-doc-id aggregate in production).
-    */
-  final case class DupHit(doc_id: Long, dup_of: Long, est_jaccard: Double)
-
-  /** Streaming MinHash+LSH near-dup filter. Incoming docs are
-    * signature'd in-row (the same codegen'd `graft_minhash_md5` kernel
-    * and 16×4 banding as batch dedup_minhash), grouped by band bucket,
-    * and compared against PER-BUCKET STATE of previously seen
-    * signatures via flatMapGroupsWithState — first-seen wins as the
-    * original, later arrivals with est-Jaccard ≥ `tau` are emitted as
-    * [[DupHit]]s.
-    *
-    * Scale bounds, by construction: state per bucket is capped at
-    * `bucketCap` signatures (k longs each) — hot buckets stop absorbing
-    * new originals instead of growing without bound, trading recall
-    * inside a pathological bucket for bounded memory, exactly like the
-    * batch path's bucket-size cap; per-row work is O(bands · cap · k).
-    * In-batch ordering is made deterministic by processing each
-    * micro-batch's bucket group in doc_id order.
-    */
-  def nearDupFilter(
-      docs: DataFrame,
-      k: Int = 64,
-      tau: Double = 0.5,
-      bucketCap: Int = 32): Dataset[DupHit] = {
-    val spark = docs.sparkSession
-    GraftFunctions.register(spark)
-    import spark.implicits._
-
-    val banded = docs
-      .select(col("doc_id"), split(col("text"), " ").as("t"))
-      .filter(size(col("t")) >= 3)
-      .select(col("doc_id"), expr(s"graft_minhash_md5(t, $k)").as("sig"))
-      .select(
-        col("doc_id"),
-        col("sig"),
-        explode(expr(
-          """transform(sequence(0, 15), b -> concat(CAST(b AS STRING), '|',
-            |  array_join(transform(slice(sig, b * 4 + 1, 4), x -> CAST(x AS STRING)), ',')))""".stripMargin))
-          .as("bucket"))
-      .as[(Long, Seq[Long], String)]
-
-    def estJaccard(a: Seq[Long], b: Seq[Long]): Double = {
-      var same = 0
-      var i = 0
-      while (i < k) { if (a(i) == b(i)) same += 1; i += 1 }
-      same.toDouble / k
-    }
-
-    banded
-      .groupByKey(_._3)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(
-        (_: String, rows: Iterator[(Long, Seq[Long], String)],
-         state: GroupState[(Seq[Long], Seq[Seq[Long]])]) => {
-          val st = state.getOption.getOrElse((Seq.empty[Long], Seq.empty[Seq[Long]]))
-          var ids  = st._1
-          var sigs = st._2
-          val out  = List.newBuilder[DupHit]
-          rows.toSeq.sortBy(_._1).foreach { case (id, sig, _) =>
-            var bestId  = -1L
-            var bestEst = -1.0
-            ids.iterator.zip(sigs.iterator).foreach { case (oid, osig) =>
-              val e = estJaccard(sig, osig)
-              if (e > bestEst || (e == bestEst && oid < bestId)) {
-                bestEst = e; bestId = oid
-              }
-            }
-            if (bestEst >= tau) out += DupHit(id, bestId, bestEst)
-            else if (ids.length < bucketCap) { ids :+= id; sigs :+= sig }
-          }
-          state.update((ids, sigs))
-          out.result().iterator
-        })
-  }
 
   /** Batch-checkable registration of the streaming ingest path: the
     * delta corpus (doc_id % 10 >= 8 — the same split dedup_incremental
@@ -109,10 +31,18 @@ object DocStreams {
     */
   def streamDedupIngest(spark: SparkSession, dir: String): DataFrame = {
     GraftFunctions.register(spark)
-    val idx = graft.operators.Dedup.incrementalIndexDir(spark, dir)
-    val delta = Tables
-      .documents(spark, dir)
-      .filter((col("doc_id") % 10) >= 8)
+    // every micro-batch probes the SAME stored base tables — read them
+    // once and, when the index is measurably small, persist them for the
+    // stream run so batch 2 reads cached partitions instead of
+    // re-scanning the bucketed parquet. Size-gated (the fanSmall
+    // convention): at 100 TB the index is corpus-sized, the gate fails,
+    // and each batch streams the scans exactly as before — the cache is
+    // a bounded-input optimization, never a memory bet at scale.
+    val baseTables = graft.operators.Dedup.incrementalBaseTables(spark, dir)
+    val cacheBase = graft.Scans.bytesOf(
+      spark, StoredIndex.dir(spark, dir, graft.operators.Dedup.MinhashTier, StoredIndex.Base)
+    ) <= graft.Scans.DefaultMaxFanBytes
+    val delta = StoredIndex.deltaDocs(Tables.documents(spark, dir))
       .select(col("doc_id"), col("text"))
     // the published 4-file stream source is deterministic per corpus —
     // build it once via DerivedCache (a production ingest's source
@@ -125,16 +55,6 @@ object DocStreams {
         .parquet(s"$out/files")
       ()
     } + "/files"
-    // every micro-batch probes the SAME stored base tables — build the
-    // two frames once and, when the index is measurably small, persist
-    // them for the stream run so batch 2 reads cached partitions instead
-    // of re-scanning the bucketed parquet. Size-gated (the fanSmall
-    // convention): at 100 TB the index is corpus-sized, the gate fails,
-    // and each batch streams the scans exactly as before — the cache is
-    // a bounded-input optimization, never a memory bet at scale.
-    val baseTables = graft.operators.Dedup.incrementalBaseTables(spark, idx)
-    val cacheBase =
-      graft.Scans.bytesUnder(spark, idx) <= graft.Scans.DefaultMaxFanBytes
     if (cacheBase) {
       baseTables._1.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       baseTables._2.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -149,9 +69,7 @@ object DocStreams {
       mkHandler = outDir =>
         (batch, _) => {
           val (verdicts, sigs) = graft.operators.Dedup
-            .incrementalProbe(
-              spark, idx, batch.toDF(), deltaIsSmall = true,
-              base = Some(baseTables))
+            .incrementalProbe(spark, baseTables, batch.toDF(), deltaIsSmall = true)
           verdicts.write.mode("append").parquet(outDir)
           // no-op today (small-batch probes skip the persist), kept so a
           // future persistSigs change can't leak per-batch cached frames
@@ -200,10 +118,9 @@ object DocStreams {
     GraftFunctions.register(spark)
     // force the stored base+seg builds BEFORE the stream starts: index
     // maintenance is a batch job; the stream only probes
-    val segs = graft.operators.Cdc.substrAppendSegs(spark, dir)
-    val delta = Tables
-      .documents(spark, dir)
-      .filter((col("doc_id") % 10) === 9)
+    val segs = StoredIndex.probeLevels(spark, dir, graft.operators.Cdc.SubstrTier)
+      .map { case (l, ts) => l -> ts.head }
+    val delta = StoredIndex.batchDocs(Tables.documents(spark, dir))
       .select(col("doc_id"), col("text"))
     val rows = Tables.cachedCount(spark, dir, "documents")
     val srcDir = graft.sources.DerivedCache.dir(

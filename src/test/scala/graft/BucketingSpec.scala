@@ -24,8 +24,8 @@ class BucketingSpec extends AnyFunSuite {
       val saved = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
       try {
-        val joined =
-          Bucketing.bucketedJoin(spark, "li_b", "ord_b", "l_orderkey", "o_orderkey")
+        val (lb, ob) = (spark.table("li_b"), spark.table("ord_b"))
+        val joined = lb.join(ob, lb("l_orderkey") === ob("o_orderkey"))
         val plan = joined.queryExecution.executedPlan.toString
         assert(plan.contains("SortMergeJoin"), s"expected SMJ in:\n$plan")
         assert(!plan.contains("Exchange"),

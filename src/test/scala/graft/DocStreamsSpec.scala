@@ -4,31 +4,13 @@ import java.nio.file.Files
 
 import graft.streaming.DocStreams
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Streaming near-dup filter: later arrivals that minhash-match an
-  * earlier doc are flagged with the ORIGINAL's id; fresh content passes
-  * through unflagged; in-batch duplicates resolve deterministically to
-  * the lower doc_id.
+/** Streaming document ingests: each micro-batched run must reproduce
+  * its batch twin's table.
   */
 class DocStreamsSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
-
-  private val originals = Seq(
-    1L -> "the quick brown fox jumps over the lazy dog near the quiet river bank today",
-    2L -> "distributed query engines shuffle data between executors when keys must colocate",
-    3L -> "a language model trained on curated text generalizes better than one on raw crawl")
-
-  // 11/12/13 are one-word edits of 1/2/3; 14 is new; 15/16 are
-  // near-identical to each other (in-batch pair), unrelated to file 1
-  private val second = Seq(
-    11L -> "the quick brown fox jumps over the lazy cat near the quiet river bank today",
-    12L -> "distributed query engines shuffle data between workers when keys must colocate",
-    13L -> "a language model trained on curated text generalizes better than one on raw data",
-    14L -> "completely different content about cooking pasta with garlic butter and fresh basil leaves",
-    15L -> "streaming systems flag duplicate documents before they ever reach the storage layer",
-    16L -> "streaming systems flag duplicate documents before they ever reach the archive layer")
 
   test("stream_dedup_ingest micro-batch union equals the batch incremental verdicts") {
     // the registered streaming ingest run (4-file AvailableNow stream,
@@ -40,47 +22,6 @@ class DocStreamsSpec extends AnyFunSuite {
     assert(streamed.length === batch.length)
     assert(streamed.map(_.toString).toSeq === batch.map(_.toString).toSeq,
       "streamed verdicts diverge from the batch incremental path")
-  }
-
-  test("stream flags later near-copies against first-seen originals") {
-    import spark.implicits._
-    val dir = Files.createTempDirectory("graft-docstream").toFile
-    dir.deleteOnExit()
-    originals.toDF("doc_id", "text").coalesce(1)
-      .write.parquet(dir.getAbsolutePath + "/src/f1")
-    second.toDF("doc_id", "text").coalesce(1)
-      .write.parquet(dir.getAbsolutePath + "/src/f2")
-    val stream = spark.readStream
-      .schema("doc_id LONG, text STRING")
-      .option("maxFilesPerTrigger", "1")
-      .parquet(dir.getAbsolutePath + "/src/f*")
-    val q = DocStreams.nearDupFilter(stream)
-      .writeStream.format("memory").queryName("dup_hits")
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination(120000)
-    // a doc can hit in several buckets: resolve per doc to the best hit
-    val hits = spark.sql("SELECT * FROM dup_hits")
-      .groupBy("doc_id")
-      .agg(max(struct(col("est_jaccard"), col("dup_of"))).as("m"))
-      .select(col("doc_id"), col("m.dup_of"), col("m.est_jaccard"))
-      .collect()
-      .map(r => r.getLong(0) -> (r.getLong(1), r.getDouble(2)))
-      .toMap
-    // the three edits flag their originals
-    assert(hits.contains(11L) && hits(11L)._1 === 1L, s"$hits")
-    assert(hits.contains(12L) && hits(12L)._1 === 2L, s"$hits")
-    assert(hits.contains(13L) && hits(13L)._1 === 3L, s"$hits")
-    // fresh content passes
-    assert(!hits.contains(14L))
-    // in-batch pair: lower doc_id wins as original
-    assert(!hits.contains(15L))
-    assert(hits.contains(16L) && hits(16L)._1 === 15L, s"$hits")
-    // nothing from the first file is ever flagged
-    assert(originals.map(_._1).forall(id => !hits.contains(id)))
-    // every flagged pair is a TRUE near-dup by the batch estimator
-    hits.values.foreach { case (_, est) => assert(est >= 0.5) }
   }
 
   test("stream_mix_ingest: planned sources repeat, unplanned sources get zero") {

@@ -5,8 +5,9 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Round-14 additions: the sound pair-mass skip bound (token mass, not
   * C(n,2) — a doc pair counts once PER shared cold shingle, so doc
-  * count alone never bounds the expansion), bucketed stored probe
-  * indexes, and the substring-tier overflow routing.
+  * count alone never bounds the expansion) and the substring-tier
+  * overflow routing (the round's stored-index cases live in
+  * StoredIndexSpec).
   */
 class Round14AdditionsSpec extends AnyFunSuite {
   private def spark = TestSpark.spark
@@ -91,52 +92,6 @@ class Round14AdditionsSpec extends AnyFunSuite {
     } finally spark.sparkContext.removeSparkListener(l)
   }
 
-  test("incremental probes read bucketed indexes: no Exchange on the index side") {
-    import org.apache.spark.sql.classic.{Dataset => CDataset}
-    import org.apache.spark.sql.Row
-    import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
-    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
-    import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
-    import org.apache.spark.sql.execution.joins.BaseJoinExec
-    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
-
-    def isBucketedScan(p: SparkPlan): Boolean = p match {
-      case f: FileSourceScanExec =>
-        f.relation.bucketSpec.isDefined &&
-          f.outputPartitioning.isInstanceOf[HashPartitioning]
-      case _ => false
-    }
-    // every root-to-scan path for each bucketed index scan
-    def paths(p: SparkPlan): Seq[List[SparkPlan]] =
-      if (isBucketedScan(p)) Seq(List(p))
-      else p.children.flatMap(paths).map(c => p :: c).toSeq
-
-    Seq("dedup_substring_incremental", "dedup_substring_strip_incremental",
-      "dedup_incremental", "cdc_incremental",
-      "dedup_substring_index_append", "dedup_substring_index_compact")
-      .foreach { q =>
-      val qe = SparkEntry.queries(q)(spark, TestSpark.Sf)
-        .asInstanceOf[CDataset[Row]].queryExecution
-      val plan = qe.executedPlan match {
-        case a: AdaptiveSparkPlanExec => a.executedPlan
-        case p => p
-      }
-      val ps = paths(plan)
-      assert(ps.nonEmpty,
-        s"$q: no bucketed (hash-clustered) index scan in the plan:\n$plan")
-      ps.foreach { path =>
-        // from the scan UP to its first join: that segment is the index
-        // side of the probe and must carry no shuffle
-        val upward = path.reverse
-        val toJoin = upward.takeWhile(!_.isInstanceOf[BaseJoinExec])
-        assert(upward.exists(_.isInstanceOf[BaseJoinExec]),
-          s"$q: bucketed scan feeds no join?\n$plan")
-        assert(!toJoin.exists(_.isInstanceOf[ShuffleExchangeLike]),
-          s"$q: Exchange between the bucketed index scan and its probe join:\n$plan")
-      }
-    }
-  }
-
   test("dedup_substring_strip: a 100-copy boilerplate window strips from all non-keepers") {
     // df = 100 > SubstrDfCap = 64: the pre-r14 cap silently KEPT these —
     // zero yield on exactly the most-duplicated text. Now they strip
@@ -187,87 +142,6 @@ class Round14AdditionsSpec extends AnyFunSuite {
     // keep-base: the base copy strips from the delta entirely
     assert(out(103L) === ((60L, 60L, md5hex(""))))
     assert(out(104L) === ((60L, 0L, md5hex(solo))))
-  }
-
-  test("the stored posting index keeps presence rows for boilerplate windows") {
-    // 70 base copies (df = 70 > SubstrDfCap = 64): posting LISTS are
-    // capped away (the detector explodes them — must stay pair-bounded)
-    // but the PRESENCE row survives, so the incremental strip removes
-    // the boilerplate from incoming deltas
-    val run = (1 to 55).map(i => s"pres$i")
-    val base = docsFrame((0L until 70L).map(d =>
-      d -> ((1 to 3).map(i => s"b${d}_$i") ++ run).mkString(" ")))
-    val idx = operators.Cdc.substrPostings(base)
-    val boiler = idx.filter(size(col("base_docs")) === 0).count()
-    assert(boiler === 6L, "the 6 shared run windows must keep presence rows")
-    // detector: empty postings contribute no candidates — delta doc is
-    // reported dup-free (the documented cap asymmetry)...
-    val delta = docsFrame(Seq(900L -> run.mkString(" ")))
-    val det = operators.Cdc.dedupSubstringIncrementalOf(delta, idx).collect()
-    assert(det.head.getLong(2) === 0L, "n_dups stays 0 above the df cap")
-    // ...but the STRIP removes the boilerplate run in full
-    val strip = operators.Cdc.dedupSubstringStripIncrementalOf(delta, idx)
-      .collect().head
-    assert(strip.getLong(2) === 55L, "all 55 run tokens strip")
-  }
-
-  test("segment merge equals a from-scratch rebuild, including cap crossers") {
-    // base and segment each hold the shared run at df=40 ≤ SubstrDfCap;
-    // merged df=80 crosses the cap ONLY at compaction — the exact case a
-    // per-segment capped representation could get wrong. The merge is
-    // computed from the STORED posting frames alone (no corpus re-scan)
-    // and must be row-identical to rebuilding over base ∪ segment docs.
-    val run = (1 to 55).map(i => s"cx$i")
-    val base = docsFrame((0L until 40L).map(d =>
-      d -> ((1 to 3).map(i => s"b${d}_$i") ++ run).mkString(" ")))
-    val seg = docsFrame((100L until 140L).map(d =>
-      d -> ((1 to 3).map(i => s"s${d}_$i") ++ run).mkString(" ")))
-    val merged = operators.Cdc.mergedPostings(
-        operators.Cdc.substrPostings(base), operators.Cdc.substrPostings(seg))
-      .select(col("h"), col("base_docs"))
-    val scratch = operators.Cdc.substrPostings(base.unionByName(seg))
-    assert(merged.exceptAll(scratch).isEmpty && scratch.exceptAll(merged).isEmpty,
-      "compacted index must equal the from-scratch build")
-    // the 6 fully-shared run windows are boiler ONLY after the merge
-    val boiler = merged.filter(size(col("base_docs")) === 0).count()
-    assert(boiler === 6L, s"cap crossers must reclassify at compaction: $boiler")
-  }
-
-  test("the STORED compacted layout equals a from-scratch rebuild on the sf fixture") {
-    // the merge-kernel equality above runs on planted frames; this pins
-    // the artifact a later session actually serves from — the bucketed
-    // layout dedup_substring_index_compact writes — against rebuilding
-    // postings over base ∪ segment docs of the real fixture
-    SparkEntry.queries("dedup_substring_index_compact")(spark, TestSpark.Sf)
-    val stored = sources.Bucketing.readBucketed(
-      spark,
-      s"${operators.Cdc.substrCompactDir(spark, TestSpark.Sf)}/postings",
-      Seq("h"), "h BIGINT, base_docs ARRAY<BIGINT>")
-    val scratch = operators.Cdc.substrPostings(
-      Tables.documents(spark, TestSpark.Sf).filter(col("doc_id") % 10 < 9))
-    assert(
-      stored.exceptAll(scratch).isEmpty && scratch.exceptAll(stored).isEmpty,
-      "stored compacted layout must equal the from-scratch build")
-  }
-
-  test("append probe: batch 2 dedupes against base AND the appended batch-1 segment") {
-    val runA = (1 to 60).map(i => s"ba$i").mkString(" ") // lives in base
-    val runB = (1 to 60).map(i => s"sg$i").mkString(" ") // lives in batch 1
-    val idx0 = operators.Cdc.substrPostings(docsFrame(Seq(1L -> runA)))
-    val idx1 = operators.Cdc.substrPostings(docsFrame(Seq(8L -> runB)))
-    val solo = (1 to 60).map(i => s"so$i").mkString(" ")
-    // 901 matches base; 902 matches ONLY the appended segment (the
-    // staleness hole a static index leaves open); 903 matches nothing
-    val delta = docsFrame(Seq(901L -> runA, 902L -> runB, 903L -> solo))
-    val out = operators.Cdc.dedupSubstringIndexAppendOf(
-        delta, Seq("base" -> idx0, "seg1" -> idx1))
-      .collect()
-      .map(r => r.getLong(0) ->
-        ((r.getLong(2), Option(r.get(3)), Option(r.get(4)), r.getBoolean(7))))
-      .toMap
-    assert(out(901L) === ((1L, Some(1L), Some("base"), false)))
-    assert(out(902L) === ((1L, Some(8L), Some("seg1"), false)))
-    assert(out(903L) === ((0L, None, None, true)))
   }
 
   test("the token-mass bound dominates the measured mass on the sf fixture") {

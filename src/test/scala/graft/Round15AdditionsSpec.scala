@@ -1,253 +1,12 @@
 package graft
 
-import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Round-15 additions: the minhash index LSM lifecycle (append segment
-  * probes + merge-closed compaction), the shuffle-free ALIGNED bucketed
-  * write for compaction outputs, and the crash-safe compact commit
-  * protocol.
+/** Round-15 additions: the crash-safe compact commit protocol (the
+  * round's LSM cases live in StoredIndexSpec).
   */
 class Round15AdditionsSpec extends AnyFunSuite {
   private def spark = TestSpark.spark
-
-  /** A planted documents dir whose doc_id % 10 split yields base
-    * (< 8), seg1 (== 8) and delta (== 9) batches with known twins.
-    */
-  private def plantedCorpus(): String = {
-    val s = spark
-    import s.implicits._
-    val tmp = java.nio.file.Files.createTempDirectory("graft-mhlsm").toString
-    def text(tag: String) =
-      (1 to 40).map(i => s"$tag$i").mkString(" ")
-    val rows = Seq(
-      3L  -> text("basedoc"),  // base twin target
-      4L  -> text("other"),
-      8L  -> text("segdoc"),   // seg1 twin target
-      9L  -> text("basedoc"),  // delta: identical to base doc 3
-      19L -> text("segdoc"),   // delta: identical to seg1 doc 8 — the
-                               // cross-batch staleness case a static
-                               // base index can never catch
-      29L -> text("fresh"))    // delta: novel, must keep
-    rows.toDF("doc_id", "text")
-      .select(
-        col("doc_id"), col("text"),
-        lit("en").as("lang"), lit("web").as("source"),
-        length(col("text")).cast("long").as("n_chars"))
-      .write.mode("overwrite").parquet(s"$tmp/documents.parquet")
-    tmp
-  }
-
-  test("minhash index append: a delta doc finds its twin in the APPENDED segment") {
-    val tmp = plantedCorpus()
-    val out = SparkEntry.queries("dedup_minhash_index_append")(spark, tmp)
-      .collect().map(r => r.getLong(0) ->
-        (r.getLong(1), Option(r.get(2)), Option(r.getString(3)), r.getBoolean(5)))
-      .toMap
-    assert(out.keySet === Set(9L, 19L, 29L))
-    // base twin: caught by the base index
-    assert(out(9L)._3 === Some("base"), s"doc 9: ${out(9L)}")
-    assert(out(9L)._2 === Some(3L) && !out(9L)._4)
-    // cross-batch twin: caught ONLY because batch 1 is a live segment
-    assert(out(19L)._3 === Some("seg1"), s"doc 19: ${out(19L)}")
-    assert(out(19L)._2 === Some(8L) && !out(19L)._4)
-    // novel doc keeps
-    assert(out(29L)._4 && out(29L)._1 === 0L)
-  }
-
-  test("mergedBandBuckets is CLOSED under merge: stored-segment fold == from-scratch rebuild") {
-    val s = spark
-    import s.implicits._
-    def docs(rows: Seq[(Long, String)]) = rows.toDF("doc_id", "text")
-    // shapes that exercise every merge branch:
-    //  - 60 + 60 identical docs: under cap in each segment, hot merged
-    //    (the cap CROSSER the per-segment cap hides)
-    //  - 101 identical in base: hot in one segment already
-    //  - disjoint cold buckets that simply concat
-    val t1 = (1 to 40).map(i => s"alpha$i").mkString(" ")
-    val t2 = (1 to 40).map(i => s"beta$i").mkString(" ")
-    val t3 = (1 to 40).map(i => s"gamma$i").mkString(" ")
-    val base = docs(
-      (0L until 60L).map(i => i -> t1) ++
-        (100L until 201L).map(i => i -> t2) ++ Seq(300L -> t3))
-    val seg = docs(
-      (1000L until 1060L).map(i => i -> t1) ++
-        Seq(1100L -> t2, 1200L -> t3))
-    val all = base.unionByName(seg)
-
-    val bb = operators.Dedup.minhashBidxOf(
-      operators.Dedup.minhashBandsOf(base, 64, persistSigs = false)._2)
-    val sb = operators.Dedup.minhashBidxOf(
-      operators.Dedup.minhashBandsOf(seg, 64, persistSigs = false)._2)
-    val merged = operators.Dedup.mergedBandBuckets(bb, sb)
-      .select(col("band"), col("bh"), col("base_docs"))
-    val rebuilt = operators.Dedup.minhashBidxOf(
-      operators.Dedup.minhashBandsOf(all, 64, persistSigs = false)._2)
-
-    def canon(df: org.apache.spark.sql.DataFrame) =
-      df.select(col("band"), col("bh"),
-          to_json(col("base_docs")).as("ds"))
-        .collect().map(r => (r.getInt(0), r.getString(1), r.getString(2)))
-        .toSet
-    val m = canon(merged)
-    val r = canon(rebuilt)
-    assert(m === r,
-      s"merge must equal rebuild; only-in-merge=${(m -- r).take(3)} " +
-        s"only-in-rebuild=${(r -- m).take(3)}")
-    // and the crosser shape really is present: t1's buckets are hot
-    // merged (120 docs) though cold (60) in each input
-    assert(merged.filter(size(col("base_docs")) === 0).count() > 0)
-    assert(bb.filter(size(col("base_docs")) === 60).count() > 0)
-  }
-
-  test("stored compacted minhash layout == from-scratch build over base ∪ seg1 docs") {
-    val d = operators.Dedup.minhashCompactDir(spark, TestSpark.Sf)
-    val stored = graft.sources.Bucketing.readBucketed(
-      spark, s"$d/bidx", Seq("band", "bh"),
-      "band INT, bh STRING, base_docs ARRAY<BIGINT>")
-    val rebuilt = operators.Dedup.minhashBidxOf(
-      operators.Dedup.minhashBandsOf(
-        Tables.documents(spark, TestSpark.Sf)
-          .filter(col("doc_id") % 10 < 9), 64, persistSigs = false)._2)
-    def canon(df: org.apache.spark.sql.DataFrame) =
-      df.select(col("band"), col("bh"), to_json(col("base_docs")).as("ds"))
-        .collect().map(r => (r.getInt(0), r.getString(1), r.getString(2)))
-        .toSet
-    assert(canon(stored) === canon(rebuilt))
-  }
-
-  test("round-15 probes read bucketed indexes: no Exchange on the index side") {
-    import org.apache.spark.sql.classic.{Dataset => CDataset}
-    import org.apache.spark.sql.Row
-    import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
-    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
-    import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
-    import org.apache.spark.sql.execution.joins.BaseJoinExec
-    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
-
-    def isBucketedScan(p: SparkPlan): Boolean = p match {
-      case f: FileSourceScanExec =>
-        f.relation.bucketSpec.isDefined &&
-          f.outputPartitioning.isInstanceOf[HashPartitioning]
-      case _ => false
-    }
-    def paths(p: SparkPlan): Seq[List[SparkPlan]] =
-      if (isBucketedScan(p)) Seq(List(p))
-      else p.children.flatMap(paths).map(c => p :: c).toSeq
-
-    Seq("dedup_minhash_index_append", "dedup_minhash_index_compact",
-      "cdc_store_append", "cdc_store_compact", "index_maintenance_plan")
-      .foreach { q =>
-        val qe = SparkEntry.queries(q)(spark, TestSpark.Sf)
-          .asInstanceOf[CDataset[Row]].queryExecution
-        val plan = qe.executedPlan match {
-          case a: AdaptiveSparkPlanExec => a.executedPlan
-          case p => p
-        }
-        val ps = paths(plan)
-        assert(ps.nonEmpty,
-          s"$q: no bucketed (hash-clustered) index scan in the plan:\n$plan")
-        ps.foreach { path =>
-          val upward = path.reverse
-          val toJoin = upward.takeWhile(!_.isInstanceOf[BaseJoinExec])
-          assert(upward.exists(_.isInstanceOf[BaseJoinExec]),
-            s"$q: bucketed scan feeds no join?\n$plan")
-          assert(!toJoin.exists(_.isInstanceOf[ShuffleExchangeLike]),
-            s"$q: Exchange between the bucketed index scan and its probe join:\n$plan")
-        }
-      }
-  }
-
-  test("aligned bucketed write of a bucketed-merge output plans ZERO shuffles") {
-    import org.apache.spark.sql.execution.QueryExecution
-    import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
-    val s = spark
-    import s.implicits._
-    val tmp = java.nio.file.Files.createTempDirectory("graft-aligned").toString
-    val a = (0L until 500L).map(h => (h, Seq(h)))
-      .toDF("h", "base_docs")
-    val b = (250L until 750L).map(h => (h, Seq(h + 10000L)))
-      .toDF("h", "base_docs")
-    graft.sources.Bucketing.writeBucketedExternal(a, s"$tmp/a", Seq("h"))
-    graft.sources.Bucketing.writeBucketedExternal(b, s"$tmp/b", Seq("h"))
-    val ddl = "h BIGINT, base_docs ARRAY<BIGINT>"
-    val ra = graft.sources.Bucketing.readBucketed(spark, s"$tmp/a", Seq("h"), ddl)
-    val rb = graft.sources.Bucketing.readBucketed(spark, s"$tmp/b", Seq("h"), ddl)
-    val merged = ra.select(col("h"), col("base_docs").as("da"))
-      .join(rb.select(col("h"), col("base_docs").as("db")), Seq("h"), "full_outer")
-      .select(col("h"),
-        when(col("da").isNull, col("db"))
-          .when(col("db").isNull, col("da"))
-          .otherwise(concat(col("da"), col("db"))).as("base_docs"))
-
-    val plans = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]()
-    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
-      override def onSuccess(f: String, qe: QueryExecution, d: Long): Unit = {
-        plans.add(qe); ()
-      }
-      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
-    }
-    spark.listenerManager.register(listener)
-    try {
-      graft.sources.Bucketing.writeBucketedExternal(
-        merged, s"$tmp/m", Seq("h"), aligned = true)
-      org.apache.spark.GraftTestBus.drain(spark.sparkContext)
-      val writePlans = plans.toArray(Array.empty[QueryExecution])
-      assert(writePlans.nonEmpty, "no insert QueryExecution captured")
-      writePlans.foreach { qe =>
-        val shuffles = qe.executedPlan.collect { case e: ShuffleExchangeLike => e }
-        assert(shuffles.isEmpty,
-          s"aligned bucketed write must not shuffle:\n${qe.executedPlan}")
-      }
-    } finally spark.listenerManager.unregister(listener)
-
-    // the aligned layout is a real bucketed table: re-read and verify
-    // content equals the merge input
-    val rm = graft.sources.Bucketing.readBucketed(spark, s"$tmp/m", Seq("h"), ddl)
-    assert(rm.count() === 750L)
-    assert(rm.filter(size(col("base_docs")) === 2).count() === 250L)
-  }
-
-  test("stream_substr_ingest micro-batch union is byte-identical to the batch append") {
-    val batch = SparkEntry.queries("dedup_substring_index_append")(
-      spark, TestSpark.Sf).collect().toSeq
-    val streamed = SparkEntry.queries("stream_substr_ingest")(
-      spark, TestSpark.Sf).collect().toSeq
-    assert(streamed === batch,
-      s"replay must reproduce the batch verdicts; " +
-        s"batch=${batch.take(2)} streamed=${streamed.take(2)}")
-    assert(batch.nonEmpty)
-  }
-
-  test("index_maintenance_plan flips to compact_now on a crosser-heavy corpus") {
-    val s = spark
-    import s.implicits._
-    val tmp = java.nio.file.Files.createTempDirectory("graft-maint").toString
-    // 60 identical docs in base + 60 in seg1: every minhash band bucket
-    // and every substring window is under its cap per segment (60) but
-    // over it merged (120 > 100 bucket cap, > 64 df cap) — the exact
-    // silent-degradation state the advisory exists to catch
-    val text = (1 to 60).map(i => s"crosser$i").mkString(" ")
-    val rows =
-      (0L until 60L).map(i => (i * 10L) -> text) ++       // % 10 == 0 → base
-        (0L until 60L).map(i => (i * 10L + 8L) -> text)   // % 10 == 8 → seg1
-    rows.toDF("doc_id", "text")
-      .select(
-        col("doc_id"), col("text"),
-        lit("en").as("lang"), lit("web").as("source"),
-        length(col("text")).cast("long").as("n_chars"))
-      .write.mode("overwrite").parquet(s"$tmp/documents.parquet")
-    val plan = SparkEntry.queries("index_maintenance_plan")(spark, tmp)
-      .collect().map(r => r.getString(0) -> (r.getLong(4), r.getString(6)))
-      .toMap
-    assert(plan.keySet === Set("cdc", "minhash", "substring"))
-    assert(plan("minhash")._1 > 0 && plan("minhash")._2 === "compact_now",
-      s"minhash: ${plan("minhash")}")
-    assert(plan("substring")._1 > 0 && plan("substring")._2 === "compact_now",
-      s"substring: ${plan("substring")}")
-    // identical text in both tiers → shared chunks → cdc flips too
-    assert(plan("cdc")._2 === "compact_now", s"cdc: ${plan("cdc")}")
-  }
 
   test("compact survives a crash between the swap renames (roll-forward by marker)") {
     val s = spark
