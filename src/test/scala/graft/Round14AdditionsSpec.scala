@@ -5,9 +5,9 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Round-14 additions: the sound pair-mass skip bound (token mass, not
   * C(n,2) — a doc pair counts once PER shared cold shingle, so doc
-  * count alone never bounds the expansion) and the substring-tier
-  * overflow routing (the round's stored-index cases live in
-  * StoredIndexSpec).
+  * count alone never bounds the expansion), bucketed stored probe
+  * indexes, and the substring-tier overflow routing (the rest of the
+  * stored-index lifecycle lives in StoredIndexSpec).
   */
 class Round14AdditionsSpec extends AnyFunSuite {
   private def spark = TestSpark.spark
@@ -92,6 +92,13 @@ class Round14AdditionsSpec extends AnyFunSuite {
     } finally spark.sparkContext.removeSparkListener(l)
   }
 
+  test("incremental probes read bucketed indexes: no Exchange on the index side") {
+    StoredIndexChecks.assertNoIndexSideExchange(spark, Seq(
+      "dedup_substring_incremental", "dedup_substring_strip_incremental",
+      "dedup_incremental", "cdc_incremental",
+      "dedup_substring_index_append", "dedup_substring_index_compact"))
+  }
+
   test("dedup_substring_strip: a 100-copy boilerplate window strips from all non-keepers") {
     // df = 100 > SubstrDfCap = 64: the pre-r14 cap silently KEPT these —
     // zero yield on exactly the most-duplicated text. Now they strip
@@ -142,6 +149,34 @@ class Round14AdditionsSpec extends AnyFunSuite {
     // keep-base: the base copy strips from the delta entirely
     assert(out(103L) === ((60L, 60L, md5hex(""))))
     assert(out(104L) === ((60L, 0L, md5hex(solo))))
+  }
+
+  test("segment merge equals a from-scratch rebuild, including cap crossers") {
+    // base and segment each hold the shared run at df=40 ≤ SubstrDfCap;
+    // merged df=80 crosses the cap ONLY at compaction — the exact case a
+    // per-segment capped representation could get wrong. The merge is
+    // computed from the STORED posting frames alone (no corpus re-scan)
+    // and must be row-identical to rebuilding over base ∪ segment docs.
+    val run = (1 to 55).map(i => s"cx$i")
+    val base = docsFrame((0L until 40L).map(d =>
+      d -> ((1 to 3).map(i => s"b${d}_$i") ++ run).mkString(" ")))
+    val seg = docsFrame((100L until 140L).map(d =>
+      d -> ((1 to 3).map(i => s"s${d}_$i") ++ run).mkString(" ")))
+    val merged = operators.Cdc.SubstrTier.tables.head.merge
+      .fold(operators.Cdc.substrPostings(base), operators.Cdc.substrPostings(seg))
+      .select(col("h"), col("base_docs"))
+    val scratch = operators.Cdc.substrPostings(base.unionByName(seg))
+    assert(StoredIndexChecks.sameRows(merged, scratch),
+      "compacted index must equal the from-scratch build")
+    // the 6 fully-shared run windows are boiler ONLY after the merge
+    val boiler = merged.filter(size(col("base_docs")) === 0).count()
+    assert(boiler === 6L, s"cap crossers must reclassify at compaction: $boiler")
+  }
+
+  test("the STORED compacted layout equals a from-scratch rebuild on the sf fixture") {
+    // the merge-kernel equality above runs on planted frames; this pins
+    // the artifact a later session actually serves from
+    StoredIndexChecks.assertStoredCompactMatchesRebuild(spark, operators.Cdc.SubstrTier)
   }
 
   test("the token-mass bound dominates the measured mass on the sf fixture") {

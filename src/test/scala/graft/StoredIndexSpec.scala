@@ -1,14 +1,16 @@
 package graft
 
 import graft.sources.{DerivedCache, StoredIndex}
-import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The stored-index (LSM) lifecycle shared by the substring, minhash and
   * CDC tiers: lazy layouts under their pinned names and fingerprints,
-  * exchange-free probes of the bucketed tables, append segments, the
-  * merge-closed capped compaction and the maintenance advisory.
+  * append segments, the shuffle-free aligned write of the capped
+  * compaction and the maintenance advisory. The exchange-free probes,
+  * the merge closure and the stored compacted layouts of the substring
+  * and minhash tiers are pinned in Round14AdditionsSpec and
+  * Round15AdditionsSpec.
   */
 class StoredIndexSpec extends AnyFunSuite {
   private def spark = TestSpark.spark
@@ -47,9 +49,6 @@ class StoredIndexSpec extends AnyFunSuite {
       29L -> text("fresh")))   // delta: novel, must keep
   }
 
-  private def sameRows(a: DataFrame, b: DataFrame): Boolean =
-    a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty
-
   test("layouts build lazily under their pinned names and fingerprints") {
     val tmp = plantedCorpus()
     sources.BuildLog.drain()
@@ -79,54 +78,6 @@ class StoredIndexSpec extends AnyFunSuite {
     }
   }
 
-  test("every LSM probe reads its bucketed index with no Exchange on the index side") {
-    import org.apache.spark.sql.classic.{Dataset => CDataset}
-    import org.apache.spark.sql.Row
-    import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
-    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
-    import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
-    import org.apache.spark.sql.execution.joins.BaseJoinExec
-    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
-
-    def isBucketedScan(p: SparkPlan): Boolean = p match {
-      case f: FileSourceScanExec =>
-        f.relation.bucketSpec.isDefined &&
-          f.outputPartitioning.isInstanceOf[HashPartitioning]
-      case _ => false
-    }
-    // every root-to-scan path for each bucketed index scan
-    def paths(p: SparkPlan): Seq[List[SparkPlan]] =
-      if (isBucketedScan(p)) Seq(List(p))
-      else p.children.flatMap(paths).map(c => p :: c).toSeq
-
-    Seq("dedup_substring_incremental", "dedup_substring_strip_incremental",
-      "dedup_incremental", "cdc_incremental",
-      "dedup_substring_index_append", "dedup_substring_index_compact",
-      "dedup_minhash_index_append", "dedup_minhash_index_compact",
-      "cdc_store_append", "cdc_store_compact", "index_maintenance_plan")
-      .foreach { q =>
-        val qe = SparkEntry.queries(q)(spark, TestSpark.Sf)
-          .asInstanceOf[CDataset[Row]].queryExecution
-        val plan = qe.executedPlan match {
-          case a: AdaptiveSparkPlanExec => a.executedPlan
-          case p => p
-        }
-        val ps = paths(plan)
-        assert(ps.nonEmpty,
-          s"$q: no bucketed (hash-clustered) index scan in the plan:\n$plan")
-        ps.foreach { path =>
-          // from the scan UP to its first join: that segment is the index
-          // side of the probe and must carry no shuffle
-          val upward = path.reverse
-          val toJoin = upward.takeWhile(!_.isInstanceOf[BaseJoinExec])
-          assert(upward.exists(_.isInstanceOf[BaseJoinExec]),
-            s"$q: bucketed scan feeds no join?\n$plan")
-          assert(!toJoin.exists(_.isInstanceOf[ShuffleExchangeLike]),
-            s"$q: Exchange between the bucketed index scan and its probe join:\n$plan")
-        }
-      }
-  }
-
   test("the stored posting index keeps presence rows for boilerplate windows") {
     // 70 base copies (df = 70 > SubstrDfCap = 64): posting LISTS are
     // capped away (the detector explodes them — must stay pair-bounded)
@@ -149,76 +100,10 @@ class StoredIndexSpec extends AnyFunSuite {
     assert(strip.getLong(2) === 55L, "all 55 run tokens strip")
   }
 
-  test("the capped merge is closed: a stored-segment fold equals a from-scratch rebuild") {
-    // substring postings, keyed by h: base and segment each hold the
-    // shared run at df=40 ≤ SubstrDfCap; merged df=80 crosses the cap
-    // ONLY at compaction — the exact case a per-segment capped
-    // representation could get wrong
-    val run = (1 to 55).map(i => s"cx$i")
-    val base = docsFrame((0L until 40L).map(d =>
-      d -> ((1 to 3).map(i => s"b${d}_$i") ++ run).mkString(" ")))
-    val seg = docsFrame((100L until 140L).map(d =>
-      d -> ((1 to 3).map(i => s"s${d}_$i") ++ run).mkString(" ")))
-    val postings = operators.Cdc.SubstrTier.tables.head.merge
-      .fold(operators.Cdc.substrPostings(base), operators.Cdc.substrPostings(seg))
-      .select(col("h"), col("base_docs"))
-    assert(sameRows(postings, operators.Cdc.substrPostings(base.unionByName(seg))),
-      "compacted index must equal the from-scratch build")
-    // the 6 fully-shared run windows are boiler ONLY after the merge
-    val boiler = postings.filter(size(col("base_docs")) === 0).count()
-    assert(boiler === 6L, s"cap crossers must reclassify at compaction: $boiler")
-
-    // minhash band buckets, keyed by (band, bh) — shapes that exercise
-    // every merge branch:
-    //  - 60 + 60 identical docs: under cap in each segment, hot merged
-    //    (the cap CROSSER the per-segment cap hides)
-    //  - 101 identical in base: hot in one segment already
-    //  - disjoint cold buckets that simply concat
-    val t1 = (1 to 40).map(i => s"alpha$i").mkString(" ")
-    val t2 = (1 to 40).map(i => s"beta$i").mkString(" ")
-    val t3 = (1 to 40).map(i => s"gamma$i").mkString(" ")
-    val mBase = docsFrame(
-      (0L until 60L).map(i => i -> t1) ++
-        (100L until 201L).map(i => i -> t2) ++ Seq(300L -> t3))
-    val mSeg = docsFrame(
-      (1000L until 1060L).map(i => i -> t1) ++
-        Seq(1100L -> t2, 1200L -> t3))
-    def bidx(docs: DataFrame) = operators.Dedup.minhashBidxOf(
-      operators.Dedup.minhashBandsOf(docs, 64, persistSigs = false)._2)
-    val bb = bidx(mBase)
-    val buckets = operators.Dedup.MinhashTier.tables.last.merge.fold(bb, bidx(mSeg))
-      .select(col("band"), col("bh"), col("base_docs"))
-    def canon(df: DataFrame) =
-      df.select(col("band"), col("bh"), to_json(col("base_docs")).as("ds"))
-        .collect().map(r => (r.getInt(0), r.getString(1), r.getString(2)))
-        .toSet
-    val m = canon(buckets)
-    val r = canon(bidx(mBase.unionByName(mSeg)))
-    assert(m === r,
-      s"merge must equal rebuild; only-in-merge=${(m -- r).take(3)} " +
-        s"only-in-rebuild=${(r -- m).take(3)}")
-    // and the crosser shape really is present: t1's buckets are hot
-    // merged (120 docs) though cold (60) in each input
-    assert(buckets.filter(size(col("base_docs")) === 0).count() > 0)
-    assert(bb.filter(size(col("base_docs")) === 60).count() > 0)
-  }
-
-  test("the STORED compacted layout of every tier equals a from-scratch rebuild") {
-    // the merge equalities above run on planted frames; this pins the
-    // artifacts a later session actually serves from — each tier's
-    // bucketed compacted tables — against the tier's build kernel run
-    // over the base ∪ batch-1 docs of the real fixture
-    val docs = Tables.documents(spark, TestSpark.Sf).filter(col("doc_id") % 10 < 9)
-    Seq(operators.Cdc.SubstrTier, operators.Dedup.MinhashTier, operators.Cdc.CdcTier)
-      .foreach { tier =>
-        val stored = StoredIndex.tables(spark, TestSpark.Sf, tier, StoredIndex.Compact)
-        val rebuilt = tier.build(docs)
-        tier.tables.zip(stored.zip(rebuilt)).foreach { case (t, (s, r)) =>
-          assert(sameRows(s, r),
-            s"${tier.label}/${t.suffix}: stored compacted layout must equal the from-scratch build")
-        }
-        rebuilt.foreach(_.unpersist())
-      }
+  test("the STORED compacted cdc layout equals a from-scratch rebuild") {
+    // the substring and minhash tiers are pinned the same way in
+    // Round14AdditionsSpec and Round15AdditionsSpec
+    StoredIndexChecks.assertStoredCompactMatchesRebuild(spark, operators.Cdc.CdcTier)
   }
 
   test("append probe: batch 2 dedupes against base AND the appended batch-1 segment") {
