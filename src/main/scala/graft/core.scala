@@ -158,19 +158,22 @@ object Tables {
   }
 
   private val countMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
+    new java.util.concurrent.ConcurrentHashMap[(String, Long), java.lang.Long]()
 
-  /** Table row count memoized per (dir, table) for the quadratic-anchor
-    * guards: the refusal check must not re-run a count job on every
-    * DataFrame CONSTRUCTION (plan-only callers — explain, spec plan
-    * asserts — were paying a full scan per build).
+  /** Table row count memoized per (path, source stamp) for the
+    * quadratic-anchor guards: the refusal check must not re-run a count
+    * job on every DataFrame CONSTRUCTION (plan-only callers — explain,
+    * spec plan asserts — were paying a full scan per build). Keyed like
+    * `schemaMemo`, so a table rewritten in place is counted again.
     */
-  def cachedCount(spark: SparkSession, dir: String, name: String): Long =
+  def cachedCount(spark: SparkSession, dir: String, name: String): Long = {
+    val path = pathOf(dir, name)
     countMemo
       .computeIfAbsent(
-        s"$dir/$name",
+        (path, graft.sources.DerivedCache.sourceStamp(path)),
         _ => java.lang.Long.valueOf(table(spark, dir, name).count()))
       .longValue()
+  }
 
   def region(s: SparkSession, d: String)    = table(s, d, "region")
   def nation(s: SparkSession, d: String)    = table(s, d, "nation")

@@ -86,37 +86,18 @@ object Dedup {
     */
   private[graft] val PairBudget = 200000000L
 
-  private val pairMassMemo =
-    new java.util.concurrent.ConcurrentHashMap[(String, Long), java.lang.Long]()
-
-  private val tokenCountMemo =
-    new java.util.concurrent.ConcurrentHashMap[(String, Long), java.lang.Long]()
-
   /** Total whitespace-token count of the corpus, persisted per corpus
     * stamp exactly like [[exactPairMass]] (one narrow scan + a scalar
     * sum, no shuffle over shingles — strictly cheaper than the df
     * histogram). Feeds [[pairMassBound]].
     */
   private[graft] def cachedTokenCount(spark: SparkSession, dir: String): Long =
-    tokenCountMemo.computeIfAbsent(
-      (dir, graft.sources.DerivedCache.sourceStamp(s"$dir/documents.parquet")),
-      _ => {
-        val out = graft.sources.DerivedCache.dir(
-          dir, "token-count", "v=1") { o =>
-          val row = Tables.documents(spark, dir)
-            .agg(sum(size(split(col("text"), " ")).cast("long")).as("t"))
-            .first()
-          val t = if (row.isNullAt(0)) 0L else row.getLong(0)
-          java.nio.file.Files.createDirectories(java.nio.file.Paths.get(o))
-          java.nio.file.Files.write(
-            java.nio.file.Paths.get(s"$o/tokens.txt"),
-            t.toString.getBytes("UTF-8"))
-          ()
-        }
-        java.lang.Long.valueOf(new String(
-          java.nio.file.Files.readAllBytes(
-            java.nio.file.Paths.get(s"$out/tokens.txt")), "UTF-8").trim.toLong)
-      }).longValue()
+    graft.sources.DerivedCache.value(dir, "token-count", "v=1") {
+      val row = Tables.documents(spark, dir)
+        .agg(sum(size(split(col("text"), " ")).cast("long")).as("t"))
+        .first()
+      if (row.isNullAt(0)) 0L else row.getLong(0)
+    }
 
   /** SOUND upper bound on [[exactPairMass]], from the persisted token
     * count: every cold posting entry is one (shingle, doc) row, so
@@ -144,36 +125,21 @@ object Dedup {
     * pairCommonOf would emit, measured from the posting-list df
     * histogram BEFORE any expansion: one (hash → df) aggregate over the
     * shingle stream, no text, no pairs, ~the cheap first third of the
-    * jaccard plan. Memoized per corpus stamp for the JVM lifetime (one
-    * measurement serves all four exact-family queries in a run).
+    * jaccard plan. Persisted like the trained models: the measurement is
+    * a pure function of the corpus, so it is paid once EVER per corpus
+    * stamp — a fresh JVM (bench rerun, verify, driver) reads the scalar
+    * back instead of re-scanning the corpus.
     */
   private[graft] def exactPairMass(spark: SparkSession, dir: String): Long =
-    pairMassMemo.computeIfAbsent(
-      (dir, graft.sources.DerivedCache.sourceStamp(s"$dir/documents.parquet")),
-      _ => {
-        // persisted like the trained models: the measurement is a pure
-        // function of the corpus, so it is paid once EVER per corpus
-        // stamp — a fresh JVM (bench rerun, verify, driver) reads the
-        // scalar back instead of re-scanning the corpus
-        val out = graft.sources.DerivedCache.dir(
-          dir, "pair-mass", s"hot=$HotShingleCap;v=1") { o =>
-          val row = shingleIndex(Tables.documents(spark, dir))
-            .groupBy(col("h"))
-            .agg(count(lit(1)).as("n"))
-            .filter(col("n").between(2, HotShingleCap))
-            .agg(sum(expr("n * (n - 1) div 2")).as("mass"))
-            .first()
-          val mass = if (row.isNullAt(0)) 0L else row.getLong(0)
-          java.nio.file.Files.createDirectories(java.nio.file.Paths.get(o))
-          java.nio.file.Files.write(
-            java.nio.file.Paths.get(s"$o/mass.txt"),
-            mass.toString.getBytes("UTF-8"))
-          ()
-        }
-        java.lang.Long.valueOf(new String(
-          java.nio.file.Files.readAllBytes(
-            java.nio.file.Paths.get(s"$out/mass.txt")), "UTF-8").trim.toLong)
-      }).longValue()
+    graft.sources.DerivedCache.value(dir, "pair-mass", s"hot=$HotShingleCap;v=1") {
+      val row = shingleIndex(Tables.documents(spark, dir))
+        .groupBy(col("h"))
+        .agg(count(lit(1)).as("n"))
+        .filter(col("n").between(2, HotShingleCap))
+        .agg(sum(expr("n * (n - 1) div 2")).as("mass"))
+        .first()
+      if (row.isNullAt(0)) 0L else row.getLong(0)
+    }
 
   def dedupJaccard(spark: SparkSession, dir: String): DataFrame =
     dedupJaccardGuarded(spark, dir, ExactDocCap)
@@ -672,18 +638,15 @@ object Dedup {
     */
   private def minhashBands(
       spark: SparkSession, dir: String, k: Int): (DataFrame, DataFrame) = {
-    val d = graft.sources.DerivedCache.dir(
-      s"$dir/documents.parquet", "minhash-sigs", s"k=$k;v=1") { out =>
-      // the ONE signature kernel (minhashBandsOf) writes the store — a
-      // second inline copy here would let the stored full-corpus sketch
-      // drift from the sampled/incremental paths on a kernel change the
-      // manual v= bump missed
-      minhashBandsOf(Tables.documents(spark, dir), k, persistSigs = false)
-        ._1
-        .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-        .parquet(s"$out/sigs")
-    }
-    val sigs = spark.read.parquet(s"$d/sigs")
+    // the ONE signature kernel (minhashBandsOf) writes the store — a
+    // second inline copy here would let the stored full-corpus sketch
+    // drift from the sampled/incremental paths on a kernel change the
+    // manual v= bump missed
+    val sigs = graft.sources.DerivedCache.tables(
+      s"$dir/documents.parquet", "minhash-sigs", s"k=$k;v=1") {
+      _.table("sigs",
+        minhashBandsOf(Tables.documents(spark, dir), k, persistSigs = false)._1)
+    }.read(spark, "sigs")
     (sigs, bandsOf(sigs))
   }
 
@@ -1101,17 +1064,10 @@ object Dedup {
     */
   private def ccLabels(
       spark: SparkSession, dir: String, flavor: String, fingerprint: String)(
-      pairs: => DataFrame): DataFrame = {
-    val d = graft.sources.DerivedCache.dir(dir, s"dedup-cc-$flavor", fingerprint) {
-      out =>
-        Graph
-          .connectedComponents(pairs)
-          .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-          .parquet(s"$out/labels")
-        ()
-    }
-    spark.read.parquet(s"$d/labels")
-  }
+      pairs: => DataFrame): DataFrame =
+    graft.sources.DerivedCache.tables(dir, s"dedup-cc-$flavor", fingerprint) {
+      _.table("labels", Graph.connectedComponents(pairs))
+    }.read(spark, "labels")
 
   /** The stored exact-Jaccard CC label table (node, label) — factored
     * so the cross-tier pipeline report can read the SAME stored
@@ -2348,40 +2304,16 @@ object Dedup {
     * build-once/serve-many shape as the stored CC labels and the
     * persisted k-means model. `dedup_jaccard` the QUERY stays honest
     * compute (it is the thing the oracle checks); this cache serves only
-    * the queries that GRADE against the anchor. Explicit read schema so
-    * an empty-corpus build (no parquet data files) degrades to an empty
-    * frame instead of a schema-inference error.
+    * the queries that GRADE against the anchor.
     */
   private def jaccardAnchorStored(
-      spark: SparkSession, dir: String, docs: DataFrame, m: Long): DataFrame = {
-    val out = graft.sources.DerivedCache.dir(
-      dir, "jaccard-anchor", s"m=$m") { o =>
+      spark: SparkSession, dir: String, docs: DataFrame, m: Long): DataFrame =
+    graft.sources.DerivedCache.tables(dir, "jaccard-anchor", s"m=$m") {
       // unordered kernel: a parquet write needs no presentation sort,
       // and the RangePartitioning sampling pass would re-execute the
       // whole inverted-index subtree just to pick sort bounds
-      val df = dedupJaccardOfUnordered(docs)
-      df.write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(s"$o/pairs")
-      // as-written schema sidecar: the read path must match what THIS
-      // build wrote even under tolerated source-schema drift
-      java.nio.file.Files.write(
-        java.nio.file.Paths.get(s"$o/pairs.schema.json"),
-        df.schema.json.getBytes("UTF-8"))
-      ()
-    }
-    import org.apache.spark.sql.types._
-    val fallback = StructType(Seq(
-      StructField("doc_a", LongType),
-      StructField("doc_b", LongType),
-      StructField("common", LongType),
-      StructField("jaccard", DoubleType)))
-    val schema =
-      try DataType.fromJson(new String(
-        java.nio.file.Files.readAllBytes(
-          java.nio.file.Paths.get(s"$out/pairs.schema.json")), "UTF-8"))
-        .asInstanceOf[StructType]
-      catch { case _: Exception => fallback }
-    spark.read.schema(schema).parquet(s"$out/pairs")
-  }
+      _.table("pairs", dedupJaccardOfUnordered(docs))
+    }.read(spark, "pairs")
 
   private[graft] def lshBandSweepGuarded(
       spark: SparkSession, dir: String, cap: Long): DataFrame = {
@@ -2399,10 +2331,10 @@ object Dedup {
       // aggregation (band explode + corpus shuffle, ×3 configs) was
       // the dominant per-run cost. Keyed by (documents stamp, k, nb,
       // r, m); v=1 versions the banding layout.
-      val idx = graft.sources.DerivedCache.dir(
+      val buckets = graft.sources.DerivedCache.tables(
         s"$dir/documents.parquet", s"lsh-buckets-$nb",
-        s"k=$k;r=$r;m=$m;v=1") { out =>
-        sigs.select(
+        s"k=$k;r=$r;m=$m;v=1") {
+        _.table("buckets", sigs.select(
           col("doc_id"),
           explode(expr(
             s"""transform(sequence(0, ${nb - 1}), b -> struct(b AS band,
@@ -2410,19 +2342,8 @@ object Dedup {
             .as("lsh"))
           .select(col("doc_id"), col("lsh.band"), col("lsh.bh"))
           .groupBy(col("band"), col("bh"))
-          .agg(sort_array(collect_list(col("doc_id"))).as("docs"))
-          .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-          .parquet(s"$out/buckets")
-      }
-      val buckets = {
-        import org.apache.spark.sql.types._
-        spark.read
-          .schema(StructType(Seq(
-            StructField("band", IntegerType),
-            StructField("bh", StringType),
-            StructField("docs", ArrayType(LongType)))))
-          .parquet(s"$idx/buckets")
-      }
+          .agg(sort_array(collect_list(col("doc_id"))).as("docs")))
+      }.read(spark, "buckets")
       // thresholds in FULL-corpus units (size·m, not the sampled size):
       // a 150-copy group sampled 1/5 lands at ~30 docs, which must still
       // read as cap loss, not as a healthy bucket — otherwise the

@@ -86,23 +86,13 @@ object Similarity {
     * materializes its ground-truth neighbor table once per corpus and
     * serves every evaluation from it; this is that table.
     * ann_cosine_topk the QUERY stays honest compute (it is the thing
-    * the oracle checks). Explicit read schema so an empty-corpus build
-    * degrades to an empty frame (EmptyInputSpec contract).
+    * the oracle checks).
     */
-  private def annExactStored(spark: SparkSession, dir: String): DataFrame = {
-    val out = graft.sources.DerivedCache.dir(
-      dir, "ann-exact", s"q=$NumQueries;k=$TopK") { o =>
-      writeStored(annCosineTopK(spark, dir), o, "topk", Nil)
-    }
-    import org.apache.spark.sql.types._
-    spark.read
-      .schema(readStoredSchema(out, "topk", StructType(Seq(
-        StructField("q_id", LongType),
-        StructField("neighbor_id", LongType),
-        StructField("cos", DoubleType),
-        StructField("rn", LongType)))))
-      .parquet(s"$out/topk")
-  }
+  private def annExactStored(spark: SparkSession, dir: String): DataFrame =
+    graft.sources.DerivedCache.tables(
+      dir, "ann-exact", s"q=$NumQueries;k=$TopK") {
+      _.table("topk", annCosineTopK(spark, dir))
+    }.read(spark, "topk")
 
   private val annCosineTopKSql =
     s"""WITH e AS (
@@ -385,32 +375,6 @@ object Similarity {
       .orderBy(col("q_id"), col("rn"))
   }
 
-  /** Persist `df` under `out/$sub` plus its as-written schema as a
-    * sidecar (`$sub.schema.json`): serve paths read the stamp back
-    * instead of hard-coding column widths, so a tolerated source-schema
-    * drift (int32 vec_id, array<double> embedding) can never break a
-    * stored-index read while the class-level canary stays green.
-    */
-  private def writeStored(
-      df: DataFrame, out: String, sub: String, partitionCols: Seq[String]): Unit = {
-    val w = df.write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-    (if (partitionCols.nonEmpty) w.partitionBy(partitionCols: _*) else w)
-      .parquet(s"$out/$sub")
-    java.nio.file.Files.write(
-      java.nio.file.Paths.get(s"$out/$sub.schema.json"),
-      df.schema.json.getBytes("UTF-8"))
-    ()
-  }
-
-  private def readStoredSchema(
-      idx: String, sub: String,
-      fallback: org.apache.spark.sql.types.StructType): org.apache.spark.sql.types.StructType =
-    try org.apache.spark.sql.types.DataType.fromJson(new String(
-      java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get(s"$idx/$sub.schema.json")), "UTF-8"))
-      .asInstanceOf[org.apache.spark.sql.types.StructType]
-    catch { case _: Exception => fallback }
-
   /** Stored-index IVF — the index-build/serve split of a production
     * vector store (the ANN analog of dedup_incremental's stored base
     * index): the trained quantizer and the cell-partitioned corpus
@@ -427,44 +391,22 @@ object Similarity {
     GraftFunctions.register(spark)
     val k = 8; val iters = 3
     val rows = Tables.cachedCount(spark, dir, "embeddings")
-    val idx = graft.sources.DerivedCache.dir(
-      dir, "ann-ivf", s"rows=$rows;k=$k;iters=$iters") { out =>
+    val idx = graft.sources.DerivedCache.tables(
+      dir, "ann-ivf", s"rows=$rows;k=$k;iters=$iters") { b =>
       import spark.implicits._
-      def writeWithSchema(df: DataFrame, sub: String, partitionCols: Seq[String]): Unit =
-        writeStored(df, out, sub, partitionCols)
       val cents = trainCentroids(spark, dir, k, iters)
-      writeWithSchema(cents.toDF("cent_id", "cent_vec"), "cents", Nil)
+      b.table("cents", cents.toDF("cent_id", "cent_vec"))
       val e = corpus(spark, dir).select(
         col("vec_id"),
         expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("v"))
-      writeWithSchema(
+      b.table("cells",
         kmeansAssign(spark, e, cents)
           .join(corpus(spark, dir), "vec_id")
           .select(col("vec_id"), col("embedding"), col("cell")),
-        "cells", Seq("cell"))
-      ()
+        "cell")
     }
-    // explicit read schemas (an EMPTY corpus stores an index with no
-    // parquet data files, and schema inference would throw where every
-    // other query degrades to an empty result — EmptyInputSpec
-    // contract), loaded from the build-time stamp so they always match
-    // what was actually written; the literal fallback covers caches
-    // built before the stamp existed.
-    import org.apache.spark.sql.types._
-    def storedSchema(sub: String, fallback: StructType): StructType =
-      readStoredSchema(idx, sub, fallback)
-    val centsDf = broadcast(spark.read
-      .schema(storedSchema("cents", StructType(Seq(
-        StructField("cent_id", IntegerType),
-        StructField("cent_vec", ArrayType(DoubleType))))))
-      .parquet(s"$idx/cents"))
-    val assigned = spark.read
-      .schema(storedSchema("cells", StructType(Seq(
-        StructField("vec_id", LongType),
-        StructField("embedding", ArrayType(FloatType)),
-        StructField("cell", IntegerType)))))
-      .parquet(s"$idx/cells")
-    ivfProbeRank(spark, dir, assigned, centsDf)
+    ivfProbeRank(
+      spark, dir, idx.read(spark, "cells"), broadcast(idx.read(spark, "cents")))
   }
 
   private val annIvfTrainedSql = {
@@ -711,61 +653,23 @@ object Similarity {
       .select(col("vec_id"), col("m.cent_id").as("cell"), col("m.d2").as("d2"), col("v"))
   }
 
-  /** JVM-lifetime memo of trained quantizers (k·dim doubles each),
-    * backed by a PERSISTED model file (DerivedCache): training is
-    * deterministic in (dir, k, iters), so the Lloyd run is paid once
-    * EVER per corpus — the model-registry shape a production pipeline
-    * uses (train once, serve many). Every consumer in any later JVM
-    * (embedding_kmeans, ann_ivf_trained, the IVF/PQ builders, the
+  /** Trained quantizer (k·dim doubles), a PERSISTED model value:
+    * training is deterministic in (dir, k, iters), so the Lloyd run is
+    * paid once EVER per corpus — the model-registry shape a production
+    * pipeline uses (train once, serve many). Every consumer in any later
+    * JVM (embedding_kmeans, ann_ivf_trained, the IVF/PQ builders, the
     * nprobe curve) reads back the k·dim model instead of re-training —
     * this is what keeps ann_ivf_trained's cost order-independent in a
     * fresh bench JVM instead of "cheap only if embedding_kmeans ran
-    * first". Doubles are stored as raw long bits, so the round-trip is
-    * bit-exact and the served model is indistinguishable from a fresh
-    * train. A concurrent duplicate just retrains identically; the map
-    * only ever holds tiny k·dim arrays.
+    * first". The value round-trips bit-exactly, so the served model is
+    * indistinguishable from a fresh train.
     */
-  private val centroidCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, Long, Int, Int), Seq[(Int, Seq[Double])]]()
-
   private def trainCentroids(
       spark: SparkSession, dir: String,
       k: Int, iters: Int): Seq[(Int, Seq[Double])] =
-    // key carries the embeddings file-metadata stamp so an in-place
-    // testdata regeneration retrains instead of serving stale centroids
-    centroidCache.computeIfAbsent(
-      (dir, graft.sources.DerivedCache.sourceStamp(s"$dir/embeddings.parquet"),
-        k, iters),
-      _ => {
-        val model = graft.sources.DerivedCache.dir(
-          dir, "kmeans-model", s"k=$k;iters=$iters") { out =>
-          val cents = trainCentroidsImpl(spark, dir, k, iters)
-          val lines = cents.map { case (c, v) =>
-            s"$c\t${v.map(java.lang.Double.doubleToLongBits).mkString(",")}"
-          }
-          java.nio.file.Files.createDirectories(java.nio.file.Paths.get(out))
-          java.nio.file.Files.write(
-            java.nio.file.Paths.get(s"$out/centroids.tsv"),
-            lines.mkString("\n").getBytes("UTF-8"))
-          ()
-        }
-        try {
-          val txt = new String(
-            java.nio.file.Files.readAllBytes(
-              java.nio.file.Paths.get(s"$model/centroids.tsv")), "UTF-8")
-          txt.split("\n").filter(_.nonEmpty).toSeq.map { line =>
-            val Array(c, vs) = line.split("\t", 2)
-            (c.toInt,
-              if (vs.isEmpty) Seq.empty[Double]
-              else vs.split(",").toSeq.map(b =>
-                java.lang.Double.longBitsToDouble(b.toLong)))
-          }
-        } catch {
-          // unreadable/torn model file: fall back to a fresh train
-          // (identical result) rather than failing the query
-          case _: Exception => trainCentroidsImpl(spark, dir, k, iters)
-        }
-      })
+    graft.sources.DerivedCache.value(dir, "kmeans-model", s"k=$k;iters=$iters") {
+      trainCentroidsImpl(spark, dir, k, iters)
+    }
 
   /** The fixed-init Lloyd loop (first k vectors seed, `iters` steps,
     * exact DECIMAL per-dimension means) — the trained quantizer shared
@@ -1903,29 +1807,18 @@ object Similarity {
     */
   def annPqStored(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    import org.apache.spark.sql.types._
     val rows = Tables.cachedCount(spark, dir, "embeddings")
-    val idx = graft.sources.DerivedCache.dir(
-      dir, "ann-pq", s"rows=$rows;m=$PqM;k=$PqK;iters=$PqIters") { out =>
+    val idx = graft.sources.DerivedCache.tables(
+      dir, "ann-pq", s"rows=$rows;m=$PqM;k=$PqK;iters=$PqIters") { b =>
       val cents = trainPq(spark, dir)
-      writeStored(cents.toDF("sub", "cent_id", "cvec"), out, "books", Nil)
-      val packed = pqAssign(spark, pqSubspaces(spark, dir), cents)
+      b.table("books", cents.toDF("sub", "cent_id", "cvec"))
+      b.table("codes", pqAssign(spark, pqSubspaces(spark, dir), cents)
         .groupBy(col("vec_id"))
         .agg(expr("transform(array_sort(collect_list(struct(sub, cell))), p -> CAST(p.cell AS INT))")
-          .as("codes"))
-      writeStored(packed, out, "codes", Nil)
+          .as("codes")))
     }
-    val books = broadcast(spark.read
-      .schema(readStoredSchema(idx, "books", StructType(Seq(
-        StructField("sub", IntegerType),
-        StructField("cent_id", LongType),
-        StructField("cvec", ArrayType(DoubleType))))))
-      .parquet(s"$idx/books"))
-    val codes = spark.read
-      .schema(readStoredSchema(idx, "codes", StructType(Seq(
-        StructField("vec_id", LongType),
-        StructField("codes", ArrayType(IntegerType))))))
-      .parquet(s"$idx/codes")
+    val books = broadcast(idx.read(spark, "books"))
+    val codes = idx.read(spark, "codes")
       .select(col("vec_id"), posexplode(col("codes")).as(Seq("sub", "code")))
     pqAdcRank(spark, dir, codes,
       books.select(
@@ -1949,33 +1842,22 @@ object Similarity {
     GraftFunctions.register(spark)
     val k = 8; val iters = 3
     val rows = Tables.cachedCount(spark, dir, "embeddings")
-    val idx = graft.sources.DerivedCache.dir(
-      dir, "ann-ivf-base", s"rows=$rows;k=$k;iters=$iters") { out =>
+    val idx = graft.sources.DerivedCache.tables(
+      dir, "ann-ivf-base", s"rows=$rows;k=$k;iters=$iters") { b =>
       import spark.implicits._
       val baseE = corpus(spark, dir)
         .filter(col("vec_id") % 10 < 8)
         .select(col("vec_id"), expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("v"))
       val cents = trainCentroidsOf(spark, baseE, k, iters)
-      writeStored(cents.toDF("cent_id", "cent_vec"), out, "cents", Nil)
-      writeStored(
+      b.table("cents", cents.toDF("cent_id", "cent_vec"))
+      b.table("cells",
         kmeansAssign(spark, baseE, cents)
           .join(corpus(spark, dir), "vec_id")
           .select(col("vec_id"), col("embedding"), col("cell")),
-        out, "cells", Seq("cell"))
-      ()
+        "cell")
     }
-    import org.apache.spark.sql.types._
-    val centsDf = broadcast(spark.read
-      .schema(readStoredSchema(idx, "cents", StructType(Seq(
-        StructField("cent_id", IntegerType),
-        StructField("cent_vec", ArrayType(DoubleType))))))
-      .parquet(s"$idx/cents"))
-    val baseAssigned = spark.read
-      .schema(readStoredSchema(idx, "cells", StructType(Seq(
-        StructField("vec_id", LongType),
-        StructField("embedding", ArrayType(FloatType)),
-        StructField("cell", IntegerType)))))
-      .parquet(s"$idx/cells")
+    val centsDf = broadcast(idx.read(spark, "cents"))
+    val baseAssigned = idx.read(spark, "cells")
     // the incremental step: delta vectors against the STORED quantizer
     // (k·dim doubles — a bounded collect, the model-registry read)
     val cents = centsDf
@@ -2048,19 +1930,10 @@ object Similarity {
     // pattern): the curve prices probe widths against a BUILT index,
     // so the corpus assignment pass is a build-once artifact, not
     // per-run work
-    val assigned = {
-      val out = graft.sources.DerivedCache.dir(
-        dir, "ann-ivf-fixed", "cells=16") { o =>
-        writeStored(ivfAssigned(spark, dir, ivfCents(spark, dir)), o, "cells", Nil)
-      }
-      import org.apache.spark.sql.types._
-      spark.read
-        .schema(readStoredSchema(out, "cells", StructType(Seq(
-          StructField("vec_id", LongType),
-          StructField("cell", LongType), // cell = winning cent_id = a vec_id
-          StructField("embedding", ArrayType(FloatType))))))
-        .parquet(s"$out/cells")
-    }
+    val assigned = graft.sources.DerivedCache.tables(
+      dir, "ann-ivf-fixed", "cells=16") {
+      _.table("cells", ivfAssigned(spark, dir, ivfCents(spark, dir)))
+    }.read(spark, "cells")
     val probeRk = ivfProbeRanks(spark, dir, cents)
       .filter(col("rk") <= 4) // the widest arm
       .cutLineage()
@@ -2388,56 +2261,23 @@ object Similarity {
 
   // ------------------------------------------------------------ IVF-PQ
 
-  /** JVM-lifetime memo of the RESIDUAL codebooks (trained on v − c[cell],
-    * not raw vectors) — keyed like pqCache plus the coarse-quantizer
-    * params, since retraining the coarse cells changes every residual.
-    */
-  private val ivfPqCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, Long), Seq[(Int, Long, Seq[Double])]]()
-
-  /** Residual codebooks, PERSISTED like trainCentroids' model file
-    * (DerivedCache + raw long-bit doubles, bit-exact round trip) so the
-    * residual Lloyd run is paid once EVER per corpus stamp — every
-    * IVFADC consumer (ann_ivfpq, its stored index, the health audit,
-    * the nprobe curve) in any later JVM reads the m·k·dsub model back
-    * instead of re-training. `resSub` is by-name: a model-cache hit
-    * skips building the residual frame entirely.
+  /** RESIDUAL codebooks (trained on v − c[cell], not raw vectors),
+    * PERSISTED like trainCentroids' model — keyed on the coarse-quantizer
+    * params too, since retraining the coarse cells changes every
+    * residual — so the residual Lloyd run is paid once EVER per corpus
+    * stamp: every IVFADC consumer (ann_ivfpq, its stored index, the
+    * health audit, the nprobe curve) in any later JVM reads the
+    * m·k·dsub model back instead of re-training. `resSub` is by-name: a
+    * model hit skips building the residual frame entirely.
     */
   private def trainIvfPqBooks(
       spark: SparkSession, dir: String,
       resSub: => DataFrame): Seq[(Int, Long, Seq[Double])] =
-    ivfPqCache.computeIfAbsent(
-      (dir, graft.sources.DerivedCache.sourceStamp(s"$dir/embeddings.parquet")),
-      _ => {
-        def train() = trainPqOn(spark, resSub.select(col("sub"), col("vec_id"), col("v")))
-        val model = graft.sources.DerivedCache.dir(
-          dir, "ivfpq-books",
-          s"m=$PqM;k=$PqK;iters=$PqIters;coarse=${IvfPqCoarseK}x$IvfPqCoarseIters") { out =>
-          val lines = train().map { case (s, c, v) =>
-            s"$s\t$c\t${v.map(java.lang.Double.doubleToLongBits).mkString(",")}"
-          }
-          java.nio.file.Files.createDirectories(java.nio.file.Paths.get(out))
-          java.nio.file.Files.write(
-            java.nio.file.Paths.get(s"$out/books.tsv"),
-            lines.mkString("\n").getBytes("UTF-8"))
-          ()
-        }
-        try {
-          val txt = new String(
-            java.nio.file.Files.readAllBytes(
-              java.nio.file.Paths.get(s"$model/books.tsv")), "UTF-8")
-          txt.split("\n").filter(_.nonEmpty).toSeq.map { line =>
-            val Array(s, c, vs) = line.split("\t", 3)
-            (s.toInt, c.toLong,
-              if (vs.isEmpty) Seq.empty[Double]
-              else vs.split(",").toSeq.map(b =>
-                java.lang.Double.longBitsToDouble(b.toLong)))
-          }
-        } catch {
-          // unreadable/torn model file: fresh train (identical result)
-          case _: Exception => train()
-        }
-      })
+    graft.sources.DerivedCache.value(
+      dir, "ivfpq-books",
+      s"m=$PqM;k=$PqK;iters=$PqIters;coarse=${IvfPqCoarseK}x$IvfPqCoarseIters") {
+      trainPqOn(spark, resSub.select(col("sub"), col("vec_id"), col("v")))
+    }
 
   /** The (sub, vec_id, v, ivf_cell) residual-subspace frame behind
     * ann_ivfpq: assign each corpus vector to its trained coarse cell,
@@ -2573,41 +2413,31 @@ object Similarity {
     * vector in ONLY the cells it probes.
     */
   def annIvfPqStored(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.types._
     val k = IvfPqCoarseK; val iters = IvfPqCoarseIters
     val rows = Tables.cachedCount(spark, dir, "embeddings")
-    val idx = graft.sources.DerivedCache.dir(
+    val idx = graft.sources.DerivedCache.tables(
       dir, "ann-ivfpq",
-      s"rows=$rows;k=$k;iters=$iters;m=$PqM;pk=$PqK;pi=$PqIters") { out =>
+      s"rows=$rows;k=$k;iters=$iters;m=$PqM;pk=$PqK;pi=$PqIters") { b =>
       import spark.implicits._
       val cents = trainCentroids(spark, dir, k, iters)
       val resSub = ivfPqResidSubspaces(spark, dir, cents)
       val books = trainIvfPqBooks(spark, dir, resSub)
-      writeStored(books.toDF("sub", "cent_id", "cvec"), out, "books", Nil)
-      val packed = pqAssign(spark, resSub, books, keep = Seq("ivf_cell"))
-        .groupBy(col("vec_id"), col("ivf_cell"))
-        .agg(expr("transform(array_sort(collect_list(struct(sub, cell))), p -> CAST(p.cell AS INT))")
-          .as("codes"))
-      writeStored(packed, out, "codes", Seq("ivf_cell"))
+      b.table("books", books.toDF("sub", "cent_id", "cvec"))
+      b.table("codes",
+        pqAssign(spark, resSub, books, keep = Seq("ivf_cell"))
+          .groupBy(col("vec_id"), col("ivf_cell"))
+          .agg(expr("transform(array_sort(collect_list(struct(sub, cell))), p -> CAST(p.cell AS INT))")
+            .as("codes")),
+        "ivf_cell")
     }
-    val books = spark.read
-      .schema(readStoredSchema(idx, "books", StructType(Seq(
-        StructField("sub", IntegerType),
-        StructField("cent_id", LongType),
-        StructField("cvec", ArrayType(DoubleType))))))
-      .parquet(s"$idx/books")
+    val books = idx.read(spark, "books")
       .collect()
       .map(r => (r.getInt(0), r.getAs[Number](1).longValue, r.getSeq[Double](2).toSeq))
       .toSeq
       .sortBy(b => (b._1, b._2))
     // the coarse quantizer is the persisted kmeans model — a k·dim read
     val cents = trainCentroids(spark, dir, k, iters)
-    val codes = spark.read
-      .schema(readStoredSchema(idx, "codes", StructType(Seq(
-        StructField("vec_id", LongType),
-        StructField("codes", ArrayType(IntegerType)),
-        StructField("ivf_cell", IntegerType)))))
-      .parquet(s"$idx/codes")
+    val codes = idx.read(spark, "codes")
       .select(col("vec_id"), col("ivf_cell"), posexplode(col("codes")).as(Seq("sub", "code")))
       .select(col("sub"), col("vec_id"), col("ivf_cell"), col("code").cast("long").as("code"))
     ivfPqServe(spark, dir, codes, books, cents)

@@ -472,54 +472,29 @@ object TextAnalysis {
     // fingerprint = sketch parameters only: DerivedCache appends the
     // source-file stamp, which already invalidates on regenerated data —
     // the old rows=N component cost a count() job at plan construction
-    val modelDir = graft.sources.DerivedCache.dir(
-      dir, "lm-bigram-model", s"split=8of10;lambda=0.75;v=2") { out =>
+    val model = graft.sources.DerivedCache.tables(
+      dir, "lm-bigram-model", s"split=8of10;lambda=0.75;v=2") { b =>
       val base = Tables.documents(spark, dir).filter(col("doc_id") % 10 < 8)
       val (uni, bg, _) = lmScoreBigramCounts(base)
-      uni.write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(s"$out/uni")
-      bg.write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(s"$out/bg")
+      b.table("uni", uni)
+      b.table("bg", bg)
       // totals from the just-written unigram model (no second corpus pass)
-      spark.read.parquet(s"$out/uni")
-        .agg(sum(col("c1")).as("t_tokens"), count(lit(1)).as("v"))
-        .write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(s"$out/tot")
-      // vocab row count persisted as a SCALAR beside the model: the
+      b.table("tot", b.read(spark, "uni")
+        .agg(sum(col("c1")).as("t_tokens"), count(lit(1)).as("v")))
+      // vocab row count persisted as a VALUE beside the model: the
       // broadcast gate is a plan-construction decision, and a 1-row
       // tot.first() at serve is still a Spark job on a fresh JVM —
-      // training (already a job) writes it once, every later plan
-      // construction is a file read (round-13 verdict task 4)
-      val v = spark.read.parquet(s"$out/tot")
-        .select(col("v")).first().getLong(0)
-      java.nio.file.Files.write(
-        java.nio.file.Paths.get(s"$out/v.txt"), v.toString.getBytes("UTF-8"))
-      ()
+      // training (already a job) stores it once, every later plan
+      // construction reads it from the stamp (round-13 verdict task 4)
+      b.value("v", b.read(spark, "tot").select(col("v")).first().getLong(0))
     }
-    // model reads are schema-PINNED (the trainer owns this layout):
-    // a schema-less parquet read fires a footer-inference Spark job per
-    // plan construction, which is exactly the job-free-explain property
-    // this path guarantees
-    val tot = spark.read
-      .schema("t_tokens BIGINT, v BIGINT").parquet(s"$modelDir/tot")
-    val v = vocabMemo.computeIfAbsent(
-      modelDir, _ => java.lang.Long.valueOf(new String(
-        java.nio.file.Files.readAllBytes(
-          java.nio.file.Paths.get(s"$modelDir/v.txt")), "UTF-8").trim.toLong))
-      .longValue()
     lmScoreBigramServe(
       Tables.documents(spark, dir),
-      spark.read.schema("tok STRING, c1 BIGINT").parquet(s"$modelDir/uni"),
-      spark.read.schema("w1 STRING, w2 STRING, c2 BIGINT")
-        .parquet(s"$modelDir/bg"),
-      tot,
-      vocabRowsHint = Some(v))
+      model.read(spark, "uni"),
+      model.read(spark, "bg"),
+      model.read(spark, "tot"),
+      vocabRowsHint = Some(model.value[Long]("v")))
   }
-
-  private val vocabMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
-
-  /** Test hook: simulate a fresh JVM against a persisted model (the
-    * job-free-construction property Round14AdditionsSpec asserts).
-    */
-  private[graft] def clearVocabMemoForTest(): Unit = vocabMemo.clear()
 
   /** The count frames (unigram, bigram, totals) over a training split —
     * one definition shared by the persisted trainer above and

@@ -1,0 +1,301 @@
+package graft.sources
+
+import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.types.StructType
+
+/** Record of DerivedCache builds that actually RAN (cache misses) in
+  * this JVM — the instrumentation behind graft.Bench's builds line. A
+  * one-time stored-layout build landing inside a timed query reads as
+  * that query being slow (round 12: dedup_containment_minhash at 19.96 s
+  * driver vs 1.06 s warm was the first-touch corpus-sketch build);
+  * itemizing builds by layout name makes the driver artifact separate
+  * build bill from serve cost. Thread-safe; drain() empties the log.
+  */
+object BuildLog {
+  final case class Item(name: String, sec: Double)
+  private val q = new java.util.concurrent.ConcurrentLinkedQueue[Item]()
+  private[graft] def record(name: String, sec: Double): Unit = {
+    q.add(Item(name, sec)); ()
+  }
+  def drain(): Seq[Item] = {
+    val out = Seq.newBuilder[Item]
+    var it = q.poll()
+    while (it != null) { out += it; it = q.poll() }
+    out.result()
+  }
+}
+
+/** Build-once cache for DERIVED layouts under the system tmpdir, and the
+  * one owner of their on-disk format. The cache key carries a
+  * caller-supplied content FINGERPRINT (row counts, parameter constants)
+  * plus the source's file stamp, so regenerated testdata or changed
+  * sketch parameters rebuild instead of silently reusing a stale
+  * artifact; completion is marked by an explicit done-file written only
+  * after the build returns.
+  *
+  * Three entry points:
+  *  - [[tables]]: a build writes named parquet tables (and, rarely, a
+  *    small value beside them). Their schemas are stamped before the
+  *    done-file and every read uses the stamp — no footer-inference job
+  *    at plan construction, and an empty build (no data files) still
+  *    reads as an empty frame. A missing or unreadable stamp makes the
+  *    layout invalid, so it is rebuilt under its lock; a layout is never
+  *    read with a guessed schema.
+  *  - [[value]]: a small driver-side result (a count, a trained model)
+  *    persisted in the same stamp and memoized per JVM and source stamp.
+  *  - [[dir]]: a bare directory whose build owns its own format (the
+  *    StoredIndex bucketed tables, streaming source dirs).
+  */
+object DerivedCache {
+  /** File-metadata stamp of a source path (recursive size+mtime sum —
+    * no data scan): appended to every cache key so REGENERATED source
+    * data invalidates stored artifacts even when caller-level
+    * fingerprints (e.g. row counts) happen to collide. A row-count
+    * fingerprint alone cannot see a same-cardinality regeneration,
+    * and a stale stored index would silently diverge from an oracle
+    * that reads the fresh data.
+    */
+  private[graft] def sourceStamp(path: String): Long = {
+    def walk(f: java.io.File): Long =
+      if (f.isFile) f.length * 31 + f.lastModified
+      else Option(f.listFiles()).getOrElse(Array.empty).map(walk).sum
+    walk(new java.io.File(path))
+  }
+
+  /** 128-bit key: a 32-bit String.hashCode over long fingerprint strings
+    * WILL collide across a long-lived tmpdir (birthday bound ~77k keys);
+    * a collision here silently serves another layout's data.
+    */
+  private def digest(s: String): String = {
+    val md = java.security.MessageDigest.getInstance("SHA-256")
+    md.digest(s.getBytes("UTF-8")).take(16).map("%02x".format(_)).mkString
+  }
+
+  private def deleteRecursively(f: java.io.File): Unit = {
+    if (f.isDirectory)
+      Option(f.listFiles()).getOrElse(Array.empty).foreach(deleteRecursively)
+    f.delete(); ()
+  }
+
+  /** A bare layout dir: `build` writes whatever it likes under it. */
+  def dir(srcDir: String, name: String, fingerprint: String)(
+      build: String => Unit): String =
+    layout(srcDir, name, fingerprint)(build)(out => Some(out))
+
+  // ------------------------------------------------ stored tables/values
+
+  /** What a [[tables]] build writes through. `dir` is the layout dir, for
+    * scratch files a build needs on the way (they are not stamped).
+    */
+  final class Build private[DerivedCache] (val dir: String) {
+    private[DerivedCache] var schemas = Map.empty[String, StructType]
+    private[DerivedCache] var values  = Map.empty[String, Any]
+
+    /** Write `df` as the stored table `name`. */
+    def table(name: String, df: DataFrame, partitionBy: String*): Unit = {
+      val w = df.write.mode(SaveMode.Overwrite)
+      (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w)
+        .parquet(s"$dir/$name")
+      schemas += name -> df.schema
+    }
+
+    /** A table this build already wrote, read back with its schema. */
+    def read(spark: SparkSession, name: String): DataFrame =
+      spark.read.schema(schemas(name)).parquet(s"$dir/$name")
+
+    /** Persist a small driver-side value (Java-serializable). */
+    def value(name: String, v: Any): Unit = values += name -> v
+  }
+
+  /** A valid built layout: its tables' stamped schemas and its values. */
+  final case class Stored(
+      dir: String, schemas: Map[String, StructType], values: Map[String, Any]) {
+    def read(spark: SparkSession, name: String): DataFrame =
+      spark.read.schema(schemas(name)).parquet(s"$dir/$name")
+    def value[A](name: String): A = values(name).asInstanceOf[A]
+  }
+
+  /** Versions the stamp format; appended to every [[tables]] fingerprint
+    * so a layout written in an older format is never opened as this one.
+    */
+  private val Format = "fmt=stamp1"
+  private val StampFile = "_GRAFT_STAMP"
+
+  /** The layout `name`, built by `build` on a miss. */
+  def tables(src: String, name: String, fingerprint: String)(
+      build: Build => Unit): Stored =
+    layout(src, name, s"$fingerprint;$Format") { out =>
+      val b = new Build(out)
+      build(b)
+      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(out))
+      val os = new java.io.ObjectOutputStream(
+        java.nio.file.Files.newOutputStream(java.nio.file.Paths.get(out, StampFile)))
+      try os.writeObject((b.schemas, b.values)) finally os.close()
+    } { out =>
+      val is = new java.io.ObjectInputStream(
+        java.nio.file.Files.newInputStream(java.nio.file.Paths.get(out, StampFile)))
+      // the stamp is read back from a shared tmpdir: deserialize only
+      // plain data (boxed scalars, Scala collections, Spark types)
+      is.setObjectInputFilter(StampFilter)
+      try {
+        val (schemas, values) =
+          is.readObject().asInstanceOf[(Map[String, StructType], Map[String, Any])]
+        Some(Stored(out, schemas, values))
+      } finally is.close()
+    }
+
+  private val StampFilter = java.io.ObjectInputFilter.Config.createFilter(
+    "java.lang.*;java.util.*;java.math.*;scala.**;org.apache.spark.sql.types.*;!*")
+
+  private val memo =
+    new java.util.concurrent.ConcurrentHashMap[(String, String, String, Long), AnyRef]()
+
+  /** A small driver-side result persisted as the layout `name` and
+    * memoized per (source stamp, fingerprint) for the JVM lifetime: a
+    * hit costs the source-stamp walk only, a regenerated source
+    * recomputes. One encoding for every value (Java serialization —
+    * doubles round-trip bit-exactly); a torn or unreadable value is
+    * recomputed. `compute` must be deterministic: a concurrent duplicate
+    * just computes the same value twice.
+    */
+  def value[A](src: String, name: String, fingerprint: String)(compute: => A): A = {
+    val key = (src, name, fingerprint, sourceStamp(src))
+    memo.get(key) match {
+      case null =>
+        val v = tables(src, name, fingerprint)(_.value(name, compute)).value[A](name)
+        memo.putIfAbsent(key, v.asInstanceOf[AnyRef])
+        v
+      case hit => hit.asInstanceOf[A]
+    }
+  }
+
+  /** Forget every memoized value (a fresh JVM against the stored layouts). */
+  private[graft] def resetMemo(): Unit = memo.clear()
+
+  // ------------------------------------------------------------- layouts
+
+  /** The build/validity/lock protocol shared by every entry point:
+    * `load` opens a built layout, and None (or an exception) marks it
+    * invalid, which rebuilds it under its lock.
+    */
+  private def layout[A](srcDir: String, name: String, fingerprint: String)(
+      build: String => Unit)(load: String => Option[A]): A = {
+    val fp   = s"$fingerprint;src=${sourceStamp(srcDir)}"
+    val key  = digest(srcDir + "|" + fp)
+    val base = sys.props("java.io.tmpdir").stripSuffix("/")
+    val out  = s"$base/graft-$name-$key"
+    val done = new java.io.File(out, "_GRAFT_DONE")
+    // reuse is valid only if the done-file's recorded fingerprint matches
+    // EXACTLY — guards torn builds (done written, content stale) and the
+    // residual digest-collision case the key alone can't rule out — and
+    // the layout loads. Any error (file vanished between exists and read
+    // — cross-process rebuild window, eviction race — or a torn stamp)
+    // degrades to "invalid, rebuild under lock" instead of throwing.
+    def valid(): Option[A] =
+      try {
+        if (done.exists() && new String(
+            java.nio.file.Files.readAllBytes(done.toPath), "UTF-8") == fp) load(out)
+        else None
+      } catch { case _: Exception => None }
+    // PER-KEY monitor, not a JVM-global one: while one thread blocks on
+    // another PROCESS's file lock for a slow build, requests for other
+    // (already-built) layouts must keep their fast path
+    val mon = keyLocks.computeIfAbsent(out, _ => new Object)
+    val loaded = mon.synchronized {
+      val got = valid().getOrElse {
+        // cross-PROCESS exclusion: sbt test and a bench JVM can race the
+        // same derived layout; serialize builders on a tmpdir lock file
+        // (the per-key monitor above only covers in-process races)
+        val lockPath = java.nio.file.Paths.get(s"$out.lock")
+        val ch = java.nio.channels.FileChannel.open(
+          lockPath,
+          java.nio.file.StandardOpenOption.CREATE,
+          java.nio.file.StandardOpenOption.WRITE)
+        try {
+          val lock = ch.lock()
+          try {
+            valid().getOrElse { // losing racer: winner built it while we waited
+              deleteRecursively(new java.io.File(out))
+              val t0 = System.nanoTime()
+              build(out)
+              BuildLog.record(name, (System.nanoTime() - t0) / 1e9)
+              java.nio.file.Files.createDirectories(done.toPath.getParent)
+              java.nio.file.Files.write(done.toPath, fp.getBytes("UTF-8"))
+              valid().getOrElse(
+                throw new IllegalStateException(s"layout $out does not load after its build"))
+            }
+          } finally lock.release()
+        } finally ch.close()
+      }
+      // LRU stamp: the done-file's mtime records last USE, not last
+      // build — prune() below orders eviction candidates by it
+      done.setLastModified(System.currentTimeMillis())
+      got
+    }
+    prune(base, out)
+    loaded
+  }
+
+  /** Size-capped LRU eviction over the whole derived-cache tmpdir: a
+    * long-lived machine otherwise accumulates one stored layout per
+    * (rows, params) permutation across every testdata regeneration.
+    * Policy: scan `graft-*-<key>` dirs carrying a done-file, and while
+    * the total exceeds the cap delete the least-recently-USED first —
+    * skipping `keep` (the layout the caller is about to read), anything
+    * used within the min-age window (a concurrent reader has, by
+    * definition, just stamped it), and anything whose build lock is
+    * currently held. Best-effort by design: eviction failure must never
+    * fail the query that triggered it.
+    */
+  private[graft] def prune(base: String, keep: String): Unit =
+    try {
+      val capBytes =
+        sys.props.get("graft.derivedCache.capBytes").map(_.toLong)
+          .getOrElse(4L * 1024 * 1024 * 1024)
+      val minAgeMs =
+        sys.props.get("graft.derivedCache.minAgeMs").map(_.toLong)
+          .getOrElse(10L * 60 * 1000)
+      val keyDir = "^graft-.+-[0-9a-f]{32}$".r
+      def sizeOf(f: java.io.File): Long =
+        if (f.isFile) f.length
+        else Option(f.listFiles()).getOrElse(Array.empty).map(sizeOf).sum
+      val entries = Option(new java.io.File(base).listFiles())
+        .getOrElse(Array.empty)
+        .filter(f => f.isDirectory && keyDir.matches(f.getName))
+        .flatMap { d =>
+          val done = new java.io.File(d, "_GRAFT_DONE")
+          if (done.exists()) Some((d, done.lastModified(), sizeOf(d))) else None
+        }
+      var excess = entries.map(_._3).sum - capBytes
+      if (excess > 0) {
+        val now = System.currentTimeMillis()
+        entries
+          .sortBy(_._2) // least-recently-used first
+          .iterator
+          .takeWhile(_ => excess > 0)
+          .foreach { case (d, used, size) =>
+            val lockHeld = {
+              val lockPath = java.nio.file.Paths.get(s"${d.getPath}.lock")
+              try {
+                val ch = java.nio.channels.FileChannel.open(
+                  lockPath,
+                  java.nio.file.StandardOpenOption.CREATE,
+                  java.nio.file.StandardOpenOption.WRITE)
+                try {
+                  val l = ch.tryLock()
+                  if (l == null) true else { l.release(); false }
+                } finally ch.close()
+              } catch { case _: java.io.IOException => true }
+            }
+            if (d.getPath != keep && now - used >= minAgeMs && !lockHeld) {
+              deleteRecursively(d)
+              new java.io.File(s"${d.getPath}.lock").delete()
+              excess -= size
+            }
+          }
+      }
+    } catch { case _: Exception => () }
+
+  private val keyLocks =
+    new java.util.concurrent.ConcurrentHashMap[String, Object]()
+}

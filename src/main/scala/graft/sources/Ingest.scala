@@ -151,15 +151,16 @@ object Ingest {
     * JSON ARRAY files (each file is one `[ {...}, ... ]` array — the
     * generator's chunk format, assembled per partition so the publish
     * stays distributed) → [[readJson]] with the explicit schema →
-    * parquet. Returns the parquet dir. Chunk count scales with input
-    * size (≈[[ChunkRows]] source rows per chunk, floor 4), and each
+    * parquet. Returns the stored layout (table `store`; the JSON chunks
+    * stay under its dir as `json`). Chunk count scales with input size
+    * (≈[[ChunkRows]] source rows per chunk, floor 4), and each
     * chunk streams row-by-row through the text writer — no partition
     * ever concatenates into a single in-memory string.
     */
-  private[graft] def roundtripStore(spark: SparkSession, dir: String): String = {
+  private[graft] def roundtripStore(spark: SparkSession, dir: String): DerivedCache.Stored = {
     val rows   = Tables.cachedCount(spark, dir, "events")
     val chunks = math.max(4L, (rows + ChunkRows - 1) / ChunkRows).toInt
-    DerivedCache.dir(dir, "ingest-roundtrip", s"events=$rows;chunks=$chunks;v=2") { out =>
+    DerivedCache.tables(dir, "ingest-roundtrip", s"events=$rows;chunks=$chunks;v=2") { b =>
       import spark.implicits._
       sessionDocs(spark, dir)
         .repartition(chunks, col("user_id"))
@@ -180,11 +181,9 @@ object Ingest {
             Iterator("[") ++ body ++ Iterator("]")
           }
         }
-        .write.mode(SaveMode.Overwrite).text(s"$out/json")
-      readJson(spark, s"$out/json", SessionDocSchema)
-        .write.mode(SaveMode.Overwrite).parquet(s"$out/store")
-      ()
-    } + "/store"
+        .write.mode(SaveMode.Overwrite).text(s"${b.dir}/json")
+      b.table("store", readJson(spark, s"${b.dir}/json", SessionDocSchema))
+    }
   }
 
   /** The §7.1.5 count verification, over the ROUND-TRIPPED parquet (not
@@ -195,7 +194,7 @@ object Ingest {
     * preserved every nested entity exactly.
     */
   def ingestRoundtrip(spark: SparkSession, dir: String): DataFrame = {
-    val docs = spark.read.parquet(roundtripStore(spark, dir))
+    val docs = roundtripStore(spark, dir).read(spark, "store")
     val cartLines = docs.select(explode(col("cart_contents")).as(Seq("k", "v")))
     val base = docs.agg(
       count(lit(1)).as("n_sessions"),

@@ -32,188 +32,6 @@ import scala.jdk.CollectionConverters._
   * per ~64 files), not a driver loop — a million-file table's manifest
   * build is itself distributed.
   */
-/** Build-once cache for DERIVED layouts under the system tmpdir — the
-  * shared idiom behind [[StatsManifest.manifestRangeScan]]'s day layout
-  * and graft.operators.Dedup's stored base index. The cache key carries
-  * a caller-supplied content FINGERPRINT (row counts, parameter
-  * constants) in addition to the source path, so regenerated testdata
-  * or changed sketch parameters rebuild instead of silently reusing a
-  * stale artifact; completion is marked by an explicit done-file
-  * written only after `build` returns.
-  */
-/** Record of DerivedCache builds that actually RAN (cache misses) in
-  * this JVM — the instrumentation behind graft.Bench's builds line. A
-  * one-time stored-layout build landing inside a timed query reads as
-  * that query being slow (round 12: dedup_containment_minhash at 19.96 s
-  * driver vs 1.06 s warm was the first-touch corpus-sketch build);
-  * itemizing builds by layout name makes the driver artifact separate
-  * build bill from serve cost. Thread-safe; drain() empties the log.
-  */
-object BuildLog {
-  final case class Item(name: String, sec: Double)
-  private val q = new java.util.concurrent.ConcurrentLinkedQueue[Item]()
-  private[graft] def record(name: String, sec: Double): Unit = {
-    q.add(Item(name, sec)); ()
-  }
-  def drain(): Seq[Item] = {
-    val out = Seq.newBuilder[Item]
-    var it = q.poll()
-    while (it != null) { out += it; it = q.poll() }
-    out.result()
-  }
-}
-
-object DerivedCache {
-  /** File-metadata stamp of a source path (recursive size+mtime sum —
-    * no data scan): appended to every cache key so REGENERATED source
-    * data invalidates stored artifacts even when caller-level
-    * fingerprints (e.g. row counts) happen to collide. A row-count
-    * fingerprint alone cannot see a same-cardinality regeneration,
-    * and a stale stored index would silently diverge from an oracle
-    * that reads the fresh data.
-    */
-  private[graft] def sourceStamp(path: String): Long = {
-    def walk(f: java.io.File): Long =
-      if (f.isFile) f.length * 31 + f.lastModified
-      else Option(f.listFiles()).getOrElse(Array.empty).map(walk).sum
-    walk(new java.io.File(path))
-  }
-
-  /** 128-bit key: a 32-bit String.hashCode over long fingerprint strings
-    * WILL collide across a long-lived tmpdir (birthday bound ~77k keys);
-    * a collision here silently serves another layout's data.
-    */
-  private def digest(s: String): String = {
-    val md = java.security.MessageDigest.getInstance("SHA-256")
-    md.digest(s.getBytes("UTF-8")).take(16).map("%02x".format(_)).mkString
-  }
-
-  private def deleteRecursively(f: java.io.File): Unit = {
-    if (f.isDirectory)
-      Option(f.listFiles()).getOrElse(Array.empty).foreach(deleteRecursively)
-    f.delete(); ()
-  }
-
-  def dir(srcDir: String, name: String, fingerprint: String)(
-      build: String => Unit): String = {
-    val fp   = s"$fingerprint;src=${sourceStamp(srcDir)}"
-    val key  = digest(srcDir + "|" + fp)
-    val base = sys.props("java.io.tmpdir").stripSuffix("/")
-    val out  = s"$base/graft-$name-$key"
-    val done = new java.io.File(out, "_GRAFT_DONE")
-    // reuse is valid only if the done-file's recorded fingerprint matches
-    // EXACTLY — guards torn builds (done written, content stale) and the
-    // residual digest-collision case the key alone can't rule out. Any
-    // IO error (file vanished between exists and read — cross-process
-    // rebuild window, eviction race) degrades to "invalid, rebuild
-    // under lock" instead of throwing out of dir().
-    def valid(): Boolean =
-      try {
-        done.exists() && new String(
-          java.nio.file.Files.readAllBytes(done.toPath), "UTF-8") == fp
-      } catch { case _: java.io.IOException => false }
-    // PER-KEY monitor, not a JVM-global one: while one thread blocks on
-    // another PROCESS's file lock for a slow build, requests for other
-    // (already-built) layouts must keep their fast path
-    val mon = keyLocks.computeIfAbsent(out, _ => new Object)
-    mon.synchronized {
-      if (!valid()) {
-        // cross-PROCESS exclusion: sbt test and a bench JVM can race the
-        // same derived layout; serialize builders on a tmpdir lock file
-        // (the per-key monitor above only covers in-process races)
-        val lockPath = java.nio.file.Paths.get(s"$out.lock")
-        val ch = java.nio.channels.FileChannel.open(
-          lockPath,
-          java.nio.file.StandardOpenOption.CREATE,
-          java.nio.file.StandardOpenOption.WRITE)
-        try {
-          val lock = ch.lock()
-          try {
-            if (!valid()) { // losing racer: winner built it while we waited
-              deleteRecursively(new java.io.File(out))
-              val t0 = System.nanoTime()
-              build(out)
-              BuildLog.record(name, (System.nanoTime() - t0) / 1e9)
-              java.nio.file.Files.createDirectories(done.toPath.getParent)
-              java.nio.file.Files.write(done.toPath, fp.getBytes("UTF-8"))
-              ()
-            }
-          } finally lock.release()
-        } finally ch.close()
-      }
-      // LRU stamp: the done-file's mtime records last USE, not last
-      // build — prune() below orders eviction candidates by it
-      done.setLastModified(System.currentTimeMillis())
-      ()
-    }
-    prune(base, out)
-    out
-  }
-
-  /** Size-capped LRU eviction over the whole derived-cache tmpdir: a
-    * long-lived machine otherwise accumulates one stored layout per
-    * (rows, params) permutation across every testdata regeneration.
-    * Policy: scan `graft-*-<key>` dirs carrying a done-file, and while
-    * the total exceeds the cap delete the least-recently-USED first —
-    * skipping `keep` (the layout the caller is about to read), anything
-    * used within the min-age window (a concurrent reader has, by
-    * definition, just stamped it), and anything whose build lock is
-    * currently held. Best-effort by design: eviction failure must never
-    * fail the query that triggered it.
-    */
-  private[graft] def prune(base: String, keep: String): Unit =
-    try {
-      val capBytes =
-        sys.props.get("graft.derivedCache.capBytes").map(_.toLong)
-          .getOrElse(4L * 1024 * 1024 * 1024)
-      val minAgeMs =
-        sys.props.get("graft.derivedCache.minAgeMs").map(_.toLong)
-          .getOrElse(10L * 60 * 1000)
-      val keyDir = "^graft-.+-[0-9a-f]{32}$".r
-      def sizeOf(f: java.io.File): Long =
-        if (f.isFile) f.length
-        else Option(f.listFiles()).getOrElse(Array.empty).map(sizeOf).sum
-      val entries = Option(new java.io.File(base).listFiles())
-        .getOrElse(Array.empty)
-        .filter(f => f.isDirectory && keyDir.matches(f.getName))
-        .flatMap { d =>
-          val done = new java.io.File(d, "_GRAFT_DONE")
-          if (done.exists()) Some((d, done.lastModified(), sizeOf(d))) else None
-        }
-      var excess = entries.map(_._3).sum - capBytes
-      if (excess > 0) {
-        val now = System.currentTimeMillis()
-        entries
-          .sortBy(_._2) // least-recently-used first
-          .iterator
-          .takeWhile(_ => excess > 0)
-          .foreach { case (d, used, size) =>
-            val lockHeld = {
-              val lockPath = java.nio.file.Paths.get(s"${d.getPath}.lock")
-              try {
-                val ch = java.nio.channels.FileChannel.open(
-                  lockPath,
-                  java.nio.file.StandardOpenOption.CREATE,
-                  java.nio.file.StandardOpenOption.WRITE)
-                try {
-                  val l = ch.tryLock()
-                  if (l == null) true else { l.release(); false }
-                } finally ch.close()
-              } catch { case _: java.io.IOException => true }
-            }
-            if (d.getPath != keep && now - used >= minAgeMs && !lockHeld) {
-              deleteRecursively(d)
-              new java.io.File(s"${d.getPath}.lock").delete()
-              excess -= size
-            }
-          }
-      }
-    } catch { case _: Exception => () }
-
-  private val keyLocks =
-    new java.util.concurrent.ConcurrentHashMap[String, Object]()
-}
-
 object StatsManifest {
 
   final case class FileStats(

@@ -184,13 +184,13 @@ object DocStreams {
     // stored per-lang thresholds: exact DECIMAL power sums, the
     // quality_adaptive_gate recipe (builtin stddev is partition-order-
     // dependent and can never hash-match), NULL below n=2
-    val thrDir = graft.sources.DerivedCache.dir(
-      dir, "quality-thresholds", s"rows=$rows;v=1") { out =>
+    val thr = graft.sources.DerivedCache.tables(
+      dir, "quality-thresholds", s"rows=$rows;v=1") { b =>
       val nD = col("n").cast("double")
       val mean = col("s1") / nD
       val sd = sqrt(greatest(
         (col("s2") - col("s1") * col("s1") / nD) / (nD - 1.0), lit(0.0)))
-      docs
+      b.table("thr", docs
         .filter(col("doc_id") % 10 < 8)
         .select(col("lang"), score.as("score"))
         .groupBy(col("lang"))
@@ -201,11 +201,8 @@ object DocStreams {
         .select(
           col("lang"),
           when(col("n") < 2, lit(null).cast("double"))
-            .otherwise(mean - sd).as("threshold"))
-        .write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(s"$out/thr")
-      ()
-    }
-    val thr = spark.read.parquet(s"$thrDir/thr")
+            .otherwise(mean - sd).as("threshold")))
+    }.read(spark, "thr")
     val delta = docs
       .filter((col("doc_id") % 10) >= 8)
       .select(col("doc_id"), col("lang"), col("text"))
@@ -301,10 +298,10 @@ object DocStreams {
   def streamMixIngest(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(spark, dir)
     val rows = Tables.cachedCount(spark, dir, "documents")
-    val planDir = graft.sources.DerivedCache.dir(
+    val plan = graft.sources.DerivedCache.tables(
       dir, "mix-plan-base",
       s"rows=$rows;budget=${graft.operators.Curation.BudgetMultiple};" +
-        s"cap=${graft.operators.Curation.MaxEpochs};v=1") { out =>
+        s"cap=${graft.operators.Curation.MaxEpochs};v=1") { b =>
       val base = docs
         .filter(col("doc_id") % 10 < 8)
         .select(col("source"), size(split(col("text"), " ")).cast("long").as("nt"))
@@ -315,7 +312,7 @@ object DocStreams {
       val denom = per.agg(
         sum(col("sq").cast(graft.Det.Fine)).cast("double").as("sq_sum"),
         sum(col("avail_tokens")).as("total_tokens"))
-      per
+      b.table("plan", per
         .crossJoin(broadcast(denom))
         .select(
           col("source").as("psrc"),
@@ -323,11 +320,8 @@ object DocStreams {
             lit(graft.operators.Curation.MaxEpochs),
             (col("sq") / col("sq_sum")) *
               (lit(graft.operators.Curation.BudgetMultiple) * col("total_tokens").cast("double"))
-              / col("avail_tokens").cast("double")).as("epochs"))
-        .write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(s"$out/plan")
-      ()
-    }
-    val plan = spark.read.parquet(s"$planDir/plan")
+              / col("avail_tokens").cast("double")).as("epochs")))
+    }.read(spark, "plan")
     val delta = docs
       .filter((col("doc_id") % 10) >= 8)
       .select(col("doc_id"), col("source"), col("text"))

@@ -49,13 +49,7 @@ import org.apache.spark.sql.types._
   * terminates.
   *
   * Disable with `spark.graft.rangeJoinRewrite.enabled=false` (specs use
-  * this to diff plans and results against the nested-loop form). With
-  * `spark.graft.rangeJoinRewrite.bandEquiJoins=true` (default false) the
-  * rule also fires on joins that DO have an equi key, appending the band
-  * bucket to the hash key — per-key candidate volume drops from O(rows
-  * per key)² to O(rows per key within 2 band widths), the skew remedy
-  * for hot keys in time-band joins, at the cost of a 2× right-side
-  * replication.
+  * this to diff plans and results against the nested-loop form).
   */
 object RangeJoinRewrite extends Rule[LogicalPlan] with PredicateHelper {
 
@@ -67,23 +61,10 @@ object RangeJoinRewrite extends Rule[LogicalPlan] with PredicateHelper {
       cond: Expression,
       hint: JoinHint): Option[LogicalPlan] = {
     val conjuncts = splitConjunctivePredicates(cond)
-    // never re-fire on a join this rule already built (its bucket-id
-    // conjunct would otherwise read as a fresh equi key in band-equi mode)
+    // never re-fire on a join this rule (or the interval rewrite) built
     if (conjuncts.exists(_.references.exists(a =>
         a.name == "__graft_band" || a.name == "__graft_bin"))) return None
-    // With an equi key present Spark already hash-partitions; appending
-    // the band bucket to the join key additionally bounds the per-key
-    // candidate volume (a hot key's rows only meet neighbors within 2
-    // band widths instead of its whole partition). That trades a 2×
-    // right-side replication for skew resistance, so it is opt-in:
-    // spark.graft.rangeJoinRewrite.bandEquiJoins=true.
-    val equiMode = SQLConf.get
-      .getConfString("spark.graft.rangeJoinRewrite.bandEquiJoins", "false") == "true"
-    if (hasCrossEquiKey(conjuncts, l, r) && !equiMode) return None
-    val equiConjs = conjuncts.filter(c => c match {
-      case EqualTo(_, _) | EqualNullSafe(_, _) => hasCrossEquiKey(Seq(c), l, r)
-      case _                                   => false
-    })
+    if (hasCrossEquiKey(conjuncts, l, r)) return None
     val bands = conjuncts.flatMap(bandOf(_, l, r))
     // pick the first attribute pair carrying both an upper and a lower bound
     val byPair = bands.groupBy(b => (b.la.exprId, b.rb.exprId))
@@ -126,8 +107,7 @@ object RangeJoinRewrite extends Rule[LogicalPlan] with PredicateHelper {
           qualifier = None,
           generatorOutput = Seq(rBandAttr),
           child = r)
-        val joinCond = (equiConjs :+ EqualTo(lBand.toAttribute, rBandAttr))
-          .reduce[Expression](And)
+        val joinCond = EqualTo(lBand.toAttribute, rBandAttr)
         val banded = Join(leftProj, gen, Inner, Some(joinCond), hint)
         Project(l.output ++ r.output, Filter(cond, banded))
       }

@@ -45,7 +45,7 @@ class IngestSpec extends AnyFunSuite {
     // read → parquet) must equal the source-derived docs row for row —
     // nested page_views array, viewed_products, and the cart MAP included
     val store = Ingest.roundtripStore(spark, TestSpark.Sf)
-    val back  = spark.read.parquet(store)
+    val back  = store.read(spark, "store")
     assert(back.schema === Ingest.SessionDocSchema)
     val src = Ingest.sessionDocs(spark, TestSpark.Sf)
     assert(back.count() === src.count())
@@ -61,7 +61,7 @@ class IngestSpec extends AnyFunSuite {
     assert(canon(back) === canon(src))
     // the published files really are multiline JSON ARRAYS (the
     // generator's chunk format), one array per chunk file
-    val jsonDir = new java.io.File(store.stripSuffix("/store") + "/json")
+    val jsonDir = new java.io.File(store.dir, "json")
     val chunks = jsonDir.listFiles().filter(_.getName.endsWith(".txt"))
     assert(chunks.nonEmpty)
     chunks.foreach { f =>

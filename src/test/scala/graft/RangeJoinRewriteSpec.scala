@@ -1,6 +1,5 @@
 package graft
 
-import graft.operators.AsOf
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.classic.{Dataset => CDataset}
 import org.apache.spark.sql.functions._
@@ -111,33 +110,5 @@ class RangeJoinRewriteSpec extends AnyFunSuite {
 
   test("point band (upper == lower) still joins correctly") {
     sameResults(xs.join(ys, col("x") - col("y") >= 4 && col("x") - col("y") <= 4))
-  }
-
-  test("opt-in band-equi mode appends the bucket to an existing equi key") {
-    val EquiFlag = "spark.graft.rangeJoinRewrite.bandEquiJoins"
-    val bandUs   = 24L * 3600 * 1000 * 1000
-    def naive = {
-      val ev = Tables.events(spark, TestSpark.Sf)
-        .select(col("user_id"), col("ts").as("t"))
-      val a = ev.select(col("user_id"), col("t").as("at"))
-      val b = ev.select(col("user_id").as("user_id_b"), col("t").as("bt"))
-      a.join(b,
-          col("user_id") === col("user_id_b") &&
-            col("bt") > col("at") && col("bt") - col("at") <= bandUs)
-        .groupBy(col("user_id"))
-        .agg(count(lit(1)).as("n_pairs"), min(col("bt") - col("at")).as("min_gap_us"))
-        .orderBy(col("user_id"))
-    }
-    assert(!physical(naive).contains("__graft_band"),
-      "band-equi rewrite must be opt-in")
-    spark.conf.set(EquiFlag, "true")
-    try {
-      assert(physical(naive).contains("__graft_band"),
-        s"band-equi mode did not band the join:\n${physical(naive)}")
-      // must match the hand-banded operator row for row
-      val auto = naive.collect().toSeq
-      val hand = AsOf.nearEventPairs(spark, TestSpark.Sf).collect().toSeq
-      assert(auto == hand, "auto-banded equi join diverges from hand-banded form")
-    } finally spark.conf.set(EquiFlag, "false")
   }
 }

@@ -65,7 +65,7 @@ class Round14AdditionsSpec extends AnyFunSuite {
     import org.apache.spark.sql.Row
     val q = SparkEntry.queries("lm_score_bigram")
     q(spark, TestSpark.Sf) // builds model on first touch
-    operators.TextAnalysis.clearVocabMemoForTest()
+    sources.DerivedCache.resetMemo()
     val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
     val descs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     val l = new org.apache.spark.scheduler.SparkListener {

@@ -122,52 +122,6 @@ class StatsManifestSpec extends AnyFunSuite {
     assert(rows.toSeq === full.toSeq)
   }
 
-  test("DerivedCache evicts least-recently-used layouts past the size cap") {
-    import graft.sources.DerivedCache
-    val base = java.nio.file.Files.createTempDirectory("graft-evict-test")
-    val srcA = java.nio.file.Files.createTempDirectory("graft-evict-src")
-    java.nio.file.Files.write(srcA.resolve("x"), "src".getBytes)
-    val oldTmp = sys.props("java.io.tmpdir")
-    try {
-      sys.props("java.io.tmpdir") = base.toString
-      sys.props("graft.derivedCache.minAgeMs") = "0"
-      sys.props("graft.derivedCache.capBytes") = "3500" // ~fits 3 of 5 layouts
-      def mk(i: Int): String = {
-        val d = DerivedCache.dir(srcA.toString, "evict", s"layout=$i") { out =>
-          java.nio.file.Files.createDirectories(java.nio.file.Paths.get(out))
-          java.nio.file.Files.write(
-            java.nio.file.Paths.get(out, "data"), Array.fill(1000)('x'.toByte))
-          ()
-        }
-        Thread.sleep(5) // distinct LRU mtimes on coarse filesystems
-        d
-      }
-      val dirs = (1 to 5).map(mk)
-      // cap 3500 vs ~1030 B/layout: building 4 and 5 must have evicted
-      // the least-recently-used (1 and 2); the newest and the just-kept
-      // survive, and the one being returned is never deleted
-      assert(!new java.io.File(dirs(0)).exists(), "LRU layout 1 not evicted")
-      assert(!new java.io.File(dirs(1)).exists(), "LRU layout 2 not evicted")
-      assert(new java.io.File(dirs(4), "data").exists(), "newest layout lost")
-      // a USE refreshes the stamp: re-request layout 3 (no rebuild —
-      // content intact), then build a 6th; layout 3 must outlive 4
-      val d3 = mk(3)
-      assert(new java.io.File(d3, "data").exists())
-      mk(6)
-      assert(new java.io.File(d3, "data").exists(), "recently used layout evicted")
-      assert(!new java.io.File(dirs(3)).exists(), "stale layout 4 should go before used 3")
-      // a min-age window protects layouts a concurrent reader just used
-      sys.props("graft.derivedCache.minAgeMs") = "600000"
-      mk(7)
-      assert(new java.io.File(d3, "data").exists(), "min-age window ignored")
-    } finally {
-      sys.props("java.io.tmpdir") = oldTmp
-      sys.props.remove("graft.derivedCache.minAgeMs")
-      sys.props.remove("graft.derivedCache.capBytes")
-      ()
-    }
-  }
-
   test("a stats-less file stays visible: conservative keep, never lossy") {
     import spark.implicits._
     val dir = java.nio.file.Files.createTempDirectory("graft-statsless").toFile

@@ -110,4 +110,16 @@ class TablesSchemaSpec extends AnyFunSuite {
             "(see Tables.events for the normalization-boundary pattern)")
       }
     }
+
+  test("cachedCount recounts a table rewritten in place") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft-count").toString
+    def put(n: Long): Unit =
+      (1L to n).toDF("id").write.mode("overwrite").parquet(Tables.pathOf(dir, "t"))
+    put(3)
+    assert(Tables.cachedCount(spark, dir, "t") === 3)
+    put(7)
+    assert(Tables.cachedCount(spark, dir, "t") === 7,
+      "a stale memo must not survive a rewrite of the table")
+  }
 }
