@@ -72,23 +72,6 @@ object Multimodal {
       }
   }
 
-  /** Frame sampling: slice the payload into fixed-size frames and keep
-    * every Nth — the video-frame-sampling access pattern, expressed with
-    * codegen'd binary substring + posexplode (no UDF).
-    */
-  def frameSample(media: DataFrame, frameBytes: Int, everyN: Int): DataFrame =
-    media
-      .select(col("doc_id"), col("content"), length(col("content")).as("len"))
-      .select(
-        col("doc_id"),
-        posexplode(expr(
-          s"""transform(
-             |  filter(sequence(0, CAST(ceil(len / ${frameBytes}.0) AS INT) - 1),
-             |         f -> f % $everyN = 0),
-             |  f -> substring(content, f * $frameBytes + 1, $frameBytes))""".stripMargin)))
-      .withColumnRenamed("pos", "frame_idx")
-      .withColumnRenamed("col", "frame")
-
   final case class DecodedRow(
       doc_id: Long, kind: String, width: Long, height: Long,
       n_units: Long, mean_val: Double, max_val: Long)

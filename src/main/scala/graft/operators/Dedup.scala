@@ -2893,18 +2893,19 @@ object Dedup {
     * dedup first and save the quality pass's compute on doomed copies;
     * if dup-heavy docs skew low-quality, quality-filter first and
     * shrink the dedup input instead. Cluster labels come from the
-    * STORED CC table (built once per corpus), so this costs two
-    * cluster-keyed aggregates plus one doc-keyed left join over
-    * scan-side flags — every stage linear, bucket labels crafted to
-    * sort lexicographically so the output order is portable.
+    * STORED CC table (built once per corpus) and are read once: the
+    * cluster size is a window count over them, so no self-join of the
+    * labels has two equal-sized sides whose broadcast build side could
+    * flip between runs. Then one doc-keyed left join over scan-side
+    * flags — every stage linear, bucket labels crafted to sort
+    * lexicographically so the output order is portable.
     */
   def qualityVsDup(spark: SparkSession, dir: String): DataFrame = {
-    val assign = dedupClustersMinhash(spark, dir).select(col("doc_id"), col("cluster_id"))
-    val perDoc = assign
-      .groupBy(col("cluster_id"))
-      .agg(count(lit(1)).as("csize"))
-      .join(assign, "cluster_id")
-      .select(col("doc_id"), col("csize"))
+    val perDoc = minhashCcLabels(spark, dir)
+      .select(
+        col("node").as("doc_id"),
+        count(lit(1)).over(org.apache.spark.sql.expressions.Window.partitionBy(col("label")))
+          .as("csize"))
     Tables
       .documents(spark, dir)
       .select(col("doc_id"), col("n_chars"), split(col("text"), " ").as("t"))

@@ -20,14 +20,11 @@ object DriverSim {
     println(s"### entry rows=$entryRows")
     require(entryRows > 0, "entry() returned no rows")
     val sf = "/root/testdata/sf0.001"
-    var failed = 0
-    SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
-      try {
-        fn(spark, sf).write.mode("overwrite").format("noop").save()
-      } catch {
-        case e: Throwable =>
-          failed += 1
-          println(s"### FAIL $name: ${e.toString.linesIterator.next()}")
+    val failed = QueryRecorder.using(spark) { rec =>
+      SparkEntry.queries.toSeq.sortBy(_._1).count { case (name, fn) =>
+        val err = rec.run(name, sf, fn).error
+        err.foreach(e => println(s"### FAIL $name: ${e.toString.linesIterator.next()}"))
+        err.nonEmpty
       }
     }
     println(s"### queries ok=${SparkEntry.queries.size - failed} failed=$failed")

@@ -1,9 +1,8 @@
 package graft.tools
 
-import graft.{GraftSession, SparkEntry, Tables}
+import graft.{SparkEntry, Tables}
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
-import scala.jdk.CollectionConverters._
 
 /** Dev-only 10× scale probe: replicates the sf0.1 fact tables with
   * shifted entity keys (dimensions keep their cardinality — realistic
@@ -47,8 +46,7 @@ object ScaleProbe {
   }
 
   def main(args: Array[String]): Unit = {
-    val spark = GraftSession.builder("local[32]", 32).getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = QueryRecorder.session()
 
     if (!new java.io.File(s"$Dest/lineitem.parquet").exists()) {
       val K = 10_000_000L
@@ -147,66 +145,39 @@ object ScaleProbe {
         "top_spenders", "user_engagement", "engagement_vs_spend",
         "sessionize", "user_sessions_topk", "user_sessions_topk_custom",
         "revenue_by_region", "rfm")
-    // Spill telemetry: sum task-level memory/disk spill bytes between
-    // per-query marks. A memory-pressure run (small SPARK_DRIVER_MEM) is
-    // only evidence if a query DEMONSTRABLY spilled and still completed —
-    // assert it from task metrics, don't infer it from wall time.
-    val memSpill  = new java.util.concurrent.atomic.AtomicLong
-    val diskSpill = new java.util.concurrent.atomic.AtomicLong
-    spark.sparkContext.addSparkListener(
-      new org.apache.spark.scheduler.SparkListener {
-        override def onTaskEnd(
-            e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-          val m = e.taskMetrics
-          if (m != null) {
-            memSpill.addAndGet(m.memoryBytesSpilled)
-            diskSpill.addAndGet(m.diskBytesSpilled)
-          }
-        }
-      })
     println(s"### heap max ${Runtime.getRuntime.maxMemory / (1 << 20)} MiB")
-    // warm codegen infra
-    SparkEntry.queries("top_spenders")(spark, Dest)
-      .write.mode("overwrite").format("noop").save()
     // SCALE_REPEAT=k: time each query k times in-JVM and report every
     // rep — single-shot numbers at this scale carry 2-3× GC/page-cache
     // noise; the min over reps is the plan's cost, the spread is the
-    // noise floor.
+    // noise floor. Spill is read from task metrics: a memory-pressure run
+    // (small SPARK_DRIVER_MEM) is only evidence if a query DEMONSTRABLY
+    // spilled and still completed.
     val repeat = sys.env.getOrElse("SCALE_REPEAT", "1").toInt
-    def gcMillis(): Long = java.lang.management.ManagementFactory
-      .getGarbageCollectorMXBeans.asScala
-      .map(b => math.max(b.getCollectionTime, 0L)).sum
     val ledger = scala.collection.mutable.LinkedHashMap[String, (Double, Long)]()
-    names.foreach { n =>
-      val stats = (1 to repeat).map { rep =>
-        val mem0 = memSpill.get(); val disk0 = diskSpill.get()
-        val gc0 = gcMillis()
-        val t0 = System.nanoTime()
-        val err =
-          try {
-            SparkEntry.queries(n)(spark, Dest).write.mode("overwrite").format("noop").save()
-            None
-          } catch { case e: Throwable => Some(e) }
-        val secs = (System.nanoTime() - t0) / 1e9
-        graft.QueryState.release(spark) // caches AND checkpoint blocks
-        val gcS = (gcMillis() - gc0) / 1e3
-        val spillMem  = (memSpill.get() - mem0) / (1 << 20)
-        val spillDisk = (diskSpill.get() - disk0) / (1 << 20)
-        err match {
-          case Some(e) =>
-            // fail-honest (the Bench contract): a broken query must
-            // never land in the ledger as a fake near-zero timing
-            println(s"### SCALE${Copies}x $n FAILED: ${e.getMessage}")
-            (Double.NaN, 0L)
-          case None =>
-            println(f"### SCALE${Copies}x $n%-28s rep$rep $secs%.2f s  gc $gcS%.1f s  spill mem ${spillMem}%d MiB disk ${spillDisk}%d MiB")
-            (secs, spillMem + spillDisk)
+    QueryRecorder.using(spark) { rec =>
+      // warm codegen infra
+      rec.run("top_spenders", Dest, SparkEntry.queries("top_spenders"))
+      names.foreach { n =>
+        val stats = (1 to repeat).map { rep =>
+          val r = rec.run(n, Dest, SparkEntry.queries(n))
+          val spillMem  = r.memSpillBytes / (1 << 20)
+          val spillDisk = r.diskSpillBytes / (1 << 20)
+          r.error match {
+            case Some(e) =>
+              // fail-honest (the Bench contract): a broken query must
+              // never land in the ledger as a fake near-zero timing
+              println(s"### SCALE${Copies}x $n FAILED: ${e.getMessage}")
+              (Double.NaN, 0L)
+            case None =>
+              println(f"### SCALE${Copies}x $n%-28s rep$rep ${r.wallS}%.2f s  gc ${r.gcMs / 1e3}%.1f s  spill mem ${spillMem}%d MiB disk ${spillDisk}%d MiB")
+              (r.wallS, spillMem + spillDisk)
+          }
         }
+        val ok = stats.filterNot(_._1.isNaN)
+        if (ok.nonEmpty) ledger(n) = (ok.map(_._1).min, ok.map(_._2).max)
+        if (repeat > 1 && ok.nonEmpty)
+          println(f"### SCALE${Copies}x $n%-28s min ${ok.map(_._1).min}%.2f s")
       }
-      val ok = stats.filterNot(_._1.isNaN)
-      if (ok.nonEmpty) ledger(n) = (ok.map(_._1).min, ok.map(_._2).max)
-      if (repeat > 1 && ok.nonEmpty)
-        println(f"### SCALE${Copies}x $n%-28s min ${ok.map(_._1).min}%.2f s")
     }
     // machine-readable ledger for tools/scale_ledger.py (BASELINE.md)
     val ledgerPath = s"/tmp/graft-scale-ledger-x$Copies${if (sys.env.get("SCALE_DOCS").contains("1")) "-docs" else ""}.json"

@@ -98,6 +98,40 @@ class BenchDiffSpec extends AnyFunSuite {
       "escaped name must decode back to the original")
   }
 
+  test("the total line keeps its key order (artifact readers depend on it)") {
+    val spark = TestSpark.spark
+    import org.apache.spark.sql.functions.lit
+    val rep = Bench.runAll(spark, TestSpark.Sf,
+      Seq("ok_tiny" -> ((s: org.apache.spark.sql.SparkSession, _: String) =>
+        s.range(3).toDF("n").withColumn("c", lit(1)))))
+    val node = new com.fasterxml.jackson.databind.ObjectMapper().readTree(rep.json)
+    import scala.jdk.CollectionConverters._
+    assert(node.fieldNames().asScala.toSeq === Seq(
+      "metric", "value", "unit", "n_ok", "n_failed", "failed", "gc_total_s",
+      "jit_total_s", "sf", "queries", "gc", "jit", "plans"))
+    assert(node.get("metric").asText() === "total")
+    assert(node.get("plans").get("ok_tiny").asText().matches("[0-9a-f]{8}"))
+  }
+
+  test("plan normalization drops JVM identities and path-hashed catalog names") {
+    def plan(kmv: String, lambda: String, idx: String, expr: Int, tmp: String) =
+      s"""HashAggregate(keys=[k#$expr], functions=[graft.functions.KmvDistinct@$kmv(v#${expr + 1})])
+         |+- Project [graft.multimodal.Multimodal$$$$$$Lambda$$$lambda@1f2e3d(x#7) AS y#8]
+         |   +- FileScan parquet spark_catalog.default.graft_idx_$idx[k#$expr] Location: InMemoryFileIndex[file:$tmp/graft-derived/seg]
+         |      +- Exchange hashpartitioning(k#$expr, 4), ENSURE_REQUIREMENTS, [plan_id=${expr * 3}]""".stripMargin
+    val a = plan("683e649", "5485/0x0000000801e4b000", "0123456789abcdef01234567", 12, "/tmp/plansA")
+    val b = plan("1b2c3d4", "6012/0x00000008019ac440", "fedcba9876543210fedcba98", 40, "/tmp/plansB")
+    assert(a.contains("KmvDistinct@683e649") && a.contains("Multimodal$$$Lambda$5485/0x"))
+    assert(a != b)
+    assert(Bench.normalizePlan(a) === Bench.normalizePlan(b))
+    val n = Bench.normalizePlan(a)
+    Seq("683e649", "5485", "0123456789abcdef", "#12", "plansA").foreach(v =>
+      assert(!n.contains(v), s"$v survived: $n"))
+    // the operator structure itself is kept
+    assert(n.contains("KmvDistinct@x") && n.contains("graft_idx_x") &&
+      n.contains("Multimodal$$$Lambda@x"))
+  }
+
   test("bench_diff selftest passes") {
     val out = new StringBuilder
     val code = Process(Seq("python3", "tools/bench_diff.py", "--selftest"))

@@ -73,23 +73,6 @@ class MultimodalSpec extends AnyFunSuite {
     assert(rows.forall(r => math.abs(r.features.sum - 1.0) < 1e-9))
   }
 
-  test("frame sampling yields ceil(len/frame)/everyN-ish frames") {
-    val sampled = Multimodal.frameSample(media, frameBytes = 64, everyN = 2)
-    val perDoc = sampled.groupBy("doc_id").count()
-      .join(media.select(col("doc_id"), length(col("content")).as("len")), "doc_id")
-      .collect()
-    perDoc.foreach { r =>
-      val len      = r.getAs[Int]("len")
-      val frames   = math.ceil(len.toDouble / 64).toLong
-      val expected = (frames + 1) / 2 // every 2nd frame, starting at 0
-      assert(r.getAs[Long]("count") === expected,
-        s"doc ${r.getAs[Long]("doc_id")}: got ${r.getAs[Long]("count")}, expected $expected")
-    }
-    // frames are at most frameBytes long
-    val maxLen = sampled.select(max(length(col("frame")))).collect().head.getInt(0)
-    assert(maxLen <= 64)
-  }
-
   test("video_frame_sample: decimation before compute, keyframe = argmax of sampled") {
     val out = Multimodal.videoFrameSample(spark, TestSpark.Sf).collect()
     assert(out.nonEmpty)

@@ -218,4 +218,19 @@ class PlanAssertionsSpec extends AnyFunSuite {
       }
     }
   }
+
+  test("quality_vs_dup reads the minhash CC labels once: no labels self-join to tie") {
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    val p = SparkEntry.queries("quality_vs_dup")(spark, TestSpark.Sf)
+      .asInstanceOf[CDataset[Row]].queryExecution.executedPlan
+    val labelScans = new AdaptiveSparkPlanHelper {}.collect(p) {
+      case s: FileSourceScanExec
+          if s.relation.location.rootPaths.exists(_.toString.contains("dedup-cc-minhash")) => s
+    }
+    // one read of the labels, so no join can have a labels read on both
+    // sides; the cluster size is a window over that read
+    assert(labelScans.size === 1, s"labels read ${labelScans.size} times:\n$p")
+    assert(p.toString.contains("Window"), s"cluster size is not a window count:\n$p")
+  }
 }
