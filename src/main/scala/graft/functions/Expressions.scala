@@ -1,6 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -789,55 +790,44 @@ object GramStats {
   }
 }
 
+/** The `graft_*` SQL functions. A `GraftSession` already has five of
+  * them from [[GraftExtensions]]; query builders call [[register]] for
+  * the rest, and so that a bare session resolves every one.
+  */
 object GraftFunctions {
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction(
-      "graft_cosine", exprs => CosineSim(exprs(0), exprs(1)), "built-in")
-    reg.createOrReplaceTempFunction(
-      "graft_sig_matches", exprs => SigMatches(exprs(0), exprs(1)), "built-in")
-    reg.createOrReplaceTempFunction(
-      "graft_sig_band_hit",
-      exprs => SigBandHit(exprs(0), exprs(1), exprs(2).eval().asInstanceOf[Int]),
-      "built-in")
-    reg.createOrReplaceTempFunction(
-      "graft_simhash", exprs => SimHash64(exprs.head), "built-in")
-    reg.createOrReplaceTempFunction(
-      "graft_simhash_md5", exprs => SimHashMd5(exprs.head), "built-in")
-    reg.createOrReplaceTempFunction(
-      "graft_minhash",
-      exprs => MinHashSig(exprs(0), exprs(1).eval().asInstanceOf[Int]),
-      "built-in")
-    reg.createOrReplaceTempFunction(
-      "graft_minhash_tokens",
-      exprs =>
-        MinHashSig(exprs(0), exprs(1).eval().asInstanceOf[Int], tokenMode = true),
-      "built-in")
-    reg.createOrReplaceTempFunction(
-      "graft_minhash_md5",
-      exprs => MinHashMd5(exprs(0), exprs(1).eval().asInstanceOf[Int]),
-      "built-in")
+  private val builders: Seq[(String, Seq[Expression] => Expression)] = Seq(
+    "graft_cosine" -> (exprs => CosineSim(exprs(0), exprs(1))),
+    "graft_sig_matches" -> (exprs => SigMatches(exprs(0), exprs(1))),
+    "graft_sig_band_hit" ->
+      (exprs => SigBandHit(exprs(0), exprs(1), exprs(2).eval().asInstanceOf[Int])),
+    "graft_simhash" -> (exprs => SimHash64(exprs.head)),
+    "graft_simhash_md5" -> (exprs => SimHashMd5(exprs.head)),
+    "graft_minhash" -> (exprs => MinHashSig(exprs(0), exprs(1).eval().asInstanceOf[Int])),
+    "graft_minhash_tokens" ->
+      (exprs => MinHashSig(exprs(0), exprs(1).eval().asInstanceOf[Int], tokenMode = true)),
+    "graft_minhash_md5" -> (exprs => MinHashMd5(exprs(0), exprs(1).eval().asInstanceOf[Int])),
     // NOTE: the table index is a true child expression (it is usually a
     // transform() lambda variable); only `planes` must be a literal.
-    reg.createOrReplaceTempFunction(
-      "graft_lsh_bucket",
-      exprs => LshBucket(exprs(0), exprs(1), exprs(2).eval().asInstanceOf[Int]),
-      "built-in")
-    reg.createOrReplaceTempFunction(
-      "graft_lsh_bucket_md5",
-      exprs => LshBucketMd5(exprs(0), exprs(1), exprs(2).eval().asInstanceOf[Int]),
-      "built-in")
-    reg.createOrReplaceTempFunction(
-      "graft_lang_id", exprs => LangIdPredict(exprs.head), "built-in")
-    reg.createOrReplaceTempFunction(
-      "graft_window_hashes",
-      exprs => TokenWindowHashes(exprs(0), exprs(1).eval().asInstanceOf[Int]),
-      "built-in")
-    reg.createOrReplaceTempFunction(
-      "graft_morton", exprs => MortonCode(exprs(0), exprs(1)), "built-in")
-    reg.createOrReplaceTempFunction(
-      "graft_gram_stats",
-      exprs => GramStats(exprs(0), exprs(1).eval().asInstanceOf[Int]),
-      "built-in")
+    "graft_lsh_bucket" ->
+      (exprs => LshBucket(exprs(0), exprs(1), exprs(2).eval().asInstanceOf[Int])),
+    "graft_lsh_bucket_md5" ->
+      (exprs => LshBucketMd5(exprs(0), exprs(1), exprs(2).eval().asInstanceOf[Int])),
+    "graft_lang_id" -> (exprs => LangIdPredict(exprs.head)),
+    "graft_window_hashes" ->
+      (exprs => TokenWindowHashes(exprs(0), exprs(1).eval().asInstanceOf[Int])),
+    "graft_morton" -> (exprs => MortonCode(exprs(0), exprs(1))),
+    "graft_gram_stats" -> (exprs => GramStats(exprs(0), exprs(1).eval().asInstanceOf[Int])))
+
+  /** Register the `graft_*` functions the session's registry lacks.
+    * Idempotent: a name already there (injected by the extension or
+    * registered by an earlier query) is left alone, so repeated query
+    * construction neither replaces functions nor logs a warning each.
+    */
+  def register(spark: SparkSession): Unit = {
+    val reg = spark.sessionState.functionRegistry
+    builders.foreach { case (name, build) =>
+      if (!reg.functionExists(FunctionIdentifier(name)))
+        reg.createOrReplaceTempFunction(name, build, "built-in")
+    }
   }
 }

@@ -1622,6 +1622,27 @@ object Dedup {
   private val lastDeltaSigs =
     new java.util.concurrent.atomic.AtomicReference[DataFrame](null)
 
+  /** Max delta rows for the FORCED shuffled-hash build across the
+    * probe joins against the stored minhash index over `dir`: Spark's
+    * shuffled-hash build has no spill fallback, so the hint is safe only
+    * while the per-task hash map (≈1 KiB per sig row: 64 longs + keys +
+    * map overhead) stays inside a task's execution-memory share — 2^18
+    * rows/bucket ≈ 256 MiB/task across the index's actual bucket count
+    * ([[StoredIndex.buckets]]; the delta is exchanged to that width).
+    * Above it the hint is DROPPED and the planner's SMJ (spillable)
+    * takes over: slower, never OOM.
+    */
+  private def shuffleHashDeltaRowsMax(spark: SparkSession, dir: String): Long =
+    (1L << 18) * StoredIndex.buckets(spark, dir)
+
+  /** The two bucketed base tables (sigs, bidx) of the incremental
+    * index. A caller probing SEVERAL batches against the same base (the
+    * streaming ingest) reads — and optionally persists — them once
+    * instead of per micro-batch.
+    */
+  private[graft] def incrementalBaseTables(spark: SparkSession, dir: String): (DataFrame, DataFrame) =
+    sigsAndBidx(StoredIndex.tables(spark, dir, MinhashTier, StoredIndex.Base))
+
   /** Sign `delta` docs (doc_id, text) and probe the stored base index
     * tables `base` (sigs, bidx): one verdict row per delta doc, schema (doc_id, n_dups,
     * dup_of, est, keep), unordered. Verdicts are PER-DELTA-ROW
@@ -1636,32 +1657,13 @@ object Dedup {
     * (streaming ingest): the delta side gets broadcast hints so the
     * per-batch probe never shuffles the stored index — at scale the
     * index is corpus-sized and the batch is not. The batch query's
-    * delta is corpus-proportional, so it must NOT set this.
+    * delta is corpus-proportional, so it must NOT set this; it sets
+    * `shuffleHashDelta` from [[shuffleHashDeltaRowsMax]] instead (false
+    * drops the forced shuffled-hash build).
     */
-  /** Max delta rows for the FORCED shuffled-hash build across the
-    * probe joins: Spark's shuffled-hash build has no spill fallback, so
-    * the hint is safe only while the per-task hash map (≈1 KiB per sig
-    * row: 64 longs + keys + map overhead) stays inside a task's
-    * execution-memory share — 2^18 rows/bucket ≈ 256 MiB/task across
-    * [[graft.sources.Bucketing.IndexBuckets]] buckets. Above it the
-    * hint is DROPPED and the planner's SMJ (spillable) takes over:
-    * slower, never OOM (round-14 ADVICE — the 32-bucket coupling was
-    * documented but unenforced).
-    */
-  private val ShuffleHashDeltaRowsMax =
-    (1L << 18) * graft.sources.Bucketing.IndexBuckets
-
-  /** The two bucketed base tables (sigs, bidx) of the incremental
-    * index. A caller probing SEVERAL batches against the same base (the
-    * streaming ingest) reads — and optionally persists — them once
-    * instead of per micro-batch.
-    */
-  private[graft] def incrementalBaseTables(spark: SparkSession, dir: String): (DataFrame, DataFrame) =
-    sigsAndBidx(StoredIndex.tables(spark, dir, MinhashTier, StoredIndex.Base))
-
   private[graft] def incrementalProbe(
       spark: SparkSession, base: (DataFrame, DataFrame), delta: DataFrame,
-      deltaIsSmall: Boolean = false, deltaRows: Long = -1L)
+      deltaIsSmall: Boolean = false, shuffleHashDelta: Boolean = true)
       : (DataFrame, DataFrame) = {
     GraftFunctions.register(spark)
     val k = MinhashK
@@ -1670,11 +1672,10 @@ object Dedup {
     // with the delta as build side — the bucketed index scans are
     // already hash-clustered on their probe keys, so only the delta
     // exchanges and the corpus-sized index streams unsorted. The hint
-    // is size-gated (see [[ShuffleHashDeltaRowsMax]]); deltaRows < 0 =
-    // caller vouches the batch is bounded.
+    // is size-gated by the caller (see [[shuffleHashDeltaRowsMax]]).
     def hinted(df: DataFrame): DataFrame =
       if (deltaIsSmall) broadcast(df)
-      else if (deltaRows >= 0 && deltaRows > ShuffleHashDeltaRowsMax) df
+      else if (!shuffleHashDelta) df
       else df.hint("SHUFFLE_HASH")
     val (baseSigs, baseIdx) = base
     // only the DELTA is signed at probe time — the base comes from the
@@ -1741,7 +1742,8 @@ object Dedup {
     // for the shuffled-hash size gate
     val est = Tables.cachedCount(spark, dir, "documents") / 5
     val (verdicts, deltaSigs) = incrementalProbe(
-      spark, base, StoredIndex.deltaDocs(Tables.documents(spark, dir)), deltaRows = est)
+      spark, base, StoredIndex.deltaDocs(Tables.documents(spark, dir)),
+      shuffleHashDelta = est <= shuffleHashDeltaRowsMax(spark, dir))
     // atomic swap: guarantees no double-unpersist and no lost handle.
     // It does NOT serialize concurrent callers — caller B's swap may
     // unpersist the frame caller A's still-running plan references, in
@@ -1816,7 +1818,8 @@ object Dedup {
       .map { case (l, ts) => l -> sigsAndBidx(ts) }
     val (verdicts, deltaSigs) = dedupMinhashIndexAppendOf(
       spark, delta, segs,
-      deltaRows = Tables.cachedCount(spark, dir, "documents") / 10)
+      shuffleHashDelta =
+        Tables.cachedCount(spark, dir, "documents") / 10 <= shuffleHashDeltaRowsMax(spark, dir))
     val prev = lastDeltaSigs.getAndSet(deltaSigs)
     if (prev != null && (prev ne deltaSigs)) prev.unpersist(blocking = false)
     verdicts.orderBy(col("doc_id"))
@@ -1832,14 +1835,14 @@ object Dedup {
   private[graft] def dedupMinhashIndexAppendOf(
       spark: SparkSession, delta: DataFrame,
       segs: Seq[(String, (DataFrame, DataFrame))],
-      deltaIsSmall: Boolean = false, deltaRows: Long = -1L)
+      deltaIsSmall: Boolean = false, shuffleHashDelta: Boolean = true)
       : (DataFrame, DataFrame) = {
     GraftFunctions.register(spark)
     val k = MinhashK
     // same size-gated build-side discipline as incrementalProbe
     def hinted(df: DataFrame): DataFrame =
       if (deltaIsSmall) broadcast(df)
-      else if (deltaRows >= 0 && deltaRows > ShuffleHashDeltaRowsMax) df
+      else if (!shuffleHashDelta) df
       else df.hint("SHUFFLE_HASH")
     val (deltaSigs, deltaBands) =
       minhashBandsOf(delta, k, persistSigs = !deltaIsSmall)

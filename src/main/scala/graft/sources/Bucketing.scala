@@ -20,27 +20,6 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
   */
 object Bucketing {
 
-  /** Write `df` as a managed bucketed table (bucket count must match on
-    * every table that wants exchange-free joins against it).
-    */
-  def writeBucketed(
-      df: DataFrame, table: String, key: String, buckets: Int): Unit =
-    df.write
-      .mode(SaveMode.Overwrite)
-      .bucketBy(buckets, key)
-      .sortBy(key)
-      .format("parquet")
-      .saveAsTable(table)
-
-  /** Bucket count for the stored probe indexes (substring postings,
-    * minhash base index, CDC chunk store). 32 matches the session's
-    * shuffle partitioning at test scale; a 100 TB deployment raises it
-    * to O(corpus/target-partition-size) once at index build — probes
-    * adapt automatically (the delta side is exchanged to the index's
-    * bucket count, never the reverse).
-    */
-  val IndexBuckets = 32
-
   // PER-TABLE monitors, not one global lock: a corpus-sized bucketed
   // write must not block an unrelated layout's already-built fast-path
   // registration (the same rule DerivedCache documents for its key
@@ -62,13 +41,22 @@ object Bucketing {
       .take(12).map("%02x".format(_)).mkString
   }
 
-  /** Write `df` as an external BUCKETED table at `path` — the layout
-    * that makes every later equi-join on `keys` exchange-free on this
-    * side. bucketBy requires saveAsTable (catalog metadata carries the
-    * bucket spec), so the table registers in the session catalog AND
-    * the files land at `path`; the repartition puts one file per
-    * bucket. The in-memory catalog dies with the session — later
-    * sessions re-attach via [[readBucketed]].
+  /** Write `df` as an external BUCKETED table of `buckets` buckets at
+    * `path` — the layout that makes every later equi-join on `keys`
+    * exchange-free on this side. bucketBy requires saveAsTable (catalog
+    * metadata carries the bucket spec), so the table registers in the
+    * session catalog AND the files land at `path`; the repartition puts
+    * one file per bucket. The in-memory catalog dies with the session —
+    * later sessions re-attach via [[readBucketed]].
+    *
+    * The bucket count must match on every table that wants
+    * exchange-free joins against this one: where a join's two sides
+    * differ in width, the narrower side is reshuffled to the wider. The
+    * stored probe indexes therefore take theirs from
+    * [[StoredIndex.buckets]]: the session's shuffle width, raised to
+    * ceil(corpus bytes / 128 MiB) for a corpus larger than that many
+    * scan splits — the delta side of a probe is then exchanged once, at
+    * the width its own aggregation already uses.
     *
     * `aligned = true` skips the repartition: for a frame that is ALREADY
     * hash-clustered on `keys` at `buckets` partitions (e.g. the output
@@ -84,7 +72,7 @@ object Bucketing {
     */
   def writeBucketedExternal(
       df: DataFrame, path: String, keys: Seq[String],
-      buckets: Int = IndexBuckets, aligned: Boolean = false): Unit = {
+      buckets: Int, aligned: Boolean = false): Unit = {
     import org.apache.spark.sql.functions.col
     val spark = df.sparkSession
     val tbl = tableNameFor(path)
@@ -110,7 +98,7 @@ object Bucketing {
     */
   def readBucketed(
       spark: SparkSession, path: String, keys: Seq[String], schema: String,
-      buckets: Int = IndexBuckets): DataFrame = {
+      buckets: Int): DataFrame = {
     val tbl = tableNameFor(path)
     lockFor(tbl).synchronized {
       if (!spark.catalog.tableExists(tbl)) {

@@ -201,6 +201,7 @@ object DerivedCache {
     // another PROCESS's file lock for a slow build, requests for other
     // (already-built) layouts must keep their fast path
     val mon = keyLocks.computeIfAbsent(out, _ => new Object)
+    var built = false
     val loaded = mon.synchronized {
       val got = valid().getOrElse {
         // cross-PROCESS exclusion: sbt test and a bench JVM can race the
@@ -218,6 +219,7 @@ object DerivedCache {
               deleteRecursively(new java.io.File(out))
               val t0 = System.nanoTime()
               build(out)
+              built = true
               BuildLog.record(name, (System.nanoTime() - t0) / 1e9)
               java.nio.file.Files.createDirectories(done.toPath.getParent)
               java.nio.file.Files.write(done.toPath, fp.getBytes("UTF-8"))
@@ -232,7 +234,8 @@ object DerivedCache {
       done.setLastModified(System.currentTimeMillis())
       got
     }
-    prune(base, out)
+    // only a build grows the cache; a hit just refreshed its LRU stamp
+    if (built) prune(base, out)
     loaded
   }
 

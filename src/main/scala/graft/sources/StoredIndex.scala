@@ -20,8 +20,41 @@ import org.apache.spark.sql.functions._
   *
   * Each level is a DerivedCache layout built lazily: reading one level
   * builds only that level, and compaction builds only its two inputs.
+  * All levels of a tier are written at one bucket count ([[buckets]]),
+  * carried in every level's fingerprint.
   */
 object StoredIndex {
+
+  // ------------------------------------------------------ bucket count
+
+  /** Target corpus bytes per index bucket: Spark's default scan split
+    * (`spark.sql.files.maxPartitionBytes`), so the bucket count grows
+    * O(corpus / partition size) at scale.
+    */
+  private[graft] val IndexBucketBytes: Long = 128L * 1024 * 1024
+
+  /** The bucket count for a `documentsBytes`-sized corpus in a session
+    * whose exchanges are `shuffleWidth` wide. The session width is the
+    * floor because it keeps the index side of a probe exchange-free:
+    * `EnsureRequirements` keeps the child with the most partitions, so
+    * an index narrower than the delta's aggregate exchange would be
+    * reshuffled, while at equal width that exchange already satisfies
+    * the join and no second one is planned.
+    */
+  private[graft] def bucketsFor(shuffleWidth: Int, documentsBytes: Long): Int =
+    math.max(shuffleWidth, math.ceil(documentsBytes.toDouble / IndexBucketBytes).toInt)
+
+  /** The bucket count of every stored-index layout over `src` in this
+    * session: the session's shuffle width, raised for a corpus larger
+    * than that many scan splits. The count is part of each level's
+    * fingerprint, so base, segment and compacted layouts always agree
+    * (compaction stays aligned and exchange-free) and a session of
+    * another width opens its own layouts, never this count's tables.
+    */
+  def buckets(spark: SparkSession, src: String): Int =
+    bucketsFor(
+      spark.sessionState.conf.numShufflePartitions,
+      graft.Scans.bytesOf(spark, graft.Tables.pathOf(src, "documents")))
 
   // ------------------------------------------------- the ingest split
 
@@ -99,9 +132,10 @@ object StoredIndex {
   /** One stored index tier. `base` / `seg` / `compact` name each
     * level's DerivedCache layout with its version; the fingerprint is
     * `params` plus the level's marker (`seg=8` for the two levels that
-    * hold batch 1) and version. `build` turns a doc frame into one
-    * frame per table, in `tables` order. The LAST table carries the
-    * tier's maintenance accounting; `label` names its maintenance row.
+    * hold batch 1), the bucket count (`b=<n>`) and version. `build`
+    * turns a doc frame into one frame per table, in `tables` order. The
+    * LAST table carries the tier's maintenance accounting; `label` names
+    * its maintenance row.
     */
   final case class Tier(
       label: String, params: String,
@@ -116,25 +150,28 @@ object StoredIndex {
   // ---------------------------------------------------------- layouts
 
   /** The layout dir of one level, built on first use. */
-  def dir(spark: SparkSession, src: String, tier: Tier, level: Level): String = {
+  def dir(spark: SparkSession, src: String, tier: Tier, level: Level): String =
+    dirAt(spark, src, tier, level, buckets(spark, src))
+
+  private def dirAt(spark: SparkSession, src: String, tier: Tier, level: Level, n: Int): String = {
     val ((name, v), marker) = level match {
       case Base    => (tier.base, "")
       case Seg     => (tier.seg, "seg=8;")
       case Compact => (tier.compact, "seg=8;")
     }
-    val fp = (if (tier.params.isEmpty) "" else s"${tier.params};") + s"${marker}v=$v"
+    val fp = (if (tier.params.isEmpty) "" else s"${tier.params};") + s"${marker}b=$n;v=$v"
     DerivedCache.dir(src, name, fp) { out =>
       level match {
         case Compact =>
           tier.tables.zip(folds(spark, src, tier)).foreach { case (t, m) =>
             Bucketing.writeBucketedExternal(
-              m.select(t.columns: _*), s"$out/${t.suffix}", t.keys, aligned = true)
+              m.select(t.columns: _*), s"$out/${t.suffix}", t.keys, n, aligned = true)
           }
         case _ =>
           val docs = graft.Tables.documents(spark, src)
           val frames = tier.build(if (level == Base) baseDocs(docs) else segDocs(docs))
           tier.tables.zip(frames).foreach { case (t, df) =>
-            Bucketing.writeBucketedExternal(df, s"$out/${t.suffix}", t.keys)
+            Bucketing.writeBucketedExternal(df, s"$out/${t.suffix}", t.keys, n)
           }
           frames.foreach(_.unpersist())
       }
@@ -144,8 +181,9 @@ object StoredIndex {
 
   /** The tier's tables at one level, as bucketed scans. */
   def tables(spark: SparkSession, src: String, tier: Tier, level: Level): Seq[DataFrame] = {
-    val d = dir(spark, src, tier, level)
-    tier.tables.map(t => Bucketing.readBucketed(spark, s"$d/${t.suffix}", t.keys, t.ddl))
+    val n = buckets(spark, src)
+    val d = dirAt(spark, src, tier, level, n)
+    tier.tables.map(t => Bucketing.readBucketed(spark, s"$d/${t.suffix}", t.keys, t.ddl, n))
   }
 
   /** The levels a batch-2 probe reads, labelled as its verdicts name

@@ -12,19 +12,28 @@ import org.scalatest.funsuite.AnyFunSuite
 class BucketingSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
 
+  /** Write `df` as an 8-bucket external table under a fresh temp dir;
+    * returns its catalog name.
+    */
+  private def bucketed(df: org.apache.spark.sql.DataFrame, key: String): String = {
+    val path = java.nio.file.Files.createTempDirectory("graft-bucketed").toString + "/t"
+    Bucketing.writeBucketedExternal(df, path, Seq(key), 8)
+    Bucketing.tableNameFor(path)
+  }
+
   test("bucketed join plans without exchanges and matches the plain join") {
     val li  = Tables.lineitem(spark, TestSpark.Sf)
       .select("l_orderkey", "l_partkey", "l_quantity")
     val ord = Tables.orders(spark, TestSpark.Sf)
       .select("o_orderkey", "o_custkey", "o_totalprice")
-    Bucketing.writeBucketed(li, "li_b", "l_orderkey", 8)
-    Bucketing.writeBucketed(ord, "ord_b", "o_orderkey", 8)
+    val liB  = bucketed(li, "l_orderkey")
+    val ordB = bucketed(ord, "o_orderkey")
     try {
       // broadcast would bypass the bucketing entirely at this test scale
       val saved = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
       try {
-        val (lb, ob) = (spark.table("li_b"), spark.table("ord_b"))
+        val (lb, ob) = (spark.table(liB), spark.table(ordB))
         val joined = lb.join(ob, lb("l_orderkey") === ob("o_orderkey"))
         val plan = joined.queryExecution.executedPlan.toString
         assert(plan.contains("SortMergeJoin"), s"expected SMJ in:\n$plan")
@@ -36,8 +45,8 @@ class BucketingSpec extends AnyFunSuite {
         assert(joined.count() === expected)
       } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", saved)
     } finally {
-      spark.sql("DROP TABLE IF EXISTS li_b")
-      spark.sql("DROP TABLE IF EXISTS ord_b")
+      spark.sql(s"DROP TABLE IF EXISTS $liB")
+      spark.sql(s"DROP TABLE IF EXISTS $ordB")
     }
   }
 
@@ -61,9 +70,9 @@ class BucketingSpec extends AnyFunSuite {
   test("aggregation on the bucket key is also exchange-free") {
     val li = Tables.lineitem(spark, TestSpark.Sf)
       .select("l_orderkey", "l_quantity")
-    Bucketing.writeBucketed(li, "li_agg_b", "l_orderkey", 8)
+    val liB = bucketed(li, "l_orderkey")
     try {
-      val agg = spark.table("li_agg_b")
+      val agg = spark.table(liB)
         .groupBy("l_orderkey")
         .agg(sum("l_quantity").as("qty"))
       val plan = agg.queryExecution.executedPlan.toString
@@ -72,6 +81,6 @@ class BucketingSpec extends AnyFunSuite {
       val expected = li.groupBy("l_orderkey")
         .agg(sum("l_quantity")).count()
       assert(agg.count() === expected)
-    } finally spark.sql("DROP TABLE IF EXISTS li_agg_b")
+    } finally spark.sql(s"DROP TABLE IF EXISTS $liB")
   }
 }

@@ -1,7 +1,13 @@
 package graft
 
 import graft.sources.StoredIndex
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+import org.apache.spark.sql.classic.{Dataset => CDataset}
+import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
+import org.apache.spark.sql.execution.joins.BaseJoinExec
 import org.apache.spark.sql.functions._
 import org.scalatest.Assertions
 
@@ -11,19 +17,19 @@ object StoredIndexChecks extends Assertions {
   def sameRows(a: DataFrame, b: DataFrame): Boolean =
     a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty
 
+  /** Query `q`'s physical plan over the sf fixture (AQE's initial plan). */
+  private def planOf(spark: SparkSession, q: String): SparkPlan =
+    SparkEntry.queries(q)(spark, TestSpark.Sf)
+      .asInstanceOf[CDataset[Row]].queryExecution.executedPlan match {
+      case a: AdaptiveSparkPlanExec => a.executedPlan
+      case p => p
+    }
+
   /** Each query's plan reads at least one bucketed (hash-clustered) index
     * scan, and no path from such a scan up to its probe join carries an
     * Exchange: only the delta side of a probe may shuffle.
     */
   def assertNoIndexSideExchange(spark: SparkSession, queries: Seq[String]): Unit = {
-    import org.apache.spark.sql.classic.{Dataset => CDataset}
-    import org.apache.spark.sql.Row
-    import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
-    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
-    import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
-    import org.apache.spark.sql.execution.joins.BaseJoinExec
-    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
-
     def isBucketedScan(p: SparkPlan): Boolean = p match {
       case f: FileSourceScanExec =>
         f.relation.bucketSpec.isDefined &&
@@ -36,12 +42,7 @@ object StoredIndexChecks extends Assertions {
       else p.children.flatMap(paths).map(c => p :: c).toSeq
 
     queries.foreach { q =>
-      val qe = SparkEntry.queries(q)(spark, TestSpark.Sf)
-        .asInstanceOf[CDataset[Row]].queryExecution
-      val plan = qe.executedPlan match {
-        case a: AdaptiveSparkPlanExec => a.executedPlan
-        case p => p
-      }
+      val plan = planOf(spark, q)
       val ps = paths(plan)
       assert(ps.nonEmpty,
         s"$q: no bucketed (hash-clustered) index scan in the plan:\n$plan")
@@ -56,6 +57,33 @@ object StoredIndexChecks extends Assertions {
           s"$q: Exchange between the bucketed index scan and its probe join:\n$plan")
       }
     }
+  }
+
+  /** `q`'s probe join reads a bucketed index scan on one side and, on
+    * the other (the delta), exactly one Exchange: a hash exchange at
+    * the index's bucket count, so the delta's own aggregation exchange
+    * already satisfies the join and none is added for it.
+    */
+  def assertOneDeltaExchange(spark: SparkSession, q: String): Unit = {
+    val plan = planOf(spark, q)
+    def exchanges(p: SparkPlan) = p.collect { case e: ShuffleExchangeLike => e }
+    def bucketedScans(p: SparkPlan) =
+      p.collect { case f: FileSourceScanExec if f.relation.bucketSpec.isDefined => f }
+    val probes = plan.collect { case j: BaseJoinExec => j }.flatMap { j =>
+      Seq(j.left -> j.right, j.right -> j.left).collect {
+        case (index, delta) if bucketedScans(index).nonEmpty && exchanges(index).isEmpty =>
+          (bucketedScans(index).head, delta)
+      }
+    }
+    assert(probes.size === 1, s"$q: expected one probe join on a bucketed index:\n$plan")
+    val (scan, delta) = probes.head
+    val n = scan.relation.bucketSpec.get.numBuckets
+    val ex = exchanges(delta)
+    assert(ex.size === 1, s"$q: the delta side must exchange exactly once:\n$plan")
+    assert(ex.head.outputPartitioning match {
+      case h: HashPartitioning => h.numPartitions == n
+      case _ => false
+    }, s"$q: the delta exchange must hash to the index's $n buckets:\n$plan")
   }
 
   /** The artifacts a later session actually serves from — the tier's

@@ -60,15 +60,16 @@ class StoredIndexSpec extends AnyFunSuite {
     // its missing input
     assert(built(StoredIndex.Base, operators.Cdc.CdcTier) === Seq("cdc-store"))
     assert(built(StoredIndex.Compact, operators.Cdc.CdcTier) === Seq("cdc-seg", "cdc-compact"))
-    // every level lands at the DerivedCache key of its historical name
-    // and fingerprint, so layouts built before the shared module are reused
+    // every level lands at the DerivedCache key of its pinned name and
+    // fingerprint; the test session's 4 shuffle partitions give b=4
+    assert(spark.sessionState.conf.numShufflePartitions === 4)
     val layouts = Seq(
-      (operators.Cdc.CdcTier, "cdc-store", "v=3", "cdc-seg", "seg=8;v=1",
-        "cdc-compact", "seg=8;v=1"),
-      (operators.Cdc.SubstrTier, "substr-index", "w=50;df=64;v=2",
-        "substr-seg", "w=50;df=64;seg=8;v=1", "substr-compact", "w=50;df=64;seg=8;v=2"),
-      (operators.Dedup.MinhashTier, "dedup-base", "k=64;cap=100;v=3",
-        "minhash-seg", "k=64;cap=100;seg=8;v=1", "minhash-compact", "k=64;cap=100;seg=8;v=1"))
+      (operators.Cdc.CdcTier, "cdc-store", "b=4;v=3", "cdc-seg", "seg=8;b=4;v=1",
+        "cdc-compact", "seg=8;b=4;v=1"),
+      (operators.Cdc.SubstrTier, "substr-index", "w=50;df=64;b=4;v=2",
+        "substr-seg", "w=50;df=64;seg=8;b=4;v=1", "substr-compact", "w=50;df=64;seg=8;b=4;v=2"),
+      (operators.Dedup.MinhashTier, "dedup-base", "k=64;cap=100;b=4;v=3",
+        "minhash-seg", "k=64;cap=100;seg=8;b=4;v=1", "minhash-compact", "k=64;cap=100;seg=8;b=4;v=1"))
     layouts.foreach { case (tier, bn, bf, sn, sf, cn, cf) =>
       Seq((StoredIndex.Base, bn, bf), (StoredIndex.Seg, sn, sf), (StoredIndex.Compact, cn, cf))
         .foreach { case (level, name, fp) =>
@@ -76,6 +77,71 @@ class StoredIndexSpec extends AnyFunSuite {
           assert(d === DerivedCache.dir(tmp, name, fp)(_ => fail(s"$name was not built")))
         }
     }
+  }
+
+  test("the bucket count is the session's shuffle width, raised by the corpus bytes") {
+    val split = StoredIndex.IndexBucketBytes
+    // a tiny corpus (the sf fixture) or none at all gives the shuffle width
+    assert(StoredIndex.buckets(spark, TestSpark.Sf) === 4)
+    assert(StoredIndex.bucketsFor(4, 0L) === 4)
+    assert(StoredIndex.bucketsFor(32, 4 * split) === 32)
+    // past the width, every started scan split adds one bucket
+    Seq(5, 17, 800).foreach { k =>
+      assert(StoredIndex.bucketsFor(4, k * split) === k)
+      assert(StoredIndex.bucketsFor(4, (k - 1) * split + 1) === k)
+      assert(StoredIndex.bucketsFor(4, k * split + 1) === k + 1)
+    }
+  }
+
+  test("base, segment and compact of a tier share one bucket count, named in the fingerprint") {
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    import org.apache.spark.sql.execution.datasources.BucketingUtils
+    val tmp = plantedCorpus()
+    val n = StoredIndex.buckets(spark, tmp)
+    Seq(operators.Cdc.CdcTier, operators.Cdc.SubstrTier, operators.Dedup.MinhashTier)
+      .foreach { tier =>
+        Seq(StoredIndex.Base, StoredIndex.Seg, StoredIndex.Compact).foreach { level =>
+          val d = StoredIndex.dir(spark, tmp, tier, level)
+          val fp = new String(
+            java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(d, "_GRAFT_DONE")), "UTF-8")
+          assert(fp.contains(s"b=$n;v="), s"${tier.label}/$level fingerprint: $fp")
+          tier.tables.zip(StoredIndex.tables(spark, tmp, tier, level)).foreach { case (t, df) =>
+            val scans = df.queryExecution.sparkPlan.collect { case f: FileSourceScanExec => f }
+            assert(scans.map(_.relation.bucketSpec.map(_.numBuckets)) === Seq(Some(n)),
+              s"${tier.label}/$level/${t.suffix}")
+            // the files themselves were written at n buckets
+            val ids = new java.io.File(s"$d/${t.suffix}").listFiles()
+              .map(_.getName).filter(_.endsWith(".parquet"))
+              .flatMap(BucketingUtils.getBucketId(_))
+            assert(ids.forall(i => i >= 0 && i < n), s"${tier.label}/$level/${t.suffix}: $ids")
+          }
+        }
+      }
+  }
+
+  test("a session of another shuffle width opens its own layouts, never this count's tables") {
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    val tmp = plantedCorpus()
+    val tier = operators.Cdc.CdcTier
+    val d4 = StoredIndex.dir(spark, tmp, tier, StoredIndex.Base)
+    val other = spark.newSession()
+    other.conf.set("spark.sql.shuffle.partitions", "3")
+    assert(StoredIndex.buckets(other, tmp) === 3)
+    val d3 = StoredIndex.dir(other, tmp, tier, StoredIndex.Base)
+    assert(d3 !== d4)
+    val t3 = StoredIndex.tables(other, tmp, tier, StoredIndex.Base).head
+    val scan = t3.queryExecution.sparkPlan.collect { case f: FileSourceScanExec => f }.head
+    assert(scan.relation.bucketSpec.map(_.numBuckets) === Some(3))
+    assert(scan.relation.location.rootPaths.forall(_.toString.contains(new java.io.File(d3).getName)),
+      s"3-bucket read of ${scan.relation.location.rootPaths}")
+    // same rows at either count
+    val t4 = StoredIndex.tables(spark, tmp, tier, StoredIndex.Base).head
+    assert(StoredIndexChecks.sameRows(t3, t4))
+  }
+
+  test("cdc_incremental exchanges its delta once, at the index's width, and never the index") {
+    StoredIndexChecks.assertNoIndexSideExchange(spark, Seq("cdc_incremental"))
+    StoredIndexChecks.assertOneDeltaExchange(spark, "cdc_incremental")
   }
 
   test("the stored posting index keeps presence rows for boilerplate windows") {
@@ -153,11 +219,12 @@ class StoredIndexSpec extends AnyFunSuite {
       .toDF("h", "base_docs")
     val b = (250L until 750L).map(h => (h, Seq(h + 10000L)))
       .toDF("h", "base_docs")
-    graft.sources.Bucketing.writeBucketedExternal(a, s"$tmp/a", Seq("h"))
-    graft.sources.Bucketing.writeBucketedExternal(b, s"$tmp/b", Seq("h"))
+    val n = 32
+    graft.sources.Bucketing.writeBucketedExternal(a, s"$tmp/a", Seq("h"), n)
+    graft.sources.Bucketing.writeBucketedExternal(b, s"$tmp/b", Seq("h"), n)
     val ddl = "h BIGINT, base_docs ARRAY<BIGINT>"
-    val ra = graft.sources.Bucketing.readBucketed(spark, s"$tmp/a", Seq("h"), ddl)
-    val rb = graft.sources.Bucketing.readBucketed(spark, s"$tmp/b", Seq("h"), ddl)
+    val ra = graft.sources.Bucketing.readBucketed(spark, s"$tmp/a", Seq("h"), ddl, n)
+    val rb = graft.sources.Bucketing.readBucketed(spark, s"$tmp/b", Seq("h"), ddl, n)
     // the compaction kernel itself: the capped merge, lists well under cap
     val merged = StoredIndex.capped(Seq("h"), 64).fold(ra, rb)
       .select(col("h"), col("base_docs"))
@@ -172,7 +239,7 @@ class StoredIndexSpec extends AnyFunSuite {
     spark.listenerManager.register(listener)
     try {
       graft.sources.Bucketing.writeBucketedExternal(
-        merged, s"$tmp/m", Seq("h"), aligned = true)
+        merged, s"$tmp/m", Seq("h"), n, aligned = true)
       org.apache.spark.GraftTestBus.drain(spark.sparkContext)
       val writePlans = plans.toArray(Array.empty[QueryExecution])
       assert(writePlans.nonEmpty, "no insert QueryExecution captured")
@@ -185,7 +252,7 @@ class StoredIndexSpec extends AnyFunSuite {
 
     // the aligned layout is a real bucketed table: re-read and verify
     // content equals the merge input
-    val rm = graft.sources.Bucketing.readBucketed(spark, s"$tmp/m", Seq("h"), ddl)
+    val rm = graft.sources.Bucketing.readBucketed(spark, s"$tmp/m", Seq("h"), ddl, n)
     assert(rm.count() === 750L)
     assert(rm.filter(size(col("base_docs")) === 2).count() === 250L)
   }

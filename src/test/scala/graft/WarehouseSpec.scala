@@ -164,7 +164,10 @@ class WarehouseSpec extends AnyFunSuite {
       f.groupBy(col("o_custkey"))
         .agg(count(lit(1)).as("n"), sum(col("o_totalprice").cast(Det.Money)).as("v"))
     val snapDf = partial(orders.filter(col("o_orderdate") < cut))
-    graft.sources.Bucketing.writeBucketed(snapDf, "wh_snap_b", "o_custkey", 8)
+    val snapPath =
+      java.nio.file.Files.createTempDirectory("graft-wh-snap").toString + "/snap"
+    graft.sources.Bucketing.writeBucketedExternal(snapDf, snapPath, Seq("o_custkey"), 8)
+    val snapB = graft.sources.Bucketing.tableNameFor(snapPath)
     val savedAqe = spark.conf.get("spark.sql.adaptive.enabled")
     val savedBc  = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
@@ -173,7 +176,7 @@ class WarehouseSpec extends AnyFunSuite {
       val delta = partial(orders.filter(col("o_orderdate") >= cut))
         .withColumnRenamed("n", "nd").withColumnRenamed("v", "vd")
       val merged =
-        spark.table("wh_snap_b").join(delta, Seq("o_custkey"), "full_outer")
+        spark.table(snapB).join(delta, Seq("o_custkey"), "full_outer")
       val plan = merged.queryExecution.executedPlan
       val smjs = plan.collect {
         case j: org.apache.spark.sql.execution.joins.SortMergeJoinExec => j
@@ -192,7 +195,7 @@ class WarehouseSpec extends AnyFunSuite {
     } finally {
       spark.conf.set("spark.sql.adaptive.enabled", savedAqe)
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", savedBc)
-      spark.sql("DROP TABLE IF EXISTS wh_snap_b")
+      spark.sql(s"DROP TABLE IF EXISTS $snapB")
     }
   }
 
