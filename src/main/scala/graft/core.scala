@@ -305,8 +305,6 @@ object Tables {
   *    reliable `checkpoint()`;
   *  - otherwise → `localCheckpoint()` (single-JVM local mode, specs,
   *    the sandbox bench).
-  * `spark.graft.reliableCheckpoint.enabled=false` forces local even
-  * when a dir is set (a cluster that wants speed over fault recovery).
   * Checkpoint files follow Spark's standard lifecycle: cleaned by the
   * ContextCleaner when `spark.cleaner.referenceTracking.cleanCheckpoints`
   * is on, else left for the job owner's dir hygiene.
@@ -335,10 +333,6 @@ object Ckpt {
     // being triaged, and explain() shows the full uncut tree anyway
     if (confOpt(spark, "spark.graft.lineageCut.disabled").exists(_.toLowerCase == "true"))
       return df
-    val enabled =
-      confOpt(spark, "spark.graft.reliableCheckpoint.enabled")
-        .forall(_.toLowerCase != "false")
-    if (!enabled) return df.localCheckpoint(eager)
     confOpt(spark, "spark.graft.checkpoint.dir") match {
       case Some(d) =>
         val prev = applied.get(sc)
@@ -445,7 +439,7 @@ object Det {
   /** Engine-portable 60-bit content hash of a string column as a
     * DECIMAL(38,0) term — safe to SUM without overflow. DuckDB twin:
     * ('0x' || substr(md5(e), 1, 15))::BIGINT. Used by the anti-entropy
-    * checksums (Quality.tableChecksum, streaming.ChecksumStream).
+    * checksum Quality.tableChecksum.
     */
   def md5h60Col(c: Column): Column =
     conv(substring(md5(c), 1, 15), 16, 10).cast(DecimalType(38, 0))

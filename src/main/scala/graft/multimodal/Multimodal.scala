@@ -22,8 +22,6 @@ import org.apache.spark.sql.functions._
 object Multimodal {
 
   final case class MediaRow(doc_id: Long, content: Array[Byte], kind: String)
-  final case class FeatureRow(
-      doc_id: Long, n_bytes: Long, features: Array[Double])
 
   /** Media table synthesized from `documents`: UTF-8 payload as the
     * opaque binary column plus a typed metadata struct — the layout a
@@ -37,40 +35,6 @@ object Multimodal {
         lit("blob").as("kind"),
         col("n_chars").cast("long").as("n_bytes"),
         col("source").as("origin")).as("meta"))
-
-  /** 16-bin L1-normalized byte histogram — a generic binary feature next
-    * to the format-aware MediaCodec decode (used by decodeFeatures /
-    * MultimodalSpec for the opaque-payload path).
-    */
-  def byteHistogram(content: Array[Byte]): Array[Double] = {
-    val hist = new Array[Double](16)
-    var i = 0
-    while (i < content.length) {
-      hist((content(i) & 0xff) >> 4) += 1.0
-      i += 1
-    }
-    val total = content.length.toDouble.max(1.0)
-    var j = 0
-    while (j < 16) { hist(j) /= total; j += 1 }
-    hist
-  }
-
-  /** Per-partition batched decode: iterator→iterator keeps constant
-    * memory per task (a real decoder would additionally batch rows into
-    * codec-sized chunks — same contract).
-    */
-  def decodeFeatures(media: DataFrame): Dataset[FeatureRow] = {
-    val spark = media.sparkSession
-    import spark.implicits._
-    media
-      .select(col("doc_id"), col("content"))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { rows =>
-        rows.map { case (id, content) =>
-          FeatureRow(id, content.length.toLong, byteHistogram(content))
-        }
-      }
-  }
 
   final case class DecodedRow(
       doc_id: Long, kind: String, width: Long, height: Long,
@@ -221,8 +185,8 @@ object Multimodal {
   /** Media manifest: per-origin blob accounting over the binary column —
     * counts, total/avg payload bytes, distinct payloads (two-stage on
     * md5 of the binary — never shuffles payloads), and the frame count a
-    * 64-byte frame slicer would produce. Unlike the stub decoder these
-    * are all REAL byte-level operations, and because the fixture payload
+    * 64-byte frame slicer would produce. These are all REAL byte-level
+    * operations, and because the fixture payload
     * is the UTF-8 text, every measure has an exact SQL twin over the
     * text column — so the binary pipeline is oracle-checked end to end.
     */

@@ -193,103 +193,6 @@ object Bucketing {
       |GROUP BY 1
       |ORDER BY tile""".stripMargin
 
-  private def rmTree(f: java.io.File): Unit = {
-    Option(f.listFiles()).getOrElse(Array.empty).foreach(rmTree); f.delete(); ()
-  }
-
-  /** Heal any state a crashed [[compact]] left behind — the recovery
-    * half of the commit protocol (see compact's docstring). Plain
-    * filesystems have no two-directory atomic swap, so the protocol
-    * makes every intermediate state DETERMINISTICALLY recoverable
-    * instead: the rewrite's `_SUCCESS` marker is the commit record
-    * (the same role the manifest file plays in
-    * EventStreams.mergeManifestBatch), and this function rolls each
-    * possible crash state forward (marker present → finish the swap)
-    * or back (marker absent → restore the original). Idempotent;
-    * called automatically at the start of every compact(), and safe
-    * for an operator/reader to call any time.
-    */
-  def recoverCompact(path: String): Unit = {
-    val base = path.stripSuffix("/")
-    val dir  = new java.io.File(base)
-    val next = new java.io.File(base + "._next")
-    val old  = new java.io.File(base + "._old")
-    val committed = new java.io.File(next, "_SUCCESS").exists()
-    if (dir.exists()) {
-      // crash before the swap started (next half-written or complete
-      // but unswapped — a retry rewrites it), or after the swap-in but
-      // before the old dir was pruned; the table itself is intact
-      if (next.exists()) rmTree(next)
-      if (old.exists()) rmTree(old)
-    } else if (old.exists()) {
-      // crash mid-swap: the table was moved aside. The marker decides:
-      // a COMPLETE rewrite rolls forward (finish the swap), anything
-      // else rolls back to the original
-      if (committed && next.renameTo(dir)) rmTree(old)
-      else {
-        require(old.renameTo(dir), s"recoverCompact: could not restore $path")
-        if (next.exists()) rmTree(next)
-      }
-    }
-  }
-
-  /** Small-file compaction: rewrite a parquet directory into
-    * ⌈bytes/target⌉ files. Streaming sinks and incremental upserts
-    * accrete files far smaller than a scan-efficient size; compaction
-    * restores (file count ∝ data size) so scans stop paying per-file
-    * open/footer costs — at 100 TB an uncompacted events table can hit
-    * millions of files and spend longer listing than reading.
-    *
-    * Commit protocol (crash-safe at every step, CompactCrashSpec
-    * injects a crash at the widest window):
-    *   1. rewrite to `<path>._next` (the `_SUCCESS` marker = the
-    *      commit record);
-    *   2. rename `<path>` → `<path>._old`;
-    *   3. rename `<path>._next` → `<path>`;
-    *   4. prune `<path>._old`.
-    * A crash anywhere leaves a state [[recoverCompact]] (run on the
-    * next compact(), or by any operator/reader) resolves without data
-    * loss: before step 2 the table is untouched; between 2 and 3 the
-    * marker rolls the swap forward; after 3 the old dir is garbage.
-    * Callers needing concurrent readers DURING compaction should route
-    * reads through a pointer (the streaming view's versioned commit
-    * pattern); for exclusive maintenance windows this protocol is the
-    * whole story.
-    *
-    * @return (filesBefore, filesAfter)
-    */
-  def compact(
-      spark: SparkSession, path: String, targetBytes: Long,
-      crashHook: () => Unit = () => ()): (Int, Int) = {
-    def parquetFiles(p: java.io.File): Seq[java.io.File] =
-      Option(p.listFiles()).getOrElse(Array.empty).toSeq.flatMap { f =>
-        if (f.isDirectory) parquetFiles(f)
-        else if (f.getName.endsWith(".parquet")) Seq(f)
-        else Nil
-      }
-    recoverCompact(path)
-    val base   = path.stripSuffix("/")
-    val dir    = new java.io.File(base)
-    val before = parquetFiles(dir)
-    val total  = before.map(_.length()).sum
-    val nOut   = math.max(1, math.ceil(total.toDouble / targetBytes).toInt)
-    val next   = new java.io.File(base + "._next")
-    spark.read.parquet(path)
-      .repartition(nOut)
-      .write.mode(SaveMode.Overwrite).parquet(next.getPath)
-    val old = new java.io.File(base + "._old")
-    require(dir.renameTo(old), s"could not move $path aside")
-    crashHook() // spec-injected crash: the widest torn window (no table dir)
-    if (!next.renameTo(dir)) {
-      // roll back: the original table comes back before we report failure
-      old.renameTo(dir)
-      rmTree(next)
-      throw new IllegalStateException(s"could not swap $next into $path; original restored")
-    }
-    rmTree(old)
-    (before.length, parquetFiles(dir).length)
-  }
-
   val defs: Map[String, QueryDef] = Map(
     "zorder_tile_stats" -> QueryDef(zorderTileStats, Some(zorderTileStatsSql)))
 }

@@ -71,7 +71,8 @@ object DerivedCache {
     md.digest(s.getBytes("UTF-8")).take(16).map("%02x".format(_)).mkString
   }
 
-  private def deleteRecursively(f: java.io.File): Unit = {
+  /** Best-effort recursive delete of a local dir (or file). */
+  private[graft] def deleteRecursively(f: java.io.File): Unit = {
     if (f.isDirectory)
       Option(f.listFiles()).getOrElse(Array.empty).foreach(deleteRecursively)
     f.delete(); ()

@@ -2,9 +2,8 @@ package graft.streaming
 
 import graft.{Det, QueryDef, Tables}
 import graft.Ckpt.CutOps
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Event-time processing over the `events` stream. The transforms are
   * written against a plain DataFrame so the SAME code runs in batch
@@ -45,8 +44,8 @@ object EventStreams {
 
   /** Adapter from Spark's built-in unbounded sources (`rate`,
     * `rate-micro-batch`: columns `timestamp`, `value`) to the engine's
-    * events shape — the soak harness for every stateful op above without
-    * a message bus in the loop. Deterministic in `value`, so a
+    * events shape — the soak harness for the session windows and the
+    * manifest view below without a message bus in the loop. Deterministic in `value`, so a
     * rate-micro-batch stream is fully reproducible.
     */
   def rateToEvents(rate: DataFrame, users: Long): DataFrame =
@@ -80,91 +79,6 @@ object EventStreams {
       .agg(
         count(lit(1)).as("n_events"),
         Det.detRound(Det.moneySum(col("value")), 2).as("total_value"))
-
-  final case class UserRunning(user_id: Long, n_events: Long, total_value: Double)
-
-  /** Custom streaming state: per-user running event count + value sum via
-    * flatMapGroupsWithState — the KeyValueGroupedDataset stateful-op
-    * surface (SURVEY.md §2.8's "custom state" extension point). State is
-    * one (count, sum) pair per user; each micro-batch emits the updated
-    * running totals for the users it touched. StreamingSpec drives it
-    * across multiple micro-batches and checks state carries over.
-    */
-  def runningUserTotals(events: DataFrame): Dataset[UserRunning] = {
-    val spark = events.sparkSession
-    import spark.implicits._
-    events
-      .select(col("user_id"), col("value"))
-      .as[(Long, Double)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState(OutputMode.Update, GroupStateTimeout.NoTimeout)(
-        (uid: Long, rows: Iterator[(Long, Double)], state: GroupState[(Long, Double)]) => {
-          val (n0, v0) = state.getOption.getOrElse((0L, 0.0))
-          var n = n0; var v = v0
-          rows.foreach { case (_, value) => n += 1; v += value }
-          state.update((n, v))
-          Iterator(UserRunning(uid, n, v))
-        })
-  }
-
-  final case class ClosedDailySession(
-      user_id: Long, day: String, n_events: Long)
-
-  /** Stateful sessionization with EVENT-TIME TIMEOUT — the state-
-    * eviction surface (GroupStateTimeout.EventTimeTimeout) that
-    * runningUserTotals' NoTimeout form does not exercise. State is a
-    * per-(user, day) event count; when the watermark passes the day's
-    * last event + the gap, the group times out and emits one closed
-    * session, freeing the state. This is how unbounded keyspaces stay
-    * bounded in a production stream. Driven across time-split
-    * micro-batches in StreamingSpec.
-    */
-  def dailySessionsWithTimeout(
-      events: DataFrame, watermark: String, gapMs: Long): Dataset[ClosedDailySession] = {
-    val spark = events.sparkSession
-    import spark.implicits._
-    withEventTime(events)
-      .withWatermark("event_time", watermark)
-      // the watermarked column itself must flow into the stateful op —
-      // projecting it into a plain long would drop the watermark tag
-      .select(
-        col("user_id"),
-        date_format(col("event_time"), "yyyy-MM-dd").as("day"),
-        col("event_time"))
-      .as[(Long, String, java.sql.Timestamp)]
-      .groupByKey { case (uid, day, _) => (uid, day) }
-      .flatMapGroupsWithState(
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout)(
-        (key: (Long, String), rows: Iterator[(Long, String, java.sql.Timestamp)],
-         state: GroupState[(Long, Long)]) => {
-          if (state.hasTimedOut) {
-            val (n, _) = state.get
-            state.remove()
-            Iterator(ClosedDailySession(key._1, key._2, n))
-          } else {
-            val (n0, last0) = state.getOption.getOrElse((0L, 0L))
-            var n = n0; var last = last0
-            rows.foreach { case (_, _, t) => n += 1; if (t.getTime > last) last = t.getTime }
-            state.update((n, last))
-            // flatMapGroupsWithState does NOT drop late rows: a late event
-            // with last + gap <= watermark would make setTimeoutTimestamp
-            // throw and kill the query. Clamp to just past the watermark so
-            // the stale session closes on the next trigger instead.
-            state.setTimeoutTimestamp(
-              math.max(last + gapMs, state.getCurrentWatermarkMs() + 1))
-            Iterator.empty
-          }
-        })
-  }
-
-  /** Streaming exact dedup: drop re-deliveries of the same event_id
-    * within the watermark horizon — the streaming face of dedup_exact
-    * (state bounded by the watermark instead of growing forever).
-    */
-  def dedupedStream(events: DataFrame, watermark: String): DataFrame =
-    withEventTime(events)
-      .withWatermark("event_time", watermark)
-      .dropDuplicatesWithinWatermark("event_id")
 
   /** Batch-registered form: daily tumbling windows by event type, emitted
     * with string window bounds for cross-engine type stability. Oracle:
@@ -289,169 +203,10 @@ object EventStreams {
        |       ${Det.roundSql("CAST(SUM(lat_us) AS DOUBLE) / count(*) / 1e6", 6)} AS avg_latency_sec
        |FROM p""".stripMargin
 
-  /** foreachBatch incremental sink: maintains a parquet "materialized
-    * view" of per-user totals by merging each micro-batch's partial
-    * aggregate into the stored view.
-    *
-    * EXACTLY-ONCE via versioned commit: each batch writes a fresh
-    * `v=<batchId>` directory derived from the last COMMITTED version,
-    * then commits by atomically replacing the pointer file (write-temp +
-    * ATOMIC_MOVE — the single commit point). A crash anywhere before
-    * the pointer move leaves the committed version untouched; the
-    * re-delivered batch re-merges from that same committed version, so
-    * nothing is ever double-counted — there is no window between "data
-    * written" and "marker written" because readers only ever follow the
-    * pointer ([[currentView]]). Re-delivered already-committed batchIds
-    * are skipped outright. Superseded version dirs are pruned
-    * best-effort after commit. Driven (including a simulated replay) in
-    * StreamingSpec.
-    */
-  def incrementalUserTotals(
-      events: DataFrame, viewDir: String): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    events.writeStream
-      .outputMode("update")
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val spark = batch.sparkSession
-        val committed = lastCommittedBatch(viewDir)
-        if (batchId <= committed) () // replayed micro-batch: already merged
-        else {
-          val partial = batch
-            .groupBy(col("user_id"))
-            .agg(
-              count(lit(1)).as("n_events"),
-              sum(col("value").cast(Det.Money)).as("total_value"))
-          val merged =
-            if (committed >= 0) {
-              spark.read.parquet(s"$viewDir/v=$committed")
-                .unionByName(partial)
-                .groupBy(col("user_id"))
-                .agg(
-                  sum(col("n_events")).as("n_events"),
-                  sum(col("total_value")).as("total_value"))
-            } else partial
-          merged.write.mode("overwrite").parquet(s"$viewDir/v=$batchId")
-          commitBatch(viewDir, batchId) // the ONLY commit point (atomic)
-          // prune superseded versions (best-effort; readers follow the
-          // pointer, so a leftover dir is garbage, not a hazard)
-          if (committed >= 0) {
-            val old = new java.io.File(s"$viewDir/v=$committed")
-            def rm(f: java.io.File): Unit = {
-              Option(f.listFiles()).getOrElse(Array.empty).foreach(rm)
-              f.delete(); ()
-            }
-            rm(old)
-          }
-        }
-      }
-
-  /** The committed state of the versioned incremental view — the ONLY
-    * correct read path (reading viewDir recursively would see
-    * in-flight uncommitted versions).
-    */
-  def currentView(spark: SparkSession, viewDir: String): DataFrame = {
-    val committed = lastCommittedBatch(viewDir)
-    require(committed >= 0, s"no committed version under $viewDir")
-    spark.read.parquet(s"$viewDir/v=$committed")
-  }
-
-  /** Sidecar batch-commit marker for the foreachBatch view (kept OUTSIDE
-    * viewDir so the parquet overwrite cannot clobber it).
-    */
-  private def commitFile(viewDir: String): java.nio.file.Path =
-    java.nio.file.Paths.get(viewDir.stripSuffix("/") + "._committed_batch")
-
-  def lastCommittedBatch(viewDir: String): Long = {
-    val p = commitFile(viewDir)
-    if (java.nio.file.Files.exists(p))
-      new String(java.nio.file.Files.readAllBytes(p)).trim.toLong
-    else -1L
-  }
-
-  private def commitBatch(viewDir: String, batchId: Long): Unit = {
-    val p   = commitFile(viewDir)
-    val tmp = java.nio.file.Paths.get(p.toString + ".tmp")
-    java.nio.file.Files.write(tmp, batchId.toString.getBytes)
-    // atomic pointer replace — the versioned view's single commit point
-    java.nio.file.Files.move(
-      tmp, p,
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-    ()
-  }
-
-  /** Upsert-by-partition form of the incremental view: the view is
-    * hash-bucketed on user_id (`bkt=` directory partitions) and each
-    * micro-batch rewrites ONLY the buckets its users touch — read is
-    * partition-pruned to those buckets, write uses dynamic partition
-    * overwrite. Per-batch work is O(touched buckets), not O(view): at
-    * 100 TB a billion-user view with a million-event batch touches a
-    * bounded set of buckets while the full-overwrite form rewrites
-    * every user every batch. Bucket count fixes the view layout, so it
-    * is a constructor parameter, not a tunable.
-    *
-    * Delivery: AT-LEAST-ONCE with an idempotent-skip guard. The sidecar
-    * batchId marker closes the common restart path (re-delivered
-    * already-committed batches are skipped), but because buckets are
-    * overwritten IN PLACE, a crash between the bucket overwrite and the
-    * marker write re-merges that batch on restart — in-place upserts on
-    * a plain filesystem have no atomic multi-file commit. The versioned
-    * [[incrementalUserTotals]] form is exactly-once at O(view)/batch;
-    * getting BOTH exactly-once and O(touched) is precisely what
-    * transaction-log table formats exist for.
-    */
-  def incrementalUserTotalsPartitioned(
-      events: DataFrame, viewDir: String, buckets: Int = 64)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    events.writeStream
-      .outputMode("update")
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val spark = batch.sparkSession
-        val committed = lastCommittedBatch(viewDir)
-        if (batchId <= committed) () // replayed micro-batch: already merged
-        else {
-          val partial = batch
-            .groupBy(col("user_id"))
-            .agg(
-              count(lit(1)).as("n_events"),
-              sum(col("value").cast(Det.Money)).as("total_value"))
-            .withColumn("bkt", pmod(hash(col("user_id")), lit(buckets)))
-          val merged =
-            if (new java.io.File(viewDir).exists()) {
-              // bounded driver collect: at most `buckets` values
-              val touched = partial.select(col("bkt")).distinct()
-                .collect().map(_.getInt(0)).toSeq
-              spark.read.parquet(viewDir)
-                .filter(col("bkt").isin(touched: _*)) // partition-pruned scan
-                .unionByName(partial)
-                .groupBy(col("user_id"), col("bkt"))
-                .agg(
-                  sum(col("n_events")).as("n_events"),
-                  sum(col("total_value")).as("total_value"))
-            } else partial
-          merged
-            // canonical physical schema: sum() widens decimal precision
-            // per merge, and buckets are written in DIFFERENT batches —
-            // without this cast the bucket files drift apart and a later
-            // partition-merged read fails on the type mismatch
-            .select(
-              col("user_id"),
-              col("n_events").cast("long").as("n_events"),
-              col("total_value").cast("decimal(28,2)").as("total_value"),
-              col("bkt"))
-            .cutLineage() // materialize BEFORE touching the dir being read
-            .write
-            .mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("bkt")
-            .parquet(viewDir)
-          commitBatch(viewDir, batchId)
-        }
-      }
-
   // ---------------------------------------------------------------------
-  // Manifest-committed incremental view: exactly-once AND O(touched
-  // buckets) per batch — the mini transaction log the two forms above
-  // trade off against each other. Layout:
+  // Manifest-committed incremental view of per-user totals: exactly-once
+  // AND O(touched buckets) per batch — a mini transaction log over a
+  // hash-bucketed parquet view. Layout:
   //
   //   viewDir/v=<batchId>/bkt=<b>/part-*.parquet   (fresh dir per batch;
   //                                                 only touched buckets)
@@ -464,9 +219,9 @@ object EventStreams {
   // point covering every bucket the batch rewrote. A crash anywhere
   // before the move leaves the previous manifest: readers (which only
   // ever resolve paths through the manifest) can never observe a torn
-  // multi-bucket write. Batches write to FRESH v=<batchId> dirs, so the
-  // in-place-overwrite window of incrementalUserTotalsPartitioned does
-  // not exist; replayed batches are skipped by the committed-id guard,
+  // multi-bucket write. Batches write to FRESH v=<batchId> dirs, never
+  // over a bucket a reader may be following; replayed batches are
+  // skipped by the committed-id guard,
   // and a half-written v dir from a crashed attempt is clobbered by the
   // replay's overwrite then superseded. Superseded version dirs are
   // pruned best-effort after commit. Crash-injection spec: StreamingSpec.
@@ -548,8 +303,9 @@ object EventStreams {
       col("total_value").cast("decimal(28,2)").as("total_value"),
       col("bkt").cast("int").as("bkt"))
 
-  /** One micro-batch of the manifest view, factored out of foreachBatch
-    * so the crash-injection spec can drive it directly. `crashHook` runs
+  /** One micro-batch of the manifest view: the body a stream's
+    * `foreachBatch` calls with its (batch, batchId) — StreamSoak and the
+    * specs do — and the crash-injection spec drives directly. `crashHook` runs
     * after the bucket data is fully written but BEFORE the manifest
     * commit — the widest torn-view window the protocol must survive.
     */
@@ -597,25 +353,9 @@ object EventStreams {
       Option(new java.io.File(viewDir).listFiles()).getOrElse(Array.empty)
         .filter(f => f.isDirectory && f.getName.startsWith("v="))
         .filterNot(f => live.contains(f.getName.stripPrefix("v=").toLong))
-        .foreach { f =>
-          def rm(g: java.io.File): Unit = {
-            Option(g.listFiles()).getOrElse(Array.empty).foreach(rm)
-            g.delete(); ()
-          }
-          rm(f)
-        }
+        .foreach(graft.sources.DerivedCache.deleteRecursively)
     }
   }
-
-  /** Streaming entry for the manifest view. */
-  def incrementalUserTotalsManifest(
-      events: DataFrame, viewDir: String, buckets: Int = 64)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    events.writeStream
-      .outputMode("update")
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        mergeManifestBatch(batch.toDF(), viewDir, buckets, batchId)
-      }
 
   /** Streaming twin of `conversion_funnel` (the stream_ts_anomaly
     * pattern): events arrive as a bounded file stream, each micro-batch

@@ -34,9 +34,6 @@ object StreamRunner {
       empty: => DataFrame): DataFrame = {
     val tmp    = java.nio.file.Files.createTempDirectory(tmpPrefix)
     val outDir = s"$tmp/out"
-    def rm(f: java.io.File): Unit = {
-      Option(f.listFiles).foreach(_.foreach(rm)); f.delete(); ()
-    }
     try {
       val query = spark.readStream
         .schema(schema)
@@ -56,6 +53,6 @@ object StreamRunner {
         // materialize BEFORE the finally deletes the tree being read
         finish(spark.read.parquet(outDir)).cutLineage()
       else empty
-    } finally rm(tmp.toFile)
+    } finally graft.sources.DerivedCache.deleteRecursively(tmp.toFile)
   }
 }

@@ -50,23 +50,6 @@ class BucketingSpec extends AnyFunSuite {
     }
   }
 
-  test("compaction shrinks file count, preserves rows, swaps atomically") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-compact").toFile
-    dir.deleteOnExit()
-    val path = dir.getAbsolutePath + "/events"
-    val ev = Tables.events(spark, TestSpark.Sf)
-    ev.repartition(40).write.parquet(path) // simulate sink accretion
-    val rowsBefore = spark.read.parquet(path).count()
-    val (before, after) =
-      graft.sources.Bucketing.compact(spark, path, targetBytes = 64L << 20)
-    assert(before >= 40, s"fixture should start fragmented, had $before")
-    assert(after < before && after >= 1, s"$before -> $after files")
-    assert(spark.read.parquet(path).count() === rowsBefore)
-    // no residue from the swap
-    assert(!new java.io.File(path + "._compacting").exists())
-    assert(!new java.io.File(path + "._precompact").exists())
-  }
-
   test("aggregation on the bucket key is also exchange-free") {
     val li = Tables.lineitem(spark, TestSpark.Sf)
       .select("l_orderkey", "l_quantity")

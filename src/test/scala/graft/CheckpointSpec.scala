@@ -47,18 +47,6 @@ class CheckpointSpec extends AnyFunSuite {
     }
   }
 
-  test("reliableCheckpoint.enabled=false forces local even with a dir set") {
-    import spark.implicits._
-    withCheckpointDir { dir =>
-      spark.conf.set("spark.graft.reliableCheckpoint.enabled", "false")
-      try {
-        val before = countFiles(dir)
-        assert(Ckpt.cut((1 to 5).toDF("x")).count() == 5)
-        assert(countFiles(dir) == before, "opt-out must not write checkpoint files")
-      } finally spark.conf.unset("spark.graft.reliableCheckpoint.enabled")
-    }
-  }
-
   test("lineageCut.disabled skips the cut entirely (construction stays lazy)") {
     import spark.implicits._
     spark.conf.set("spark.graft.lineageCut.disabled", "true")

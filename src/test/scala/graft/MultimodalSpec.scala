@@ -16,14 +16,6 @@ class MultimodalSpec extends AnyFunSuite {
     assert(media.count() === Tables.documents(spark, TestSpark.Sf).count())
   }
 
-  test("byte histogram is deterministic and L1-normalized") {
-    val bytes = "hello multimodal world".getBytes("UTF-8")
-    val f1    = Multimodal.byteHistogram(bytes)
-    val f2    = Multimodal.byteHistogram(bytes)
-    assert(f1.toSeq === f2.toSeq)
-    assert(math.abs(f1.sum - 1.0) < 1e-9)
-  }
-
   test("BMP roundtrip: encode → true header parse → closed-form stats") {
     import graft.multimodal.MediaCodec
     for (id <- Seq(0L, 2L, 40L, 398L)) {
@@ -63,14 +55,6 @@ class MultimodalSpec extends AnyFunSuite {
     // WAV whose data chunk length overruns the buffer
     val wav = MediaCodec.encodeWav(7L)
     assertThrows[IllegalArgumentException](MediaCodec.decode(wav.dropRight(4)))
-  }
-
-  test("decodeFeatures preserves rows and emits 16-dim features") {
-    val feats = Multimodal.decodeFeatures(media)
-    val rows  = feats.collect()
-    assert(rows.length === media.count())
-    assert(rows.forall(_.features.length === 16))
-    assert(rows.forall(r => math.abs(r.features.sum - 1.0) < 1e-9))
   }
 
   test("video_frame_sample: decimation before compute, keyframe = argmax of sampled") {

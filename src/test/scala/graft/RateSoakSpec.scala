@@ -1,6 +1,7 @@
 package graft
 
 import graft.streaming.EventStreams
+import org.apache.spark.sql.{Dataset, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.scalatest.funsuite.AnyFunSuite
@@ -46,9 +47,11 @@ class RateSoakSpec extends AnyFunSuite {
     val cp      = base.getAbsolutePath + "/cp"
 
     def start(): StreamingQuery =
-      EventStreams
-        .incrementalUserTotalsManifest(
-          rateEvents(500, users = 37, advanceMs = 1000), viewDir, buckets = 8)
+      rateEvents(500, users = 37, advanceMs = 1000).writeStream
+        .outputMode("update")
+        .foreachBatch { (b: Dataset[Row], batchId: Long) =>
+          EventStreams.mergeManifestBatch(b.toDF(), viewDir, buckets = 8, batchId)
+        }
         .option("checkpointLocation", cp)
         .trigger(Trigger.ProcessingTime(0))
         .start()

@@ -5,8 +5,8 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Round-15 additions: the minhash index LSM lifecycle (exchange-free
-  * probes + merge-closed compaction) and the crash-safe compact commit
-  * protocol (the rest of the round's LSM cases live in StoredIndexSpec).
+  * probes + merge-closed compaction); the rest of the round's LSM cases
+  * live in StoredIndexSpec.
   */
 class Round15AdditionsSpec extends AnyFunSuite {
   private def spark = TestSpark.spark
@@ -62,49 +62,5 @@ class Round15AdditionsSpec extends AnyFunSuite {
     StoredIndexChecks.assertNoIndexSideExchange(spark, Seq(
       "dedup_minhash_index_append", "dedup_minhash_index_compact",
       "cdc_store_append", "cdc_store_compact", "index_maintenance_plan"))
-  }
-
-  test("compact survives a crash between the swap renames (roll-forward by marker)") {
-    val s = spark
-    import s.implicits._
-    val tmp = java.nio.file.Files.createTempDirectory("graft-crash").toString
-    val path = s"$tmp/table"
-    (0L until 1000L).toDF("id")
-      .repartition(8).write.parquet(path)
-    val before = spark.read.parquet(path).as[Long].collect().sorted
-
-    // crash at the widest torn window: table moved aside, swap-in not done
-    val boom = intercept[RuntimeException] {
-      graft.sources.Bucketing.compact(
-        spark, path, targetBytes = 1L << 30,
-        crashHook = () => throw new RuntimeException("injected crash"))
-    }
-    assert(boom.getMessage === "injected crash")
-    assert(!new java.io.File(path).exists(), "crash state: table dir gone")
-    assert(new java.io.File(path + "._old").exists())
-
-    // recovery rolls FORWARD (the rewrite committed its _SUCCESS marker)
-    graft.sources.Bucketing.recoverCompact(path)
-    assert(new java.io.File(path).exists())
-    assert(!new java.io.File(path + "._old").exists())
-    assert(!new java.io.File(path + "._next").exists())
-    assert(spark.read.parquet(path).as[Long].collect().sorted === before)
-
-    // and a crash BEFORE the rewrite completed rolls BACK: fabricate the
-    // state (table aside, next dir without a marker)
-    val dir = new java.io.File(path)
-    assert(dir.renameTo(new java.io.File(path + "._old")))
-    val half = new java.io.File(path + "._next")
-    assert(half.mkdirs())
-    graft.sources.Bucketing.recoverCompact(path)
-    assert(new java.io.File(path).exists())
-    assert(!half.exists() && !new java.io.File(path + "._old").exists())
-    assert(spark.read.parquet(path).as[Long].collect().sorted === before)
-
-    // a normal compact after all that still works (the roll-forward
-    // already left the table compacted, so file count stays 1)
-    val (_, na) = graft.sources.Bucketing.compact(spark, path, 1L << 30)
-    assert(na === 1)
-    assert(spark.read.parquet(path).as[Long].collect().sorted === before)
   }
 }

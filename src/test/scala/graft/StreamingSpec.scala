@@ -1,6 +1,7 @@
 package graft
 
 import graft.streaming.EventStreams
+import org.apache.spark.sql.{Dataset, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import org.scalatest.funsuite.AnyFunSuite
@@ -49,106 +50,6 @@ class StreamingSpec extends AnyFunSuite {
     assert(streamed.toSeq === batch.toSeq)
   }
 
-  test("flatMapGroupsWithState carries running totals across micro-batches") {
-    val dir = Files.createTempDirectory("graft-stream-state").toFile
-    dir.deleteOnExit()
-    val batch = Tables.events(spark, TestSpark.Sf)
-    // two files → with maxFilesPerTrigger=1, two micro-batches
-    val Array(h1, h2) = batch.randomSplit(Array(0.5, 0.5), seed = 42)
-    h1.coalesce(1).write.parquet(dir.getAbsolutePath + "/f1")
-    h2.coalesce(1).write.parquet(dir.getAbsolutePath + "/f2")
-    val stream = spark.readStream
-      .schema(batch.schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(dir.getAbsolutePath + "/f*")
-    val q = EventStreams
-      .runningUserTotals(stream)
-      .writeStream
-      .outputMode("update")
-      .format("memory")
-      .queryName("running_totals")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination(120000)
-    // the LAST update per user must equal the batch totals
-    val finalTotals = spark
-      .sql("SELECT user_id, max(n_events) AS n FROM running_totals GROUP BY 1")
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
-    val expected = batch.groupBy("user_id").count()
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
-    assert(finalTotals === expected)
-    // more than one batch actually ran (state was exercised)
-    val updates = spark.sql("SELECT count(*) FROM running_totals").collect().head.getLong(0)
-    assert(updates > expected.size, "expected multiple micro-batch updates")
-  }
-
-  test("streaming dedup drops re-delivered events within the watermark") {
-    val dir = Files.createTempDirectory("graft-stream-dedup").toFile
-    dir.deleteOnExit()
-    val batch = Tables.events(spark, TestSpark.Sf).limit(200).cache()
-    // deliver the same 200 events twice (two files → duplicated stream)
-    batch.coalesce(1).write.parquet(dir.getAbsolutePath + "/f1")
-    batch.coalesce(1).write.parquet(dir.getAbsolutePath + "/f2")
-    val stream = spark.readStream.schema(batch.schema).parquet(dir.getAbsolutePath + "/f*")
-    val q = EventStreams
-      .dedupedStream(stream, "1 hour")
-      .writeStream
-      .outputMode("append")
-      .format("memory")
-      .queryName("deduped_stream")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination(120000)
-    val n = spark.sql("SELECT count(DISTINCT event_id), count(*) FROM deduped_stream")
-      .collect().head
-    assert(n.getLong(0) === 200L, "all distinct events must survive")
-    assert(n.getLong(1) === 200L, s"duplicates must be dropped, got ${n.getLong(1)}")
-    batch.unpersist()
-  }
-
-  test("event-time timeout closes per-day sessions once the watermark passes") {
-    val dir = Files.createTempDirectory("graft-stream-timeout").toFile
-    dir.deleteOnExit()
-    val raw = Tables.events(spark, TestSpark.Sf)
-    // time-split into two micro-batch files: early 45 days, then the rest
-    val minTs = raw.agg(min(col("ts"))).collect().head.getLong(0)
-    val cutoff = minTs + 45L * 86400 * 1000000L // ts is epoch-µs
-    raw.filter(col("ts") < cutoff).coalesce(1)
-      .write.parquet(dir.getAbsolutePath + "/src/f1")
-    raw.filter(col("ts") >= cutoff).coalesce(1)
-      .write.parquet(dir.getAbsolutePath + "/src/f2")
-    val stream = spark.readStream
-      .schema(raw.schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(dir.getAbsolutePath + "/src/f*")
-    val q = EventStreams
-      .dailySessionsWithTimeout(stream, "0 seconds", gapMs = 3600L * 1000)
-      .writeStream
-      .outputMode("append")
-      .format("memory")
-      .queryName("closed_sessions")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination(120000)
-    val closed = spark.sql("SELECT user_id, day, n_events FROM closed_sessions")
-      .collect().map(r => ((r.getLong(0), r.getString(1)), r.getLong(2))).toMap
-    val early = EventStreams.withEventTime(raw.filter(col("ts") < cutoff))
-      .groupBy(col("user_id"), date_format(col("event_time"), "yyyy-MM-dd").as("day"))
-      .count()
-      .collect().map(r => ((r.getLong(0), r.getString(1)), r.getLong(2))).toMap
-    // every closed session must exactly match the early-file counts
-    assert(closed.nonEmpty, "watermark advance must have closed sessions")
-    closed.foreach { case (k, n) =>
-      assert(early.contains(k), s"closed session $k not from the early file")
-      assert(early(k) === n, s"closed count mismatch for $k")
-    }
-    // all early days except possibly the boundary day must have closed
-    val lastEarlyDay = early.keys.map(_._2).max
-    early.keys.filter(_._2 < lastEarlyDay).foreach { k =>
-      assert(closed.contains(k), s"early session $k should have timed out")
-    }
-  }
-
   test("native session windows close identically in stream and batch") {
     val dir = Files.createTempDirectory("graft-stream-sesswin").toFile
     dir.deleteOnExit()
@@ -193,149 +94,6 @@ class StreamingSpec extends AnyFunSuite {
       assert(batchAll.contains(k), s"streamed session $k unknown to batch")
       assert(batchAll(k) === v, s"session $k diverged: $v vs ${batchAll(k)}")
     }
-  }
-
-  test("foreachBatch incremental view converges to the batch aggregate") {
-    val dir = Files.createTempDirectory("graft-stream-view").toFile
-    dir.deleteOnExit()
-    val viewDir = dir.getAbsolutePath + "/view"
-    val batch = Tables.events(spark, TestSpark.Sf)
-    val Array(h1, h2) = batch.randomSplit(Array(0.5, 0.5), seed = 7)
-    h1.coalesce(1).write.parquet(dir.getAbsolutePath + "/src/f1")
-    h2.coalesce(1).write.parquet(dir.getAbsolutePath + "/src/f2")
-    val stream = spark.readStream
-      .schema(batch.schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(dir.getAbsolutePath + "/src/f*")
-    val q = EventStreams
-      .incrementalUserTotals(stream, viewDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination(120000)
-    val view = EventStreams.currentView(spark, viewDir)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
-    val expected = batch.groupBy("user_id").count()
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
-    assert(view === expected)
-    // Replay: restarting the same source without a checkpoint re-delivers
-    // batchIds 0..1 (foreachBatch is at-least-once). The sidecar
-    // batch-commit guard must skip them — the view must NOT double-count.
-    assert(EventStreams.lastCommittedBatch(viewDir) === 1L)
-    val replay = spark.readStream
-      .schema(batch.schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(dir.getAbsolutePath + "/src/f*")
-    val q2 = EventStreams
-      .incrementalUserTotals(replay, viewDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q2.awaitTermination(120000)
-    val replayed = EventStreams.currentView(spark, viewDir)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
-    assert(replayed === expected, "replayed micro-batches were re-merged")
-  }
-
-  test("checkpointed restart resumes from committed offsets, not zero") {
-    val dir = Files.createTempDirectory("graft-stream-ckpt").toFile
-    dir.deleteOnExit()
-    val viewDir = dir.getAbsolutePath + "/view"
-    val ckpt    = dir.getAbsolutePath + "/ckpt"
-    val batch = Tables.events(spark, TestSpark.Sf)
-    val Array(h1, h2) = batch.randomSplit(Array(0.5, 0.5), seed = 11)
-    h1.coalesce(1).write.parquet(dir.getAbsolutePath + "/src/f1")
-    def start() = EventStreams
-      .incrementalUserTotals(
-        spark.readStream.schema(batch.schema)
-          .parquet(dir.getAbsolutePath + "/src/f*"),
-        viewDir)
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    val q1 = start(); q1.awaitTermination(120000)
-    assert(EventStreams.lastCommittedBatch(viewDir) === 0L)
-    // second file lands AFTER the first run committed its offsets
-    h2.coalesce(1).write.parquet(dir.getAbsolutePath + "/src/f2")
-    val q2 = start(); q2.awaitTermination(120000)
-    // a checkpointed restart continues the batchId sequence (1, not a
-    // replayed 0) — f1 is NOT re-read, f2 is merged exactly once
-    assert(EventStreams.lastCommittedBatch(viewDir) === 1L)
-    // only the committed version exists — superseded v=0 was pruned
-    assert(new java.io.File(viewDir).listFiles()
-      .count(_.getName.startsWith("v=")) === 1)
-    val view = EventStreams.currentView(spark, viewDir)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
-    val expected = batch.groupBy("user_id").count()
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
-    assert(view === expected, "checkpointed resume must converge exactly")
-  }
-
-  test("partitioned incremental view upserts only touched buckets") {
-    val dir = Files.createTempDirectory("graft-stream-pview").toFile
-    dir.deleteOnExit()
-    val viewDir = dir.getAbsolutePath + "/view"
-    val batch = Tables.events(spark, TestSpark.Sf)
-    // f1 = broad traffic (many buckets), f2 = ONE user's events — the
-    // second micro-batch must rewrite only that user's bucket
-    val oneUser = batch.select(col("user_id")).limit(1)
-      .collect().head.getLong(0)
-    batch.filter(col("user_id") =!= oneUser)
-      .coalesce(1).write.parquet(dir.getAbsolutePath + "/src/f1")
-    batch.filter(col("user_id") === oneUser)
-      .coalesce(1).write.parquet(dir.getAbsolutePath + "/src/f2")
-    val stream = spark.readStream
-      .schema(batch.schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(dir.getAbsolutePath + "/src/f*")
-    val q = EventStreams
-      .incrementalUserTotalsPartitioned(stream, viewDir, buckets = 16)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination(120000)
-    // converges to the batch aggregate (bucketing is layout, not truth)
-    val view = spark.read.parquet(viewDir)
-      .collect().map(r => (r.getAs[Long]("user_id"), r.getAs[Long]("n_events"))).toMap
-    val expected = batch.groupBy("user_id").count()
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
-    assert(view === expected)
-    assert(EventStreams.lastCommittedBatch(viewDir) === 1L)
-    // bucket-bounded upsert: batch 1 (one user) must leave every other
-    // bucket's files untouched — same parquet files, same timestamps
-    val bktDirs = new java.io.File(viewDir).listFiles()
-      .filter(f => f.isDirectory && f.getName.startsWith("bkt="))
-    assert(bktDirs.length > 2, "fixture should span many buckets")
-    val hotBkt = "bkt=" + spark.range(1)
-      .select(pmod(hash(lit(oneUser)), lit(16))).collect().head.getInt(0)
-    // append the one-user file to the SAME source: a fresh (no-checkpoint)
-    // query re-delivers f1/f2 as batches 0-1 (the guard must skip them)
-    // and merges f3 as batch 2 — rewriting only hotBkt
-    val before = bktDirs.map(d => d.getName ->
-      d.listFiles().filter(_.getName.endsWith(".parquet"))
-        .map(f => (f.getName, f.lastModified())).toSet).toMap
-    batch.filter(col("user_id") === oneUser)
-      .coalesce(1).write.parquet(dir.getAbsolutePath + "/src/f3")
-    val stream2 = spark.readStream
-      .schema(batch.schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(dir.getAbsolutePath + "/src/f*")
-    val q2 = EventStreams
-      .incrementalUserTotalsPartitioned(stream2, viewDir, buckets = 16)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q2.awaitTermination(120000)
-    val after = new java.io.File(viewDir).listFiles()
-      .filter(f => f.isDirectory && f.getName.startsWith("bkt="))
-      .map(d => d.getName ->
-        d.listFiles().filter(_.getName.endsWith(".parquet"))
-          .map(f => (f.getName, f.lastModified())).toSet).toMap
-    before.keys.filter(_ != hotBkt).foreach { b =>
-      assert(after(b) === before(b), s"untouched bucket $b was rewritten")
-    }
-    assert(after(hotBkt) !== before(hotBkt), "hot bucket must be upserted")
-    // and the double-merge is real this time (new batchId, not a replay):
-    val hot = spark.read.parquet(viewDir)
-      .filter(col("user_id") === oneUser)
-      .collect().head.getAs[Long]("n_events")
-    assert(hot === 2 * expected(oneUser), "second merge of the same rows")
   }
 
   test("stream-stream interval join matches the batch pair count") {
@@ -456,7 +214,16 @@ class StreamingSpec extends AnyFunSuite {
     // the replayed batch completes and merges EXACTLY once (the crashed
     // attempt's half-written v=1 dir is clobbered, not double-merged)
     EventStreams.mergeManifestBatch(events, viewDir, 16, 1)
-    assert(EventStreams.readManifest(viewDir)._1 === 1)
+    val (committed1, manifest1) = EventStreams.readManifest(viewDir)
+    assert(committed1 === 1)
+    // superseded versions are pruned: batch 1 touched every bucket, so
+    // the v=<n> dirs on disk are exactly the versions the manifest
+    // names — v=1 alone, batch 0's dir is gone
+    val onDisk = new java.io.File(viewDir).listFiles()
+      .filter(f => f.isDirectory && f.getName.startsWith("v="))
+      .map(_.getName.stripPrefix("v=").toLong).toSet
+    assert(onDisk === manifest1.values.toSet)
+    assert(onDisk === Set(1L))
     val view1 = snap()
     view0.foreach { case (u, (n0, _)) =>
       assert(view1(u)._1 === 2 * n0, s"user $u merged other than exactly twice")
@@ -482,8 +249,11 @@ class StreamingSpec extends AnyFunSuite {
       .schema(batch.schema)
       .option("maxFilesPerTrigger", "1")
       .parquet(dir.getAbsolutePath + "/src/f*")
-    val q = EventStreams
-      .incrementalUserTotalsManifest(stream, viewDir, buckets = 16)
+    val q = stream.writeStream
+      .outputMode("update")
+      .foreachBatch { (b: Dataset[Row], batchId: Long) =>
+        EventStreams.mergeManifestBatch(b.toDF(), viewDir, buckets = 16, batchId)
+      }
       .trigger(Trigger.AvailableNow())
       .start()
     q.awaitTermination(120000)
