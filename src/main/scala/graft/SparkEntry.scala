@@ -30,9 +30,18 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     Engagement.engagementVsSpend(spark, "/root/testdata/sf0.001")
 
-  /** One entry per implemented operator from SURVEY.md §2. */
+  /** One entry per implemented operator from SURVEY.md §2. Each build
+    * first registers the `graft_*` functions, so a session built without
+    * `GraftExtensions` (a plain `SparkSession.builder` one) resolves them
+    * too.
+    */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
-    all.map { case (name, d) => name -> d.build }
+    all.map { case (name, d) =>
+      name -> { (spark: SparkSession, dir: String) =>
+        graft.functions.GraftFunctions.register(spark)
+        d.build(spark, dir)
+      }
+    }
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omitted for non-SQL-expressible ops.

@@ -2,8 +2,9 @@ package graft.functions
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.catalyst.analysis.FunctionRegistry.FunctionBuilder
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
@@ -12,7 +13,7 @@ import org.apache.spark.unsafe.types.UTF8String
 /** Native Catalyst expressions for the LLM-pipeline operators — scalar
   * kernels that stay inside whole-stage codegen (each doGenCode emits a
   * single static call, no boxing, no UDF serialization penalty).
-  * Registered under `graft_*` SQL names via [[GraftFunctions.register]].
+  * Registered under `graft_*` SQL names by [[GraftFunctions]].
   */
 
 /** Cosine similarity over two float vectors, accumulated in double in
@@ -790,12 +791,12 @@ object GramStats {
   }
 }
 
-/** The `graft_*` SQL functions. A `GraftSession` already has five of
-  * them from [[GraftExtensions]]; query builders call [[register]] for
-  * the rest, and so that a bare session resolves every one.
+/** The `graft_*` SQL functions: one (name -> builder) table.
+  * [[GraftExtensions]] injects all of them into every session it builds;
+  * [[register]] adds them to a session built without it.
   */
 object GraftFunctions {
-  private val builders: Seq[(String, Seq[Expression] => Expression)] = Seq(
+  private val builders: Seq[(String, FunctionBuilder)] = Seq(
     "graft_cosine" -> (exprs => CosineSim(exprs(0), exprs(1))),
     "graft_sig_matches" -> (exprs => SigMatches(exprs(0), exprs(1))),
     "graft_sig_band_hit" ->
@@ -818,16 +819,22 @@ object GraftFunctions {
     "graft_morton" -> (exprs => MortonCode(exprs(0), exprs(1))),
     "graft_gram_stats" -> (exprs => GramStats(exprs(0), exprs(1).eval().asInstanceOf[Int])))
 
-  /** Register the `graft_*` functions the session's registry lacks.
-    * Idempotent: a name already there (injected by the extension or
-    * registered by an earlier query) is left alone, so repeated query
-    * construction neither replaces functions nor logs a warning each.
+  /** The table in the form `SparkSessionExtensions.injectFunction` takes. */
+  private[functions] val functions: Seq[(FunctionIdentifier, ExpressionInfo, FunctionBuilder)] =
+    builders.map { case (name, build) =>
+      (FunctionIdentifier(name), new ExpressionInfo("graft.functions", name), build)
+    }
+
+  /** Register the `graft_*` functions the session's registry lacks, for
+    * a session built without [[GraftExtensions]]. Idempotent: a name
+    * already there is left alone, so repeated calls neither replace
+    * functions nor log a warning each. `SparkEntry.queries` calls it
+    * before every query build.
     */
   def register(spark: SparkSession): Unit = {
     val reg = spark.sessionState.functionRegistry
-    builders.foreach { case (name, build) =>
-      if (!reg.functionExists(FunctionIdentifier(name)))
-        reg.createOrReplaceTempFunction(name, build, "built-in")
+    functions.foreach { case (id, info, build) =>
+      if (!reg.functionExists(id)) reg.registerFunction(id, info, build)
     }
   }
 }

@@ -1,51 +1,19 @@
 package graft.functions
 
 import org.apache.spark.sql.SparkSessionExtensions
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
-/** SparkSessionExtensions module registering the graft_* expressions at
-  * session build time — the deployment-grade alternative to the
-  * per-session GraftFunctions.register() (which remains as an idempotent
-  * in-query fallback). Wire with:
+/** The engine's session surface: the `TopKStrategy` planner strategy,
+  * the `WindowTopKRewrite` and `RangeJoinRewrite` optimizer rules, and
+  * every `graft_*` function of [[GraftFunctions]]. `GraftSession.builder`
+  * wires it in; elsewhere use
   * {{{ SparkSession.builder().withExtensions(new GraftExtensions) }}}
   * or `spark.sql.extensions=graft.functions.GraftExtensions`.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-
-  private def fn(
-      name: String,
-      usage: String,
-      builder: Seq[Expression] => Expression) =
-    (
-      FunctionIdentifier(name),
-      new ExpressionInfo("graft.functions", null, name, usage, ""),
-      builder)
-
   override def apply(e: SparkSessionExtensions): Unit = {
     e.injectPlannerStrategy(_ => org.apache.spark.sql.graft.TopKStrategy)
     e.injectOptimizerRule(_ => org.apache.spark.sql.graft.WindowTopKRewrite)
     e.injectOptimizerRule(_ => org.apache.spark.sql.graft.RangeJoinRewrite)
-    e.injectOptimizerRule(_ => org.apache.spark.sql.graft.IntervalJoinRewrite)
-    e.injectFunction(fn(
-      "graft_cosine",
-      "graft_cosine(a, b) - cosine similarity of two float vectors",
-      exprs => CosineSim(exprs(0), exprs(1))))
-    e.injectFunction(fn(
-      "graft_simhash",
-      "graft_simhash(tokens) - 64-bit simhash of a token array",
-      exprs => SimHash64(exprs.head)))
-    e.injectFunction(fn(
-      "graft_minhash",
-      "graft_minhash(shingles, k) - k-permutation minhash signature",
-      exprs => MinHashSig(exprs(0), exprs(1).eval().asInstanceOf[Int])))
-    e.injectFunction(fn(
-      "graft_minhash_tokens",
-      "graft_minhash_tokens(tokens, k) - minhash with in-kernel 3-gram shingling",
-      exprs => MinHashSig(exprs(0), exprs(1).eval().asInstanceOf[Int], tokenMode = true)))
-    e.injectFunction(fn(
-      "graft_lsh_bucket",
-      "graft_lsh_bucket(vec, table, planes) - random-hyperplane LSH bucket",
-      exprs => LshBucket(exprs(0), exprs(1), exprs(2).eval().asInstanceOf[Int])))
+    GraftFunctions.functions.foreach(e.injectFunction)
   }
 }

@@ -737,7 +737,6 @@ object Cdc {
     * planted-overlap fixtures.
     */
   private[graft] def dedupSubstringOf(docs: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     val win = docs
       .select(col("doc_id"), split(col("text"), " ").as("t"))
       .select(
@@ -819,7 +818,6 @@ object Cdc {
     * yields (pos, hash) directly; packed order == (doc, pos) order.
     */
   private def spanWin(docs: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     docs
       .select(col("doc_id"), split(col("text"), " ").as("t"))
       .filter(
@@ -1186,7 +1184,6 @@ object Cdc {
     * join).
     */
   private def winDistinct(docs: DataFrame, w: Int = SubstrW): DataFrame = {
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     docs
       .select(col("doc_id"), split(col("text"), " ").as("t"))
       .select(
@@ -1344,7 +1341,6 @@ object Cdc {
 
   private[graft] def dedupSubstringStripIncrementalOf(
       delta: DataFrame, idx: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(delta.sparkSession)
     val dwin = delta
       .select(col("doc_id"), split(col("text"), " ").as("t"))
       .filter(size(col("t")) >= SubstrW)
@@ -1697,7 +1693,6 @@ object Cdc {
     * crosser-heavy corpus and asserts the verdict flips.
     */
   def indexMaintenancePlan(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     Seq(SubstrTier, Dedup.MinhashTier, CdcTier)
       .map(StoredIndex.maintenanceRow(spark, dir, _))
       .reduce(_ unionByName _)
@@ -1840,7 +1835,6 @@ object Cdc {
     // winDistinct scans + three checkpoints. The if() generator wrapper
     // keeps InferFiltersFromGenerate from substituting the hash chain
     // into a pushed filter (the shingleIndex lesson).
-    graft.functions.GraftFunctions.register(spark)
     val armStructs = WCurveArms.map(w =>
       s"""struct(CAST($w AS INT) AS w,
          |  IF(size(t) >= $w, array_distinct(graft_window_hashes(t, $w)),

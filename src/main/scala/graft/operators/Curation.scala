@@ -29,7 +29,6 @@ object Curation {
     * AQE plans a single exchange per side at any scale.
     */
   def docRepetition(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val base = Tables
       .documents(spark, dir)
       .select(
@@ -414,7 +413,6 @@ object Curation {
     * by score reported.
     */
   def sampleDiverse(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val scored = Tables
       .documents(spark, dir)
       .select(
@@ -750,7 +748,6 @@ object Curation {
     * bucket-size cap, so no hot bucket can go quadratic.
     */
   def curationFunnel(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val k = Dedup.MinhashK
     // scan-fan (guide §2.5): `flagged` is persisted and every later
     // stage (keep-first hashing, minhash signing, band grouping) reads

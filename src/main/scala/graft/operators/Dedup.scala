@@ -2,7 +2,6 @@ package graft.operators
 
 import graft.{Det, QueryDef, Tables}
 import graft.Ckpt.CutOps
-import graft.functions.GraftFunctions
 import graft.sources.StoredIndex
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -522,7 +521,6 @@ object Dedup {
     * measures the same tier without the recall loss.
     */
   def dedupContainmentMinhash(spark: SparkSession, dir: String): DataFrame = {
-    GraftFunctions.register(spark)
     val (sigs, bands) = minhashBands(spark, dir, MinhashK)
     containmentMinhashOf(spark, dir, sigs, bands)
   }
@@ -720,7 +718,6 @@ object Dedup {
     s"CAST(len(list_filter(generate_series(1, $k), j -> sa.sig[j] = sb.sig[j])) AS DOUBLE) / $k"
 
   def dedupMinhash(spark: SparkSession, dir: String): DataFrame = {
-    GraftFunctions.register(spark)
     val (sigs, bands) = minhashBands(spark, dir, MinhashK)
     dedupMinhashOf(sigs, bands)
   }
@@ -770,7 +767,6 @@ object Dedup {
 
   /** Unordered full-corpus minhash pairs for internal consumers. */
   private def dedupMinhashUnordered(spark: SparkSession, dir: String): DataFrame = {
-    GraftFunctions.register(spark)
     val (sigs, bands) = minhashBands(spark, dir, MinhashK)
     dedupMinhashOfUnordered(sigs, bands)
   }
@@ -804,7 +800,6 @@ object Dedup {
     * shingle minhash by design).
     */
   def dedupSimhash(spark: SparkSession, dir: String): DataFrame = {
-    GraftFunctions.register(spark)
     dedupSimhashOf(Tables.documents(spark, dir))
   }
 
@@ -933,7 +928,6 @@ object Dedup {
 
   private[graft] def simhashThresholdCurveGuarded(
       spark: SparkSession, dir: String, cap: Long): DataFrame = {
-    GraftFunctions.register(spark)
     val nDocs = Tables.cachedCount(spark, dir, "documents")
     val (docs, m) =
       sampleAboveCap("simhash_threshold_curve", Tables.documents(spark, dir), nDocs, cap)
@@ -1219,7 +1213,6 @@ object Dedup {
     * keep-best routes can reuse the bounded connectivity edges.
     */
   private def minhashStarEdges(spark: SparkSession, dir: String): DataFrame = {
-      GraftFunctions.register(spark)
       val (sigs, bands) = minhashBands(spark, dir, MinhashK)
       // Star edges, not all pairs: clustering needs CONNECTIVITY, so
       // each bucket contributes (m-1) hub↔member edges — every member
@@ -1455,7 +1448,6 @@ object Dedup {
         if (overBudget) massOpt.get else nDocs,
         if (overBudget) pairBudget else ExactDocCap)
       def edges: DataFrame = {
-        GraftFunctions.register(spark)
         val (sigs, bands) = minhashBands(spark, dir, MinhashK)
         minhashStarEdges(spark, dir).unionByName(
           containmentMinhashOf(spark, dir, sigs, bands)
@@ -1665,7 +1657,6 @@ object Dedup {
       spark: SparkSession, base: (DataFrame, DataFrame), delta: DataFrame,
       deltaIsSmall: Boolean = false, shuffleHashDelta: Boolean = true)
       : (DataFrame, DataFrame) = {
-    GraftFunctions.register(spark)
     val k = MinhashK
     // bounded micro-batch (streaming): broadcast the delta so the probe
     // is exchange-free everywhere; corpus-proportional batch: SHUFFLE_HASH
@@ -1812,7 +1803,6 @@ object Dedup {
     * read/maintenance split, identical to the substring tier's.
     */
   def dedupMinhashIndexAppend(spark: SparkSession, dir: String): DataFrame = {
-    GraftFunctions.register(spark) // the index builders sign with graft_minhash_md5
     val delta = StoredIndex.batchDocs(Tables.documents(spark, dir))
     val segs = StoredIndex.probeLevels(spark, dir, MinhashTier)
       .map { case (l, ts) => l -> sigsAndBidx(ts) }
@@ -1837,7 +1827,6 @@ object Dedup {
       segs: Seq[(String, (DataFrame, DataFrame))],
       deltaIsSmall: Boolean = false, shuffleHashDelta: Boolean = true)
       : (DataFrame, DataFrame) = {
-    GraftFunctions.register(spark)
     val k = MinhashK
     // same size-gated build-side discipline as incrementalProbe
     def hinted(df: DataFrame): DataFrame =
@@ -1986,7 +1975,6 @@ object Dedup {
     * row-identical to a from-scratch build over base ∪ batch-1 docs.
     */
   def dedupMinhashIndexCompact(spark: SparkSession, dir: String): DataFrame = {
-    GraftFunctions.register(spark) // the index builders sign with graft_minhash_md5
     StoredIndex.cappedCompaction(spark, dir, MinhashTier, "hot", "n_buckets")
   }
 
@@ -2048,7 +2036,6 @@ object Dedup {
     *     running each additional tier.
     */
   def dedupPipelineReport(spark: SparkSession, dir: String): DataFrame = {
-    GraftFunctions.register(spark)
     val baseDoc = col("node") % 10 < 8 && col("node") =!= col("label")
     val exactFlagged = exactCcLabels(spark, dir)
       .filter(baseDoc).select(col("node").as("doc_id"))
@@ -2320,7 +2307,6 @@ object Dedup {
 
   private[graft] def lshBandSweepGuarded(
       spark: SparkSession, dir: String, cap: Long): DataFrame = {
-    GraftFunctions.register(spark)
     val k = MinhashK
     val nDocs = Tables.cachedCount(spark, dir, "documents")
     val (docs, m) =
@@ -2459,7 +2445,6 @@ object Dedup {
 
   private[graft] def minhashKCurveGuarded(
       spark: SparkSession, dir: String, cap: Long): DataFrame = {
-    GraftFunctions.register(spark)
     val nDocs = Tables.cachedCount(spark, dir, "documents")
     val (docs, m) =
       sampleAboveCap("minhash_k_curve", Tables.documents(spark, dir), nDocs, cap)
@@ -2563,7 +2548,6 @@ object Dedup {
 
   private[graft] def dedupPairQualityGuarded(
       spark: SparkSession, dir: String, cap: Long): DataFrame = {
-    GraftFunctions.register(spark)
     val nDocs = Tables.cachedCount(spark, dir, "documents")
     val (docs, m) =
       sampleAboveCap("dedup_pair_quality", Tables.documents(spark, dir), nDocs, cap)
@@ -2683,7 +2667,6 @@ object Dedup {
 
   private[graft] def dedupDetectorAgreementGuarded(
       spark: SparkSession, dir: String, cap: Long): DataFrame = {
-    GraftFunctions.register(spark)
     val nDocs = Tables.cachedCount(spark, dir, "documents")
     val (docs, m) =
       sampleAboveCap("dedup_detector_agreement", Tables.documents(spark, dir), nDocs, cap)
@@ -3086,7 +3069,6 @@ object Dedup {
     * no corpus-keyed join anywhere.
     */
   def splitContaminationFuzzy(spark: SparkSession, dir: String): DataFrame = {
-    GraftFunctions.register(spark)
     def splitOf(c: org.apache.spark.sql.Column) =
       when(substring(md5(concat(lit("split:"), c.cast("string"))), 1, 1) <= "b", "train")
         .when(substring(md5(concat(lit("split:"), c.cast("string"))), 1, 1) <= "d", "val")

@@ -2,7 +2,6 @@ package graft.operators
 
 import graft.{Det, QueryDef, Tables}
 import graft.Ckpt.CutOps
-import graft.functions.GraftFunctions
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -65,7 +64,6 @@ object Similarity {
 
   /** Exact cosine top-10 neighbors for the first 10 vectors. */
   def annCosineTopK(spark: SparkSession, dir: String): DataFrame = {
-    GraftFunctions.register(spark)
     val sims = corpus(spark, dir)
       .crossJoin(broadcast(queries(spark, dir)))
       .filter(col("vec_id") =!= col("q_id"))
@@ -127,7 +125,6 @@ object Similarity {
 
   private[graft] def embeddingNeardupGuarded(
       spark: SparkSession, dir: String, cap: Long): DataFrame = {
-    GraftFunctions.register(spark)
     val e = corpus(spark, dir)
     val n = Tables.cachedCount(spark, dir, "embeddings")
     if (n > cap) {
@@ -162,7 +159,6 @@ object Similarity {
     * by design); recall vs ann_cosine_topk is asserted in SimilaritySpec.
     */
   def annLsh(spark: SparkSession, dir: String): DataFrame = {
-    GraftFunctions.register(spark)
     def bucketed(df: DataFrame, idCol: String, vecCol: String): DataFrame =
       df.select(
         col(idCol),
@@ -242,7 +238,6 @@ object Similarity {
   }
 
   def annIvf(spark: SparkSession, dir: String): DataFrame = {
-    GraftFunctions.register(spark)
     val cents    = ivfCents(spark, dir)
     val assigned = ivfAssigned(spark, dir, cents)
     val probed = ivfProbeRanks(spark, dir, cents)
@@ -326,7 +321,6 @@ object Similarity {
     * index build is one scan, each query touches 2 cells.
     */
   def annIvfTrained(spark: SparkSession, dir: String): DataFrame = {
-    GraftFunctions.register(spark)
     val k     = 8
     val iters = 3
     val cents = trainCentroids(spark, dir, k, iters)
@@ -388,7 +382,6 @@ object Similarity {
     * corpus, serve ∝ probed cells.
     */
   def annIvfStored(spark: SparkSession, dir: String): DataFrame = {
-    GraftFunctions.register(spark)
     val k = 8; val iters = 3
     val rows = Tables.cachedCount(spark, dir, "embeddings")
     val idx = graft.sources.DerivedCache.tables(
@@ -454,7 +447,6 @@ object Similarity {
     * pair above its threshold, not a display-size cut).
     */
   def lshScoredPairs(spark: SparkSession, dir: String): DataFrame = {
-    GraftFunctions.register(spark)
     val tables = 16
     val planes = 4
     val bucketCap = 200
@@ -1210,7 +1202,6 @@ object Similarity {
 
   private[graft] def semanticDedupGuarded(
       spark: SparkSession, dir: String, cap: Long): DataFrame = {
-    GraftFunctions.register(spark)
     val k     = 8
     val iters = 3
     val cents = trainCentroids(spark, dir, k, iters)
@@ -1839,7 +1830,6 @@ object Similarity {
     * SQL.
     */
   def annIvfIncremental(spark: SparkSession, dir: String): DataFrame = {
-    GraftFunctions.register(spark)
     val k = 8; val iters = 3
     val rows = Tables.cachedCount(spark, dir, "embeddings")
     val idx = graft.sources.DerivedCache.tables(
@@ -1924,7 +1914,6 @@ object Similarity {
     * their cell partition, every count is a 1-row aggregate.
     */
   def annNprobeCurve(spark: SparkSession, dir: String): DataFrame = {
-    GraftFunctions.register(spark)
     val cents = ivfCents(spark, dir)
     // the fixed-quantizer cell table as a STORED index (the ann-ivf
     // pattern): the curve prices probe widths against a BUILT index,
@@ -2223,7 +2212,6 @@ object Similarity {
     * to TopKPerKey (bounded heaps, no global sort).
     */
   def annFiltered(spark: SparkSession, dir: String): DataFrame = {
-    GraftFunctions.register(spark)
     val q = corpus(spark, dir)
       .filter(col("vec_id") < NumQueries)
       .select(

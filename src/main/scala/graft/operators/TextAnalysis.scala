@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.{Det, QueryDef, Tables}
-import graft.functions.{GraftFunctions, LangProfiles => CT}
+import graft.functions.{LangProfiles => CT}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -160,7 +160,6 @@ object TextAnalysis {
     * still runs, proving result-identity).
     */
   def classifyLang(docs: DataFrame): DataFrame = {
-    GraftFunctions.register(docs.sparkSession)
     docs
       .select(
         col("doc_id"),
@@ -655,7 +654,6 @@ object TextAnalysis {
     * generator corpus can't produce.
     */
   def repetitionProfileOf(docs: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     // per-doc bigram stats IN-ROW (GramStats kernel, guide §2.4): the
     // old explode → groupBy(doc, gram) → groupBy(doc) chain shuffled one
     // row per bigram occurrence (gram string included) through two

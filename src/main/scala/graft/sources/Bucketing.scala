@@ -130,7 +130,6 @@ object Bucketing {
   def writeZOrdered(
       df: DataFrame, path: String,
       xExpr: String, yExpr: String, files: Int): Unit = {
-    graft.functions.GraftFunctions.register(df.sparkSession)
     df.withColumn("__z",
         org.apache.spark.sql.functions.expr(s"graft_morton(CAST(($xExpr) AS BIGINT), CAST(($yExpr) AS BIGINT))"))
       .repartitionByRange(files, org.apache.spark.sql.functions.col("__z"))
@@ -151,7 +150,6 @@ object Bucketing {
     */
   def zorderTileStats(spark: org.apache.spark.sql.SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.functions._
-    graft.functions.GraftFunctions.register(spark)
     graft.Tables.events(spark, dir)
       // a Z-code needs both coordinates: NULL-user rows have no place
       // on the curve (a real writer reserves them a side partition) and

@@ -1,7 +1,6 @@
 package graft.streaming
 
 import graft.{QueryDef, Tables}
-import graft.functions.GraftFunctions
 import graft.sources.StoredIndex
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
@@ -30,7 +29,6 @@ object DocStreams {
     * per-batch cost ∝ batch size.
     */
   def streamDedupIngest(spark: SparkSession, dir: String): DataFrame = {
-    GraftFunctions.register(spark)
     // every micro-batch probes the SAME stored base tables — read them
     // once and, when the index is measurably small, persist them for the
     // stream run so batch 2 reads cached partitions instead of
@@ -115,7 +113,6 @@ object DocStreams {
     * compaction queries.
     */
   def streamSubstrIngest(spark: SparkSession, dir: String): DataFrame = {
-    GraftFunctions.register(spark)
     // force the stored base+seg builds BEFORE the stream starts: index
     // maintenance is a batch job; the stream only probes
     val segs = StoredIndex.probeLevels(spark, dir, graft.operators.Cdc.SubstrTier)

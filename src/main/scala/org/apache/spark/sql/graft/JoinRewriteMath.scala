@@ -4,10 +4,10 @@ import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.types._
 
-/** Shared conjunct-normalization math for the join rewrite rules
-  * ([[RangeJoinRewrite]], [[IntervalJoinRewrite]]): linear decomposition
-  * of integral expressions and the canonical [[JoinRewriteMath.Band]]
-  * form `la - rb REL bound` with `la` always from the left side.
+/** Conjunct-normalization math for [[RangeJoinRewrite]]: linear
+  * decomposition of integral expressions and the canonical
+  * [[JoinRewriteMath.Band]] form `la - rb REL bound` with `la` always
+  * from the left side.
   */
 private[graft] object JoinRewriteMath {
 

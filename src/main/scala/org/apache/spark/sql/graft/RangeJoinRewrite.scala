@@ -61,9 +61,8 @@ object RangeJoinRewrite extends Rule[LogicalPlan] with PredicateHelper {
       cond: Expression,
       hint: JoinHint): Option[LogicalPlan] = {
     val conjuncts = splitConjunctivePredicates(cond)
-    // never re-fire on a join this rule (or the interval rewrite) built
-    if (conjuncts.exists(_.references.exists(a =>
-        a.name == "__graft_band" || a.name == "__graft_bin"))) return None
+    // never re-fire on a join this rule built
+    if (conjuncts.exists(_.references.exists(_.name == "__graft_band"))) return None
     if (hasCrossEquiKey(conjuncts, l, r)) return None
     val bands = conjuncts.flatMap(bandOf(_, l, r))
     // pick the first attribute pair carrying both an upper and a lower bound

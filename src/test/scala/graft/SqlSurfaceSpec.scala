@@ -26,7 +26,6 @@ class SqlSurfaceSpec extends AnyFunSuite {
   }
 
   test("graft_* expressions are callable from SQL") {
-    GraftFunctions.register(spark)
     val cos = spark.sql(
       "SELECT graft_cosine(array(CAST(1.0 AS FLOAT), CAST(0.0 AS FLOAT)), " +
         "array(CAST(1.0 AS FLOAT), CAST(0.0 AS FLOAT))) AS c")
@@ -65,7 +64,7 @@ class SqlSurfaceSpec extends AnyFunSuite {
     def replaced() = seen.toArray(Array.empty[String])
       .filter(_.contains("replaced a previously registered function")).toSeq
     try {
-      // dedup_substring_incremental's builder calls register
+      // every SparkEntry.queries build calls register
       for (q <- Seq("cdc_incremental", "dedup_substring_incremental"); _ <- 1 to 2)
         SparkEntry.queries(q)(spark, TestSpark.Sf)
       assert(replaced().isEmpty, s"re-registered: ${replaced()}")
@@ -81,12 +80,38 @@ class SqlSurfaceSpec extends AnyFunSuite {
     }
   }
 
-  test("a bare session resolves every graft_* function after register") {
-    // a session without GraftExtensions (as a plain SparkSession.builder
-    // would make) on the shared context
-    val bare = classOf[org.apache.spark.sql.classic.SparkSession]
+  /** A session without GraftExtensions (as a plain SparkSession.builder
+    * would make) on the shared context.
+    */
+  private def bareSession() =
+    classOf[org.apache.spark.sql.classic.SparkSession]
       .getConstructor(classOf[org.apache.spark.SparkContext])
       .newInstance(spark.sparkContext)
+
+  test("GraftExtensions alone resolves every graft_* function") {
+    // a fresh function registry with the extensions and no register call
+    val fresh = spark.newSession()
+    val reg = fresh.sessionState.functionRegistry
+    val missing = graftFunctionNames.filterNot(n => reg.functionExists(FunctionIdentifier(n)))
+    assert(missing.isEmpty, s"not injected: $missing")
+    val q = "SELECT graft_morton(CAST(3 AS BIGINT), CAST(5 AS BIGINT)) AS z"
+    assert(fresh.sql(q).collect().toSeq === spark.sql(q).collect().toSeq)
+  }
+
+  test("SparkEntry.queries registers the graft_* functions on a bare session") {
+    val bare = bareSession()
+    assert(!bare.sessionState.functionRegistry.functionExists(FunctionIdentifier("graft_morton")))
+    // queries that read no stored index: a bare session's 200 shuffle
+    // partitions would write different stored-index bucket layouts
+    for (name <- Seq("zorder_tile_stats", "lang_id")) {
+      val build = SparkEntry.queries(name)
+      assert(build(bare, TestSpark.Sf).collect().toSeq === build(spark, TestSpark.Sf).collect().toSeq,
+        name)
+    }
+  }
+
+  test("a bare session resolves every graft_* function after register") {
+    val bare = bareSession()
     val reg = bare.sessionState.functionRegistry
     assert(!reg.functionExists(FunctionIdentifier("graft_morton")))
     GraftFunctions.register(bare)
@@ -94,12 +119,10 @@ class SqlSurfaceSpec extends AnyFunSuite {
       assert(reg.lookupFunction(FunctionIdentifier(n)).isDefined, s"$n does not resolve")
     }
     val q = "SELECT graft_morton(CAST(3 AS BIGINT), CAST(5 AS BIGINT)) AS z"
-    GraftFunctions.register(spark)
     assert(bare.sql(q).collect().toSeq === spark.sql(q).collect().toSeq)
   }
 
   test("embeddings cosine top-1 via pure SQL") {
-    GraftFunctions.register(spark)
     Tables.embeddings(spark, TestSpark.Sf).createOrReplaceTempView("emb_v")
     val top = spark.sql(
       """SELECT b.vec_id, graft_cosine(a.embedding, b.embedding) AS cos
